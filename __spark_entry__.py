@@ -183,12 +183,16 @@ def q30_coverage_join(spark, sf_dir):
 
 
 def q11_rolling_turns(spark, sf_dir):
-    """Rolling 3-turn k-mer count windows, exploded; runs the *chunked*
-    (carry-replicated) path to exercise the skew machinery."""
-    from kmertools_spark.operators import rolling_turn_vectors
+    """Rolling 3-turn k-mer count windows, exploded; runs the skew
+    ROUTER with hot_threshold low enough that real conversations split
+    across both branches — hot ones through the (conv_id, block) carry
+    segments of 16 turns, cold ones through the plain stream."""
+    from kmertools_spark.operators import backfill_features_auto
 
     t = _t(spark, sf_dir)
-    r = rolling_turn_vectors(t, k=4, mode="turns", n_turns=3, norm=False, chunk=16)
+    r = backfill_features_auto(
+        t, k=4, n_turns=3, norm=False, hot_threshold=64, chunk=16
+    ).select("conv_id", "turn_idx", F.col("roll_vec").alias("vec"))
     return _explode_slots(spark, r, "vec", ["conv_id", "turn_idx"], "cd").select(
         "conv_id", "turn_idx", "kmer", F.col("cd").cast("long").alias("cnt")
     )
@@ -611,15 +615,14 @@ def q35_session_vectors(spark, sf_dir):
     exploded — the vector form of q14 with a full SQL twin (session CTE
     + windowed count join). Both engine norm modes run (the former
     q27 row folded in), zipped per slot under one oracle."""
-    from kmertools_spark.operators import rolling_turn_vectors
+    from kmertools_spark.operators import backfill_features_stream
 
     t = _t(spark, sf_dir)
-    kw = dict(k=4, mode="session", chunk=None)
-    r_cnt = rolling_turn_vectors(t, norm=False, **kw).select(
-        "conv_id", "turn_idx", F.col("vec").alias("vc")
+    r_cnt = backfill_features_stream(t, k=4, mode="session", norm=False).select(
+        "conv_id", "turn_idx", F.col("roll_vec").alias("vc")
     )
-    r_frq = rolling_turn_vectors(t, norm=True, **kw).select(
-        "conv_id", "turn_idx", F.col("vec").alias("vf")
+    r_frq = backfill_features_stream(t, k=4, mode="session", norm=True).select(
+        "conv_id", "turn_idx", F.col("roll_vec").alias("vf")
     )
     j = r_cnt.join(r_frq, ["conv_id", "turn_idx"])
     ex = j.select(

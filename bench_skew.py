@@ -7,23 +7,20 @@ on the driver):
   uniform  every conversation has ~SMALL_TURNS turns
   skewed   one 10^6-class giant conversation + the uniform tail
 
-Two physical plans over each:
+Two physical plans over each, both running the one stream kernel:
 
   stream   backfill_features_stream — one exchange, one sorted pass per
            conversation partition (the throughput winner on uniform
            data; a giant conversation serializes on one task)
-  chunked  backfill_features(chunk=N) — (conv_id, block) groups with an
-           (n_turns-1)-row carry, so a giant conversation spreads over
-           ceil(turns/N) parallel tasks at the cost of per-group
-           overhead on small conversations
-  auto     backfill_features_auto — routes hot conversations to the
-           chunked plan and everything else to the stream plan
+  auto     backfill_features_auto — hot conversations run as (conv_id,
+           block) segments with an (n_turns-1)-row carry, so a giant
+           conversation spreads over ceil(turns/N) parallel tasks;
+           everything else takes the stream plan
 
 Measured result (this is WHY auto exists): on skewed input the stream
-plan straggles on the giant conversation and the chunked plan drowns in
-tiny-group overhead — auto beats both; on uniform input auto == stream
-(no hot keys detected). Prints ONE JSON line with the wall times;
-recorded in BENCH/BASELINE.md.
+plan straggles on the giant conversation and auto does not; on uniform
+input auto == stream (no hot keys detected). Prints ONE JSON line with
+the wall times; recorded in BENCH/BASELINE.md.
 
 Env: SPARK_GRAFT_CPUS (default 8), SPARK_GRAFT_SKEW_GIANT (default
 400_000 giant-conversation turns), SPARK_GRAFT_SKEW_TAIL (default
@@ -52,7 +49,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from kmertools_spark.operators import (
-        backfill_features,
         backfill_features_auto,
         backfill_features_stream,
     )
@@ -103,7 +99,6 @@ def main() -> None:
 
     plans = {
         "stream": lambda df: backfill_features_stream(df, k=4, n_turns=3),
-        "chunked": lambda df: backfill_features(df, k=4, n_turns=3, chunk=4096),
         "auto": lambda df: backfill_features_auto(
             df, k=4, n_turns=3, hot_threshold=65536, chunk=4096
         ),
@@ -133,9 +128,6 @@ def main() -> None:
             "rows_skewed": n_skewed,
             "auto_beats_stream_on_skew": bool(
                 t_res["skewed_auto"] < t_res["skewed_stream"]
-            ),
-            "auto_beats_chunked_on_skew": bool(
-                t_res["skewed_auto"] < t_res["skewed_chunked"]
             ),
         },
     }

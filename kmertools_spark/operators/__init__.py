@@ -14,16 +14,13 @@ from .dedup import (
     dedup_keep,
     exact_dedup,
     jaccard_for_pairs,
-    jaccard_pairs,
     lsh_candidate_pairs,
     minhash_signatures,
     simhash_buckets,
 )
 from .rolling import (
-    backfill_features,
     backfill_features_auto,
     backfill_features_stream,
-    rolling_turn_vectors,
 )
 from .packing import pack_documents
 from .prep import prep_filter, training_prep
@@ -61,7 +58,6 @@ __all__ = [
     "dedup_keep",
     "exact_dedup",
     "jaccard_for_pairs",
-    "jaccard_pairs",
     "lsh_candidate_pairs",
     "minhash_signatures",
     "simhash_buckets",
@@ -72,10 +68,8 @@ __all__ = [
     "sample_gate",
     "sample_slice",
     "stratified_sample",
-    "backfill_features",
     "backfill_features_auto",
     "backfill_features_stream",
-    "rolling_turn_vectors",
     "lag_lead_features",
     "sessionize",
     "ann_topk_ivf",

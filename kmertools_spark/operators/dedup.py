@@ -449,41 +449,6 @@ def dedup_keep(
     )
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """All pairs with n-gram Jaccard >= threshold.
-
-    Relational formulation: distinct grams, gram-key self-join for
-    intersections, set sizes joined back. The gram self-join is
-    inherently quadratic in gram frequency — at corpus scale use
-    ``jaccard_for_pairs`` over LSH candidates instead; this all-pairs
-    form is for bounded corpora and oracle verification.
-    """
-    grams = char_ngrams(df, id_col, text_col, n).cache()
-    sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = grams.alias("a")
-    b = grams.alias("b")
-    inter = (
-        a.join(
-            b,
-            on=[
-                F.col("a.gram") == F.col("b.gram"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return _jaccard_from_inter(inter, sizes, id_col, threshold)
-
-
 def jaccard_for_pairs(
     pairs: DataFrame,
     docs: DataFrame,
@@ -510,8 +475,7 @@ def jaccard_for_pairs(
 
     The gram relation is cached: it feeds three plan subtrees (sizes,
     side-a, side-b) and would otherwise re-run the n-gram explosion
-    over the full corpus three times (r2 ADVICE item 4; matches
-    jaccard_pairs). Callers that can bound the result's lifetime should
+    over the full corpus three times (r2 ADVICE item 4). Callers that can bound the result's lifetime should
     use ``_jaccard_for_pairs_cached`` and unpersist the returned gram
     handle once the result is consumed (dedup_keep does).
     """

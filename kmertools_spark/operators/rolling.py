@@ -1,17 +1,20 @@
 """Rolling / session-to-date composition-vector windows per conversation.
 
-The per-window work is O(1): per-turn count vectors are prefix-summed
-once per conversation and each window is a difference of two prefix
-rows — the windowed analog of the reference's incremental rolling
-encode (X6, kmer/src/kmer.rs:93-95). Runs in ``applyInPandas`` with the
-whole kernel vectorized over the conversation's turns.
+One kernel, a sorted stream: rows are range-partitioned, sorted by
+(conv_id, turn_idx) and walked by one ``mapInPandas`` generator over
+Arrow batches. Per-turn count vectors are prefix-summed once per batch
+and each window is a difference of two prefix rows — the windowed
+analog of the reference's incremental rolling encode (X6,
+kmer/src/kmer.rs:93-95). The open conversation's window context is
+carried between batches, so memory is O(batch) whatever the
+conversation length.
 
-Skew handling (north rule): ``rolling_turn_vectors`` supports *chunked*
-execution — conversations are split into fixed-size turn blocks with a
-(window-1)-row carry replicated into the next block, so the group key
-becomes (conv_id, block) and a million-turn conversation spreads over
-many tasks instead of one. This is the salted-repartition analog of the
-reference's explicit `min_mer % n_parts` sharding (X2,
+Skew handling (north rule): ``backfill_features_auto`` runs the same
+kernel over ``_carry_blocks`` segments for hot conversations — fixed-
+size turn blocks with the (n_turns-1) preceding rows replicated in as
+context, keyed (conv_id, block), so a million-turn conversation spreads
+over many tasks instead of one. This is the salted-repartition analog
+of the reference's explicit `min_mer % n_parts` sharding (X2,
 counter/src/lib.rs:127).
 """
 
@@ -34,6 +37,10 @@ from pyspark.sql.types import (
 
 from ..functions.composition import _pos_map
 from ..oracle.kernels import composition_matrix
+
+_MODES = ("turns", "time", "session")
+_SLICE_ROWS = 4096
+
 
 def _carry_blocks(df: DataFrame, chunk: int, n_turns: int) -> DataFrame:
     """Assign position-based chunk blocks with an (n_turns-1)-row carry.
@@ -67,126 +74,6 @@ def _carry_blocks(df: DataFrame, chunk: int, n_turns: int) -> DataFrame:
     )
 
 
-_OUT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("vec", ArrayType(DoubleType())),
-    ]
-)
-
-
-def _window_matrix(
-    pdf: pd.DataFrame,
-    k: int,
-    mode: str,
-    n_turns: int,
-    time_ms: int,
-    norm: bool,
-) -> np.ndarray:
-    """Per-turn rolling window vectors for ONE conversation slice,
-    ordered by turn_idx. mode in {turns, time, session}."""
-    pos_map, _, kcount = _pos_map(k)
-    counts = composition_matrix(
-        pdf["text"].tolist(), k, canonical=True, norm=False, pos_map=pos_map, kcount=kcount
-    )
-    prefix = np.vstack([np.zeros((1, counts.shape[1])), np.cumsum(counts, axis=0)])
-    t = len(pdf)
-    if mode == "turns":
-        lo = np.maximum(np.arange(t) - (n_turns - 1), 0)
-    elif mode == "time":
-        guard_null_ts(pdf["__ts_ms"], "rolling_turn_vectors(mode='time')")
-        ts = pdf["__ts_ms"].to_numpy(dtype=np.int64)
-        # window = rows of this conversation with ts in
-        # [ts_i - time_ms, ts_i], ROW-bounded at the current turn: an
-        # equal-ts peer row AFTER the current turn is EXCLUDED (the
-        # leakage-safe rule the tests pin). This intentionally differs
-        # from SQL RANGE BETWEEN ... AND CURRENT ROW, which includes
-        # all frame peers sharing the current ts — do not pair this
-        # operator with a RANGE-framed SQL twin (code-review r5).
-        lo = np.searchsorted(ts, ts - time_ms, side="left")
-    elif mode == "session":
-        sess = pdf["session_seq"].to_numpy()
-        # first row index of each session (session_seq non-decreasing)
-        first = np.zeros(t, dtype=np.int64)
-        if t:
-            change = np.flatnonzero(np.diff(sess)) + 1
-            starts = np.concatenate(([0], change))
-            first = starts[np.searchsorted(starts, np.arange(t), side="right") - 1]
-        lo = first
-    else:  # pragma: no cover
-        raise ValueError(mode)
-    win = prefix[1 + np.arange(t)] - prefix[lo]
-    if norm:
-        win = win / np.maximum(1.0, win.sum(axis=1))[:, None]
-    return win
-
-
-def rolling_turn_vectors(
-    df: DataFrame,
-    k: int = 4,
-    mode: str = "turns",
-    n_turns: int = 3,
-    time_seconds: float = 600.0,
-    norm: bool = True,
-    chunk: int | None = 4096,
-    gap_seconds: float = 1800.0,
-) -> DataFrame:
-    """(conv_id, turn_idx, vec): rolling composition vector per turn.
-
-    mode='turns':   last ``n_turns`` turns (current inclusive)
-    mode='time':    turns with ts within ``time_seconds`` before current
-    mode='session': session-to-date (requires/derives session_seq via
-                    the ``gap_seconds`` inactivity rule)
-
-    ``chunk`` bounds the rows a single task must hold for mode='turns'
-    (carry replication); None groups whole conversations.
-    """
-    time_ms = int(time_seconds * 1000)
-    need = ["conv_id", "turn_idx", "text"]
-    work = df
-    if mode == "time":
-        work = work.withColumn("__ts_ms", epoch_ms("ts"))
-        need.append("__ts_ms")
-    if mode == "session":
-        from .sessionize import sessionize
-
-        if "session_seq" not in work.columns:
-            work = sessionize(work, gap_seconds=gap_seconds)
-        need.append("session_seq")
-    work = work.select(*need)
-
-    chunked = chunk is not None and mode == "turns"
-    if chunked:
-        work = _carry_blocks(work, chunk, n_turns)
-        group_keys = ["conv_id", "__blk"]
-    else:
-        group_keys = ["conv_id"]
-    # explicit exchange on the grouping keys: groupBy's own shuffle is
-    # AQE-coalesced by DATA size, and these groups are compute-heavy per
-    # byte — a 40 MB post-shuffle stage would collapse to one task and
-    # serialize the kernel (measured in bench_skew.py)
-    work = work.repartition(
-        work.sparkSession.sparkContext.defaultParallelism, *group_keys
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx", kind="mergesort").reset_index(drop=True)
-        win = _window_matrix(pdf, k, mode, n_turns, time_ms, norm)
-        out = pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"],
-                "turn_idx": pdf["turn_idx"].astype("int32"),
-                "vec": list(win),
-            }
-        )
-        if "__emit" in pdf.columns:
-            out = out[pdf["__emit"].to_numpy()]
-        return out
-
-    return work.groupBy(*group_keys).applyInPandas(fn, _OUT_SCHEMA)
-
-
 _BACKFILL_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -196,69 +83,6 @@ _BACKFILL_SCHEMA = StructType(
         StructField("roll_vec", ArrayType(DoubleType())),
     ]
 )
-
-
-def backfill_features(
-    df: DataFrame,
-    k: int = 4,
-    n_turns: int = 3,
-    gap_seconds: float = 1800.0,
-    norm: bool = True,
-    chunk: int | None = 4096,
-) -> DataFrame:
-    """Fused backfill kernel: per-turn + rolling vectors in ONE pass.
-
-    The per-turn count matrix is computed once per group and reused for
-    both outputs (per-turn normalized vector AND rolling n-turn window),
-    avoiding the vector-vs-vector join of the composable formulation —
-    at 100 TB that join shuffles two 1 KB-per-row columns; this shuffles
-    none. Sessionization stays a scalar window (cheap, exact across
-    chunk boundaries); chunking replicates only (n_turns-1) carry rows.
-    """
-    from .sessionize import sessionize
-
-    work = df if "session_seq" in df.columns else sessionize(df, gap_seconds)
-    work = work.select("conv_id", "turn_idx", "session_seq", "text")
-
-    if chunk is not None:
-        work = _carry_blocks(work, chunk, n_turns)
-        group_keys = ["conv_id", "__blk"]
-    else:
-        group_keys = ["conv_id"]
-    # explicit exchange: see rolling_turn_vectors — AQE would coalesce
-    # the small-by-bytes shuffle to one task and serialize the kernel
-    work = work.repartition(
-        work.sparkSession.sparkContext.defaultParallelism, *group_keys
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx", kind="mergesort").reset_index(drop=True)
-        pos_map, _, kcount = _pos_map(k)
-        counts = composition_matrix(
-            pdf["text"].tolist(), k, canonical=True, norm=False,
-            pos_map=pos_map, kcount=kcount,
-        )
-        per_turn = counts / np.maximum(1.0, counts.sum(axis=1))[:, None] if norm else counts
-        t = len(pdf)
-        prefix = np.vstack([np.zeros((1, kcount)), np.cumsum(counts, axis=0)])
-        lo = np.maximum(np.arange(t) - (n_turns - 1), 0)
-        roll = prefix[1 + np.arange(t)] - prefix[lo]
-        if norm:
-            roll = roll / np.maximum(1.0, roll.sum(axis=1))[:, None]
-        out = pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"],
-                "turn_idx": pdf["turn_idx"].astype("int32"),
-                "session_seq": pdf["session_seq"].astype("int32"),
-                "vec": list(per_turn),
-                "roll_vec": list(roll),
-            }
-        )
-        if "__emit" in pdf.columns:
-            out = out[pdf["__emit"].to_numpy()]
-        return out
-
-    return work.groupBy(*group_keys).applyInPandas(fn, _BACKFILL_SCHEMA)
 
 
 def backfill_features_stream(
@@ -272,18 +96,22 @@ def backfill_features_stream(
     time_seconds: float = 600.0,
     max_carry: int = 100_000,
 ) -> DataFrame:
-    """Sorted-stream backfill: the range-partitioned sorted-merge plan.
+    """Sorted-stream backfill: per-turn + rolling vectors in ONE pass.
 
     repartition(conv_id) + sortWithinPartitions(conv_id, turn_idx) +
-    mapInPandas with cross-batch carry. Unlike applyInPandas, this never
-    materializes one pandas frame per conversation — Arrow batches of
+    mapInPandas with cross-batch carry. This never materializes one
+    pandas frame per conversation — Arrow batches of
     ~maxRecordsPerBatch rows stream through one vectorized kernel, with
-    the open conversation's last (n_turns-1) count rows carried between
-    batches. Same outputs as backfill_features; ~5x less overhead and a
-    bounded memory footprint regardless of conversation length (the
-    skew answer for the rolling window: a 10^6-turn conversation costs
-    one task time-wise but never more than one batch memory-wise).
-    
+    the open conversation's window context carried between batches: a
+    bounded memory footprint regardless of conversation length (a
+    10^6-turn conversation costs one task time-wise but never more than
+    one batch memory-wise; ``backfill_features_auto`` spreads it).
+
+    ``roll_vec`` windows, by ``mode``:
+      'turns'    the last ``n_turns`` turns (current inclusive)
+      'time'     turns with ts in [ts_i - time_seconds, ts_i], row-
+                 bounded at the current turn
+      'session'  session-to-date: from the current session's first turn
 
     Ordering contract (code-review r4): the kernel sorts by (conv_id,
     turn_idx) and computes session gaps in TURN order, while the SQL
@@ -293,16 +121,11 @@ def backfill_features_stream(
     producer clocks are outside the contract and should be repaired
     upstream before backfill.
     """
-    if mode not in ("turns", "time"):
-        raise ValueError(f"mode must be 'turns' or 'time', got {mode!r}")
+    if mode not in _MODES:
+        raise ValueError(f"mode must be one of {_MODES}, got {mode!r}")
     # sessionization happens IN-KERNEL over the same sorted stream (gap
     # cumsum with cross-batch carry) unless session_seq is already
-    # present — saving a second full-data shuffle (the window pass).
-    # mode='time' windows over [ts_i - time_seconds, ts_i]; its carry is
-    # the open conversation's rows within the horizon of its last ts,
-    # bounded by max_carry — a conversation denser than that within one
-    # horizon gets a truncated window and a RuntimeWarning on the
-    # executor (see the clamp below).
+    # present — saving a second full-data shuffle (the window pass)
     have_sess = "session_seq" in df.columns
     need_ts = (not have_sess) or mode == "time"
     cols = ["conv_id", "turn_idx", "text"]
@@ -315,8 +138,40 @@ def backfill_features_stream(
     work = work.repartition(parts, "conv_id").sortWithinPartitions(
         "conv_id", "turn_idx"
     )
-    gap_ms = int(gap_seconds * 1000)
+    return _rolling_stream(
+        work, k, n_turns, gap_seconds, norm, mode, time_seconds, max_carry
+    )
 
+
+def _rolling_stream(
+    work: DataFrame,
+    k: int,
+    n_turns: int,
+    gap_seconds: float,
+    norm: bool,
+    mode: str,
+    time_seconds: float,
+    max_carry: int,
+) -> DataFrame:
+    """The one rolling kernel, over a frame already partitioned and
+    sorted so each segment's rows arrive contiguous and in turn order.
+
+    A segment is a run of equal conv_id — or of equal (conv_id, __blk)
+    when ``_carry_blocks`` columns are present, in which case rows with
+    ``__emit`` false are window context only and are not output.
+    ``session_seq`` is read when present, else derived in-kernel from
+    ``__ts_ms``.
+
+    Carry between Arrow batches, per mode: 'turns' the open segment's
+    last (n_turns-1) count rows; 'session' ONE running count row (the
+    open session's sum so far); 'time' the open segment's rows within
+    the horizon of its last ts, bounded by max_carry — a conversation
+    denser than that within one horizon gets a truncated window and a
+    RuntimeWarning on the executor (see the clamp below).
+    """
+    have_sess = "session_seq" in work.columns
+    blocked = "__blk" in work.columns
+    gap_ms = int(gap_seconds * 1000)
     horizon_ms = int(time_seconds * 1000)
 
     _NO_CARRY = object()  # distinguishes "no carry yet" from a carry
@@ -326,12 +181,19 @@ def backfill_features_stream(
 
     def gen(batches):
         pos_map, _, kcount = _pos_map(k)
-        carry_conv = _NO_CARRY
+        carry_key = _NO_CARRY
         carry_counts = np.zeros((0, kcount))
         carry_ts_arr = np.zeros(0, dtype=np.int64)  # time mode: ts of carried rows
         carry_ts: int = 0
-        carry_seq: int = 0
-        for pdf in batches:
+        carry_seq = 0
+        # the kernel's (rows x kcount) temporaries are fresh allocations;
+        # at k=4, 4096-row slices of the Arrow batch measured ~5 % cheaper
+        # per row than whole 10k-row batches (the carry spans the slices)
+        for pdf in (
+            b.iloc[i : i + _SLICE_ROWS]
+            for b in batches
+            for i in range(0, len(b), _SLICE_ROWS)
+        ):
             B = len(pdf)
             if B == 0:
                 continue
@@ -340,47 +202,33 @@ def backfill_features_stream(
                 pdf["text"].tolist(), k, canonical=True, norm=False,
                 pos_map=pos_map, kcount=kcount,
             )
-            carried = carry_conv is not _NO_CARRY and conv[0] == carry_conv
+            brk = conv[1:] != conv[:-1]
+            if blocked:
+                blk = pdf["__blk"].to_numpy()
+                brk |= blk[1:] != blk[:-1]
+                first_key, last_key = (conv[0], blk[0]), (conv[-1], blk[-1])
+            else:
+                first_key, last_key = conv[0], conv[-1]
+            carried = carry_key is not _NO_CARRY and first_key == carry_key
             cc = carry_counts if carried else np.zeros((0, kcount))
             m = cc.shape[0]
             full = np.vstack([cc, counts]) if m else counts
-            prefix = np.vstack([np.zeros((1, kcount)), np.cumsum(full, axis=0)])
-            newseg = np.flatnonzero(conv[1:] != conv[:-1]) + 1  # batch idx
+            prefix = np.empty((full.shape[0] + 1, kcount))
+            prefix[0] = 0.0
+            np.cumsum(full, axis=0, out=prefix[1:])
+            newseg = np.flatnonzero(brk) + 1  # batch idx
             seg_starts_batch = np.concatenate(([0], newseg))
             # in full (carry-prefixed) index space the first segment
             # starts at 0 (its carry rows included), later ones at +m
             seg_starts_full = seg_starts_batch + m
             seg_starts_full[0] = 0
-            seg_of_row = (
-                np.searchsorted(seg_starts_batch, np.arange(B), side="right") - 1
-            )
+            seg_of_row = np.zeros(B, dtype=np.int64)
+            seg_of_row[newseg] = 1
+            np.cumsum(seg_of_row, out=seg_of_row)
             idx = np.arange(B) + m
-            if need_ts:
+            if "__ts_ms" in pdf.columns:
                 guard_null_ts(pdf["__ts_ms"], "backfill_features_stream")
                 ts = pdf["__ts_ms"].to_numpy(dtype=np.int64)
-            if mode == "turns":
-                lo = np.maximum(seg_starts_full[seg_of_row], idx - (n_turns - 1))
-            else:
-                # window = rows of the same conversation with
-                # ts in [ts_i - horizon, ts_i]; per-segment searchsorted
-                # over the carry-prefixed ts array (ts sorted per conv)
-                ts_full = np.concatenate([carry_ts_arr, ts]) if m else ts
-                lo = np.empty(B, dtype=np.int64)
-                seg_ends = np.concatenate((seg_starts_batch[1:], [B]))
-                for si, (sb, se) in enumerate(zip(seg_starts_batch, seg_ends)):
-                    fs = int(seg_starts_full[si])  # segment start, full space
-                    fe = int(se) + m  # segment end (exclusive), full space
-                    seg_ts = ts_full[fs:fe]
-                    probes_ts = ts[sb:se] - horizon_ms
-                    lo[sb:se] = fs + np.searchsorted(seg_ts, probes_ts, side="left")
-            roll = prefix[idx + 1] - prefix[lo]
-            per_turn = (
-                counts / np.maximum(1.0, counts.sum(axis=1))[:, None]
-                if norm
-                else counts
-            )
-            if norm:
-                roll = roll / np.maximum(1.0, roll.sum(axis=1))[:, None]
 
             if have_sess:
                 sess = pdf["session_seq"].to_numpy()
@@ -405,13 +253,50 @@ def backfill_features_stream(
                     )
                     sess[:first_len] += carry_seq
                 carry_ts = int(ts[-1])
-                carry_seq = int(sess[-1])
 
-            # carry: last conversation's trailing window context
+            if mode == "turns":
+                lo = np.maximum(seg_starts_full[seg_of_row], idx - (n_turns - 1))
+            elif mode == "session":
+                # a row opens a session at a segment start or where
+                # session_seq changes; the carried row (full index 0)
+                # stands for the open session's earlier turns
+                opens = np.zeros(B, dtype=bool)
+                opens[seg_starts_batch] = True
+                opens[1:] |= sess[1:] != sess[:-1]
+                if carried:
+                    opens[0] = sess[0] != carry_seq
+                lo = np.maximum.accumulate(np.where(opens, idx, 0))
+            else:
+                # window = rows of the same conversation with
+                # ts in [ts_i - horizon, ts_i]; per-segment searchsorted
+                # over the carry-prefixed ts array (ts sorted per conv)
+                ts_full = np.concatenate([carry_ts_arr, ts]) if m else ts
+                lo = np.empty(B, dtype=np.int64)
+                seg_ends = np.concatenate((seg_starts_batch[1:], [B]))
+                for si, (sb, se) in enumerate(zip(seg_starts_batch, seg_ends)):
+                    fs = int(seg_starts_full[si])  # segment start, full space
+                    fe = int(se) + m  # segment end (exclusive), full space
+                    seg_ts = ts_full[fs:fe]
+                    probes_ts = ts[sb:se] - horizon_ms
+                    lo[sb:se] = fs + np.searchsorted(seg_ts, probes_ts, side="left")
+            roll = prefix[m + 1 :] - prefix[lo]
+            per_turn = (
+                counts / np.maximum(1.0, counts.sum(axis=1))[:, None]
+                if norm
+                else counts
+            )
+            if norm:
+                roll /= np.maximum(1.0, roll.sum(axis=1))[:, None]
+
+            # carry: last segment's trailing window context
+            carry_key = last_key
+            carry_seq = sess[-1]
             last_rows = full.shape[0] - int(seg_starts_full[-1])
-            carry_conv = conv[-1]
             if mode == "turns":
                 take = min(n_turns - 1, last_rows)
+                carry_counts = full[full.shape[0] - take :] if take else np.zeros((0, kcount))
+            elif mode == "session":
+                carry_counts = (prefix[-1] - prefix[lo[-1]])[None, :]
             else:
                 # rows of the open conv within the horizon of its last ts
                 ts_tail = ts_full[seg_starts_full[-1] :]
@@ -424,7 +309,7 @@ def backfill_features_stream(
                     import warnings
 
                     warnings.warn(
-                        f"backfill_features_stream: conversation {carry_conv!r} "
+                        f"backfill_features_stream: conversation {carry_key!r} "
                         f"has {take} rows inside one {horizon_ms}ms horizon; "
                         f"carry clamped to max_carry={max_carry} — windows "
                         "crossing the next batch boundary will be truncated",
@@ -432,15 +317,19 @@ def backfill_features_stream(
                         stacklevel=2,
                     )
                     take = max_carry
-            carry_counts = full[full.shape[0] - take :] if take else np.zeros((0, kcount))
-            if mode == "time":
+                carry_counts = full[full.shape[0] - take :] if take else np.zeros((0, kcount))
                 carry_ts_arr = (
                     ts_full[ts_full.size - take :] if take else np.zeros(0, np.int64)
                 )
+            turn = pdf["turn_idx"].to_numpy()
+            if blocked:
+                keep = pdf["__emit"].to_numpy(dtype=bool)
+                conv, turn, sess = conv[keep], turn[keep], sess[keep]
+                per_turn, roll = per_turn[keep], roll[keep]
             yield pd.DataFrame(
                 {
-                    "conv_id": pdf["conv_id"],
-                    "turn_idx": pdf["turn_idx"].astype("int32"),
+                    "conv_id": conv,
+                    "turn_idx": turn.astype(np.int32),
                     "session_seq": np.asarray(sess, dtype=np.int32),
                     "vec": list(per_turn),
                     "roll_vec": list(roll),
@@ -463,25 +352,23 @@ def backfill_features_auto(
     """Skew-routing backfill: the measured answer to docs/SCALE.md
     playbook item 1 (bench_skew.py holds the numbers).
 
-    Neither pure plan wins on skewed input: the sorted-merge stream
-    kernel serializes a 10^6-turn conversation onto one task, while the
-    chunked applyInPandas plan pays per-group overhead on every tiny
-    conversation (40k cold groups cost more than the straggler saves).
-    This router sends each tier to the plan that is right for it:
+    The plain stream plan serializes a 10^6-turn conversation onto one
+    task. This router keeps one kernel and changes only how rows reach
+    it:
 
       cold (<= hot_threshold turns)  backfill_features_stream — one
-           exchange, no per-group frames, O(batch) memory
-      hot  (> hot_threshold turns)   backfill_features(chunk=N) — the
-           (conv_id, block) carry plan; a hot conversation of T turns
-           becomes ceil(T/chunk) parallel groups, and with only a
-           handful of hot conversations the group overhead is noise
+           exchange on conv_id
+      hot  (> hot_threshold turns)   sessionize, then ``_carry_blocks``
+           (conv_id, block) segments of ``chunk`` turns plus an
+           (n_turns-1)-row carry, repartitioned and sorted on
+           (conv_id, block, turn_idx) — a hot conversation of T turns
+           becomes ceil(T/chunk) segments spread over every task
 
     ``hot_ids`` skips the sizing aggregation when the caller already
     knows the hot keys (e.g. from yesterday's partition stats); the
     sizing pass itself is a map-side-combined count per conv_id. The
     hot-id list is collected to the driver — by construction it is tiny
-    (conversations longer than hot_threshold); a corpus where MOST keys
-    are hot wants backfill_features(chunk=...) outright.
+    (conversations longer than hot_threshold).
     """
     if hot_ids is None:
         hot_ids = [
@@ -502,12 +389,20 @@ def backfill_features_auto(
     cold = backfill_features_stream(
         df.where(~is_hot), k=k, n_turns=n_turns, gap_seconds=gap_seconds, norm=norm
     )
-    hot = backfill_features(
-        df.where(is_hot),
-        k=k,
-        n_turns=n_turns,
-        gap_seconds=gap_seconds,
-        norm=norm,
-        chunk=chunk,
+    # hot: sessionization stays a scalar window (exact across block
+    # boundaries); the explicit exchange on (conv_id, __blk) spreads one
+    # conversation's blocks over all tasks
+    from .sessionize import sessionize
+
+    hot = df.where(is_hot)
+    hot = hot if "session_seq" in hot.columns else sessionize(hot, gap_seconds)
+    hot = _carry_blocks(
+        hot.select("conv_id", "turn_idx", "session_seq", "text"), chunk, n_turns
     )
-    return cold.unionByName(hot)
+    hot = hot.repartition(
+        hot.sparkSession.sparkContext.defaultParallelism, "conv_id", "__blk"
+    ).sortWithinPartitions("conv_id", "__blk", "turn_idx")
+    return cold.unionByName(
+        _rolling_stream(hot, k, n_turns, gap_seconds, norm, "turns", 0.0, 0)
+    )
+

@@ -91,8 +91,9 @@ def rolling_vectors_stream(
     turn_idx (that is what lets the buffer distinguish "gap" from
     "done"); feeding a filtered/sparse subset stalls each conversation
     at its first missing index until max_pending evicts it. Pre-filtered
-    streams should renumber with a row_number first (the batch chunked
-    paths do this internally via operators.rolling._carry_blocks).
+    streams should renumber with a row_number first (the batch router's
+    hot branch does this internally via operators.rolling._carry_blocks,
+    which blocks by row position, not turn_idx value).
     """
     gap_ms = int(gap_seconds * 1000)
 

@@ -138,10 +138,13 @@ def test_lsh_cap_exact_star_and_noop_semantics(spark):
 
 
 def test_jaccard_for_pairs_matches_allpairs(spark):
-    """Candidate-driven Jaccard == all-pairs Jaccard restricted to the
-    candidate list (the LSH -> verify composition is exact)."""
-    from kmertools_spark.operators import jaccard_for_pairs, jaccard_pairs
+    """Candidate-driven Jaccard == a plain-Python all-pairs set Jaccard
+    restricted to the candidate list (the LSH -> verify composition is
+    exact). The reference uses char_ngrams' semantics: distinct n-char
+    substrings; a doc shorter than n has no grams."""
+    from kmertools_spark.operators import jaccard_for_pairs
 
+    n, threshold = 4, 0.1
     rng = np.random.RandomState(11)
     words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
     texts = [
@@ -149,24 +152,32 @@ def test_jaccard_for_pairs_matches_allpairs(spark):
         for _ in range(40)
     ]
     texts += [t + " suffix" for t in texts[:10]]  # near-dups
+    texts += ["abc", "abcd"]  # 50: shorter than n, 51: a single gram
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     cand = spark.createDataFrame(
-        [(i, 40 + i) for i in range(10)] + [(3, 7), (12, 29)],
+        [(i, 40 + i) for i in range(10)] + [(3, 7), (12, 29), (50, 51), (1, 50)],
         "id_a long, id_b long",
     )
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in jaccard_for_pairs(cand, docs, n=4, threshold=0.1).collect()
+        for r in jaccard_for_pairs(cand, docs, n=n, threshold=threshold).collect()
     }
-    allp = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in jaccard_pairs(docs, n=4, threshold=0.1).collect()
-    }
+    grams = [{t[i : i + n] for i in range(len(t) - n + 1)} for t in texts]
+    allp = {}
+    for a in range(len(texts)):
+        for b in range(a + 1, len(texts)):
+            union = len(grams[a] | grams[b])
+            j = len(grams[a] & grams[b]) / union if union else 0.0
+            if round(j, 6) >= threshold:
+                allp[(a, b)] = j
     cand_set = {(r.id_a, r.id_b) for r in cand.collect()}
     want = {k: v for k, v in allp.items() if k in cand_set}
-    assert got == want
+    assert got.keys() == want.keys()
+    assert len(want) >= 10
+    for k, v in want.items():
+        assert got[k] == pytest.approx(v, abs=5e-7), k
 
 
 def test_cosine_neardup_blocked_matches_naive(spark, emb):

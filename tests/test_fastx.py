@@ -15,9 +15,7 @@ from kmertools_spark.sources.fastx import (
 )
 
 REF = "/root/reference/test_data"
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF), reason="reference corpus absent"
-)
+needs_ref = pytest.mark.skipif(not os.path.isdir(REF), reason="reference corpus absent")
 
 
 def test_infer_format():
@@ -30,6 +28,7 @@ def test_infer_format():
         infer_format("x.txt")
 
 
+@needs_ref
 def test_read_fastq_fasta_gz_agree(spark):
     # ktio/src/seq.rs:157-234: same records across formats
     fq = read_fastx(spark, f"{REF}/reads.fq").collect()
@@ -40,11 +39,13 @@ def test_read_fastq_fasta_gz_agree(spark):
     assert [r.id for r in fq] == ["Read_1", "Read_2"]
 
 
+@needs_ref
 def test_seq_stats(spark):
     df = read_fastx(spark, f"{REF}/reads.fq")
     assert seq_stats(df) == (2, 144)
 
 
+@needs_ref
 def test_comp_oligo_pipeline_byte_identical(spark, tmp_path):
     """End-to-end `kmertools comp oligo` parity: FASTQ in, 6-dp delimited
     vectors out, byte-equal to expected_fa.kmers (the reference's own
@@ -56,6 +57,7 @@ def test_comp_oligo_pipeline_byte_identical(spark, tmp_path):
     assert open(path, "rb").read() == open(f"{REF}/expected_fa.kmers", "rb").read()
 
 
+@needs_ref
 def test_comp_oligo_unnorm_golden(spark, tmp_path):
     # expected_fa_batch_unnorm.kmers (composition/src/oligo.rs:370-387)
     df = read_fastx(spark, f"{REF}/reads.fq")
@@ -77,7 +79,10 @@ def test_read_fastx_stdin(spark, monkeypatch):
 
     from kmertools_spark.sources.fastx import read_fastx
 
-    fq_text = open("/root/reference/test_data/reads.fq").read()
+    fq_text = (
+        "@Read_1\nGGGTGATGGCCGCTGCCGATGGCGTC\n+\nIIIIIIIIIIIIIIIIIIIIIIIIII\n"
+        "@Read_2\nGTTCAGGGATACGACG\n+\nIIIIIIIIIIIIIIII\n"
+    )
     monkeypatch.setattr("sys.stdin", _io.StringIO(fq_text))
     rows = read_fastx(spark, "-").orderBy("n").collect()
     assert [r.id for r in rows] == ["Read_1", "Read_2"]
@@ -128,10 +133,11 @@ def test_distributed_reader_matches_driver_side(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
+@needs_ref
 def test_distributed_reader_reference_corpus(spark):
     from kmertools_spark.sources.fastx import read_fastx, read_fastx_distributed
 
-    for p in ("/root/reference/test_data/reads.fa", "/root/reference/test_data/reads.fq"):
+    for p in (f"{REF}/reads.fa", f"{REF}/reads.fq"):
         want = sorted(tuple(r) for r in read_fastx(spark, p).collect())
         got = sorted(tuple(r) for r in read_fastx_distributed(spark, p).collect())
         assert got == want, p

@@ -87,12 +87,28 @@ def test_kmers():
 
 
 def test_run_cli(spark, tmp_path):
-    # pip/src/lib.rs:11-18: the full CLI through the python module
+    # pip/src/lib.rs:11-18: the full CLI through the python module.
+    # With the reference corpus: its reads, byte-compared to its golden.
+    # Without it: the same two reads as a synthetic FASTQ, compared to
+    # OligoComputer's vectors.
     out = str(tmp_path / "cli.kmers")
-    rc = kt.run_cli(["comp", "oligo", "-i", f"{REF}/reads.fq", "-o", out, "-k", "4"])
+    if os.path.isdir(REF):
+        reads = f"{REF}/reads.fq"
+    else:
+        reads = str(tmp_path / "reads.fq")
+        with open(reads, "w") as f:
+            for i, r in enumerate((READ_1, READ_2), 1):
+                f.write(f"@Read_{i}\n{r}\n+\n{'I' * len(r)}\n")
+    rc = kt.run_cli(["comp", "oligo", "-i", reads, "-o", out, "-k", "4"])
     assert rc == 0
     if os.path.isdir(REF):
         assert open(out, "rb").read() == open(f"{REF}/expected_fa.kmers", "rb").read()
+    else:
+        got = [[float(x) for x in line.split()] for line in open(out).read().splitlines()]
+        want = kt.OligoComputer(4).vectorise_batch([READ_1, READ_2])
+        assert len(got) == 2
+        for g, w in zip(got, want):
+            assert g == pytest.approx(w, abs=5e-7)
 
 
 def test_utils():

@@ -1,5 +1,6 @@
 """Windowed operators: sessionize, lag/lead, as-of join (zero leakage),
-rolling vectors (turn-/time-/session-bounded, chunked == unchunked)."""
+rolling vectors (turn-/time-/session-bounded; the stream kernel over
+whole conversations == over the router's (conv_id, block) segments)."""
 
 import numpy as np
 import pandas as pd
@@ -11,8 +12,9 @@ from kmertools_spark.operators import (
     asof_join_auto,
     asof_join_broadcast,
     asof_join_bucketed,
+    backfill_features_auto,
+    backfill_features_stream,
     lag_lead_features,
-    rolling_turn_vectors,
     sessionize,
 )
 
@@ -260,161 +262,165 @@ def rolling_oracle(pdf, k, n):
     return exp
 
 
-@pytest.mark.parametrize("chunk", [None, 4])
-def test_rolling_turn_vectors(spark, tdf, chunk):
-    df, pdf = tdf
-    got = rolling_turn_vectors(df, k=4, mode="turns", n_turns=3, chunk=chunk).toPandas()
-    exp = rolling_oracle(pdf, 4, 3)
-    assert len(got) == len(pdf)
-    for _, r in got.iterrows():
-        assert np.allclose(np.array(r.vec), exp[(r.conv_id, int(r.turn_idx))], rtol=1e-9)
-
-
-def test_backfill_fused_and_stream_match_composable(spark, tdf):
-    """backfill_features (grouped+chunked) and backfill_features_stream
-    (sorted-merge mapInPandas with cross-batch carry) both equal the
-    composable sessionize+composition+rolling formulation."""
-    from kmertools_spark.functions import composition_vector
-    from kmertools_spark.operators import backfill_features, backfill_features_stream
-
-    df, pdf = tdf
-
-    def sorted_pdf(d):
-        return d.toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-
-    fused = sorted_pdf(backfill_features(df, k=4, n_turns=3, chunk=8))
-    stream = sorted_pdf(backfill_features_stream(df, k=4, n_turns=3))
-    comp = sorted_pdf(
-        sessionize(df).withColumn("v", composition_vector(4)("text")).select(
-            "conv_id", "turn_idx", "session_seq", "v"
-        )
-    )
-    roll = rolling_oracle(pdf, 4, 3)
-    assert len(fused) == len(stream) == len(pdf)
-    assert np.allclose(np.vstack(fused["vec"]), np.vstack(comp["v"]))
-    assert np.allclose(np.vstack(stream["vec"]), np.vstack(comp["v"]))
-    assert (fused["session_seq"].to_numpy() == comp["session_seq"].to_numpy()).all()
-    assert (stream["session_seq"].to_numpy() == comp["session_seq"].to_numpy()).all()
-    for frame in (fused, stream):
-        for _, r in frame.iterrows():
-            assert np.allclose(
-                np.array(r.roll_vec), roll[(r.conv_id, int(r.turn_idx))], rtol=1e-9
-            )
-
-
-def test_stream_time_mode_matches_grouped(spark, tdf):
-    """backfill_features_stream(mode='time') == rolling_turn_vectors
-    (mode='time') across Arrow batch boundaries (horizon carry)."""
-    from kmertools_spark.operators import backfill_features_stream
-
-    df, _ = tdf
-    horizon = 900.0
-    a = (
-        backfill_features_stream(df, k=4, mode="time", time_seconds=horizon)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    b = (
-        rolling_turn_vectors(df, k=4, mode="time", time_seconds=horizon)
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    assert len(a) == len(b)
-    assert np.allclose(np.vstack(a["roll_vec"]), np.vstack(b["vec"]), rtol=1e-9)
-
-
-def test_rolling_time_vectors(spark, tdf):
-    df, pdf = tdf
-    horizon = 900.0
-    got = rolling_turn_vectors(df, k=4, mode="time", time_seconds=horizon).toPandas()
+def time_oracle(pdf, k, horizon):
     exp = {}
     for conv, g in pdf.sort_values(["conv_id", "turn_idx"]).groupby("conv_id"):
-        counts = composition_matrix(g["text"].tolist(), 4, norm=False)
+        counts = composition_matrix(g["text"].tolist(), k, norm=False)
         ts = g["ts"].astype("int64").to_numpy() // 10**6
         for i, t in enumerate(g["turn_idx"]):
             sel = (ts >= ts[i] - horizon * 1000) & (ts <= ts[i])
             win = counts[sel & (np.arange(len(g)) <= i)].sum(0)
             win = win / max(1.0, win.sum())
             exp[(conv, int(t))] = win
-    for _, r in got.iterrows():
-        assert np.allclose(np.array(r.vec), exp[(r.conv_id, int(r.turn_idx))], rtol=1e-9)
+    return exp
 
 
-def test_rolling_session_vectors(spark, tdf):
-    df, pdf = tdf
-    got = rolling_turn_vectors(df, k=4, mode="session", gap_seconds=GAP, chunk=None).toPandas()
-    sess = oracle_sessions(pdf, GAP)
+def session_oracle(pdf, k, gap_s):
+    sess = oracle_sessions(pdf, gap_s)
     exp = {}
     for conv, g in pdf.sort_values(["conv_id", "turn_idx"]).groupby("conv_id"):
-        counts = composition_matrix(g["text"].tolist(), 4, norm=False)
+        counts = composition_matrix(g["text"].tolist(), k, norm=False)
         seqs = np.array([sess[(conv, int(t))] for t in g["turn_idx"]])
         for i, t in enumerate(g["turn_idx"]):
             win = counts[(seqs == seqs[i]) & (np.arange(len(g)) <= i)].sum(0)
             win = win / max(1.0, win.sum())
             exp[(conv, int(t))] = win
-    for _, r in got.iterrows():
-        assert np.allclose(np.array(r.vec), exp[(r.conv_id, int(r.turn_idx))], rtol=1e-9)
+    return exp
+
+
+def assert_windows(got, exp):
+    """every output row's roll_vec equals the oracle window, and every
+    oracle row is output exactly once"""
+    assert len(got) == len(exp)
+    assert {(r.conv_id, int(r.turn_idx)) for r in got.itertuples()} == exp.keys()
+    for r in got.itertuples():
+        assert np.allclose(np.array(r.roll_vec), exp[(r.conv_id, int(r.turn_idx))], rtol=1e-9)
+
+
+@pytest.mark.parametrize("chunk", [None, 4])
+def test_rolling_turn_vectors(spark, tdf, chunk):
+    """chunk=None: the plain stream; chunk=4: hot_threshold=0 sends
+    every conversation through the router's (conv_id, block) segments."""
+    df, pdf = tdf
+    if chunk is None:
+        r = backfill_features_stream(df, k=4, n_turns=3)
+    else:
+        r = backfill_features_auto(df, k=4, n_turns=3, hot_threshold=0, chunk=chunk)
+    assert_windows(r.toPandas(), rolling_oracle(pdf, 4, 3))
+
+
+def test_backfill_stream_matches_composable(spark, tdf):
+    """backfill_features_stream (sorted-merge mapInPandas with
+    cross-batch carry) equals the composable sessionize+composition+
+    rolling formulation."""
+    from kmertools_spark.functions import composition_vector
+
+    df, pdf = tdf
+
+    def sorted_pdf(d):
+        return d.toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+
+    stream = sorted_pdf(backfill_features_stream(df, k=4, n_turns=3))
+    comp = sorted_pdf(
+        sessionize(df).withColumn("v", composition_vector(4)("text")).select(
+            "conv_id", "turn_idx", "session_seq", "v"
+        )
+    )
+    assert len(stream) == len(pdf)
+    assert np.allclose(np.vstack(stream["vec"]), np.vstack(comp["v"]))
+    assert (stream["session_seq"].to_numpy() == comp["session_seq"].to_numpy()).all()
+    assert_windows(stream, rolling_oracle(pdf, 4, 3))
+
+
+def test_rolling_time_vectors(spark, tdf):
+    df, pdf = tdf
+    horizon = 900.0
+    got = backfill_features_stream(df, k=4, mode="time", time_seconds=horizon).toPandas()
+    assert_windows(got, time_oracle(pdf, 4, horizon))
+
+
+def test_rolling_session_vectors(spark, tdf):
+    df, pdf = tdf
+    got = backfill_features_stream(df, k=4, mode="session", gap_seconds=GAP).toPandas()
+    assert_windows(got, session_oracle(pdf, 4, GAP))
+
+
+def test_rolling_carry_across_arrow_batches(spark, tdf):
+    """All three window modes through ONE partition cut into 7-row Arrow
+    batches: windows and sessions that straddle a batch boundary must
+    come out of the carry (for 'session', the one running count row)."""
+    df, pdf = tdf
+    batch = 7
+    srt = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    sess = oracle_sessions(pdf, GAP)
+    key = [(c, int(t)) for c, t in zip(srt["conv_id"], srt["turn_idx"])]
+    # fixture sanity: some session is open across a batch boundary
+    assert any(
+        key[i][0] == key[i - 1][0] and sess[key[i]] == sess[key[i - 1]] > 0
+        for i in range(batch, len(key), batch)
+    )
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
+    try:
+        for mode, exp in (
+            ("turns", rolling_oracle(pdf, 4, 3)),
+            ("time", time_oracle(pdf, 4, 900.0)),
+            ("session", session_oracle(pdf, 4, GAP)),
+        ):
+            got = backfill_features_stream(
+                df, k=4, n_turns=3, mode=mode, time_seconds=900.0, n_partitions=1
+            ).toPandas()
+            assert_windows(got, exp)
+            assert {
+                (r.conv_id, int(r.turn_idx)): r.session_seq for r in got.itertuples()
+            } == sess
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
+def _routed_matches_stream(df, hot_threshold, chunk, **kw):
+    """backfill_features_auto with a tiny hot_threshold (so the blocked
+    hot branch really runs) == backfill_features_stream"""
+
+    def sorted_pdf(d):
+        return d.toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+
+    sizes = df.groupBy("conv_id").count().toPandas()
+    assert (sizes["count"] > hot_threshold).any()
+    auto = sorted_pdf(
+        backfill_features_auto(df, k=4, hot_threshold=hot_threshold, chunk=chunk, **kw)
+    )
+    stream = sorted_pdf(backfill_features_stream(df, k=4, **kw))
+    assert len(auto) == len(stream)
+    assert (auto["conv_id"] == stream["conv_id"]).all()
+    assert (auto["turn_idx"] == stream["turn_idx"]).all()
+    assert (auto["session_seq"].to_numpy() == stream["session_seq"].to_numpy()).all()
+    assert np.allclose(np.vstack(auto["vec"]), np.vstack(stream["vec"]), rtol=1e-12)
+    assert np.allclose(
+        np.vstack(auto["roll_vec"]), np.vstack(stream["roll_vec"]), rtol=1e-12
+    )
+    return sizes
 
 
 def test_rolling_chunked_sparse_turn_idx(spark, tdf):
     """Chunk blocks derive from ROW position, not turn_idx values:
     a filtered (sparse/non-0-based) subset must produce identical
-    windows chunked and unchunked (round-1 advice regression)."""
+    windows through the hot branch's blocks and the plain stream
+    (round-1 advice regression)."""
     df, _ = tdf
     # keep ~half the turns -> gaps everywhere, including block borders
     sub = df.where((F.col("turn_idx") % 3 != 1) & (F.col("turn_idx") >= 2))
-
-    def key(d):
-        return {
-            (r.conv_id, int(r.turn_idx)): np.asarray(r.vec)
-            for _, r in d.toPandas().iterrows()
-        }
-
-    whole = key(rolling_turn_vectors(sub, k=4, mode="turns", n_turns=3, chunk=None))
-    chunked = key(rolling_turn_vectors(sub, k=4, mode="turns", n_turns=3, chunk=4))
-    assert whole.keys() == chunked.keys()
-    for kk in whole:
-        assert np.allclose(whole[kk], chunked[kk], rtol=1e-12), kk
-
-    from kmertools_spark.operators import backfill_features
-
-    bw = backfill_features(sub, k=4, n_turns=3, chunk=None).toPandas()
-    bc = backfill_features(sub, k=4, n_turns=3, chunk=4).toPandas()
-    bw = bw.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    bc = bc.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    assert len(bw) == len(bc)
-    for i in range(len(bw)):
-        assert np.allclose(bw.roll_vec[i], bc.roll_vec[i], rtol=1e-12)
+    _routed_matches_stream(sub, hot_threshold=3, n_turns=3, chunk=4)
 
 
 def test_backfill_auto_routes_and_matches_stream(spark, tdf):
     """backfill_features_auto == backfill_features_stream on a mixed
-    corpus (hot conversation + tail), with the hot conversation actually
-    routed through the chunked plan (tiny hot_threshold forces it)."""
-    from kmertools_spark.operators import (
-        backfill_features_auto,
-        backfill_features_stream,
-    )
-
+    corpus (hot conversation + tail), with the hot conversations
+    actually routed through the blocked segments (tiny hot_threshold)."""
     df, _ = tdf
-
-    def sorted_pdf(d):
-        return d.toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-
-    auto = sorted_pdf(
-        backfill_features_auto(df, k=4, n_turns=3, hot_threshold=8, chunk=8)
-    )
-    stream = sorted_pdf(backfill_features_stream(df, k=4, n_turns=3))
-    assert len(auto) == len(stream)
-    assert (auto["session_seq"].to_numpy() == stream["session_seq"].to_numpy()).all()
-    assert np.allclose(
-        np.vstack(auto["roll_vec"]), np.vstack(stream["roll_vec"]), rtol=1e-12
-    )
-    # sanity: the threshold really split the corpus (some conv is hot)
-    sizes = df.groupBy("conv_id").count().toPandas()
-    assert (sizes["count"] > 8).any() and (sizes["count"] <= 8).any()
+    sizes = _routed_matches_stream(df, hot_threshold=8, n_turns=3, chunk=8)
+    # sanity: the threshold really split the corpus (some conv is cold)
+    assert (sizes["count"] <= 8).any()
 
 
 @pytest.mark.parametrize("impl", ["window", "broadcast", "bucketed", "auto"])
@@ -564,27 +570,16 @@ def test_rolling_chunked_window_wider_than_chunk(spark, tdf):
     chunk) must replicate carry rows as many blocks ahead as the window
     needs — the old two-block special case silently truncated it."""
     df, _ = tdf
-    wide = rolling_turn_vectors(df, k=4, n_turns=8, chunk=4, norm=False)
-    ref = rolling_turn_vectors(df, k=4, n_turns=8, chunk=None, norm=False)
-
-    def key(d):
-        p = d.toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-        return p
-
-    a, b = key(wide), key(ref)
-    assert len(a) == len(b)
-    assert (a["conv_id"] == b["conv_id"]).all()
-    assert np.allclose(np.vstack(a["vec"]), np.vstack(b["vec"]), rtol=1e-12)
+    _routed_matches_stream(df, hot_threshold=3, n_turns=8, chunk=4, norm=False)
 
 
 def test_rolling_time_null_ts_raises(spark):
-    """code-review r5: NULL ts in mode='time' used to cast NaT to
-    INT64_MIN and return silently wrong windows; every pandas window
-    kernel now shares the guard_null_ts defense."""
+    """code-review r5: NULL ts used to cast NaT to INT64_MIN and return
+    silently wrong windows; every pandas window kernel shares the
+    guard_null_ts defense. The stream kernel derives session_seq from
+    ts, so a 'turns' window raises too unless session_seq is given."""
     import pandas as pd
     import pytest
-
-    from kmertools_spark.operators import rolling_turn_vectors
 
     pdf = pd.DataFrame(
         {
@@ -597,7 +592,10 @@ def test_rolling_time_null_ts_raises(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    with pytest.raises(Exception, match="NULL ts"):
-        rolling_turn_vectors(df, k=2, mode="time", time_seconds=600).collect()
-    # turns mode never reads ts and must still work on the same frame
-    assert rolling_turn_vectors(df, k=2, mode="turns", n_turns=2).count() == 3
+    for mode in ("time", "turns", "session"):
+        with pytest.raises(Exception, match="NULL ts"):
+            backfill_features_stream(df, k=2, mode=mode, n_turns=2).collect()
+    # with session_seq supplied, turns/session windows never read ts
+    given = df.withColumn("session_seq", F.lit(0))
+    for mode in ("turns", "session"):
+        assert backfill_features_stream(given, k=2, mode=mode, n_turns=2).count() == 3
