@@ -227,17 +227,18 @@ def q13_asof(spark, sf_dir):
 
 
 def q53_asof_bucketed(spark, sf_dir):
-    """q13's semantics through the hot-entity physical plan (analytic
-    time buckets + per-bucket last-event carry, window per (entity,
-    bucket)) — the whale-entity strategy asof_join_auto routes to; the
-    oracle is identical to q13's."""
-    from kmertools_spark.operators import asof_join_bucketed
+    """q13's semantics through the router's all-hot edge:
+    hot_threshold=0 sends every entity down the bucketed hot branch
+    (analytic time buckets + per-bucket last-event carry, window per
+    (entity, bucket)) and leaves the cold branch empty; the oracle is
+    identical to q13's. q56 covers the mixed split."""
+    from kmertools_spark.operators import asof_join_auto
     from kmertools_spark.sources import probes_df
 
     t = _t(spark, sf_dir).withColumn("text_len", F.length("text").cast("long"))
     p = probes_df(spark, sf_dir).distinct()
-    return asof_join_bucketed(
-        t, p, value_cols=("turn_idx", "text_len"), n_buckets=8
+    return asof_join_auto(
+        t, p, value_cols=("turn_idx", "text_len"), hot_threshold=0, n_buckets=8
     )
 
 
@@ -291,18 +292,6 @@ def q56_asof_auto(spark, sf_dir):
     return asof_join_auto(
         t, p, value_cols=("turn_idx", "text_len"), hot_threshold=12, n_buckets=4
     )
-
-
-def q39_asof_broadcast(spark, sf_dir):
-    """q13's semantics through the alternative physical plan (broadcast
-    range join + per-probe top-1) — small-probe-set strategy, same
-    strict-< oracle."""
-    from kmertools_spark.operators import asof_join_broadcast
-    from kmertools_spark.sources import probes_df
-
-    t = _t(spark, sf_dir).withColumn("text_len", F.length("text").cast("long"))
-    p = probes_df(spark, sf_dir).distinct()
-    return asof_join_broadcast(t, p, value_cols=("turn_idx", "text_len"))
 
 
 def q50_asof_tolerance(spark, sf_dir):
@@ -821,12 +810,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # subset of the uncapped banding). Exact accounting (code-review r6,
     # executed): the first 50 slots carry 48 DISTINCT oracle-SQL strings
     # — q53_asof_bucketed and q56_asof_auto deliberately share q13's
-    # oracle (same semantics, alternate physical plans, each gated so
-    # the driver exercises all three plans); every unique semantic in
-    # the registry is driver-gated. The tail is purely alternate
-    # physical plans of gated oracles (q30<-q10, q39<-q13, q40<-q15,
-    # q44<-q20). Adding query #51+ with a NEW oracle has two free moves
-    # (rotate q53/q56 into the tail) before folding is needed.
+    # oracle (same semantics through asof_join_auto: q53 routes every
+    # entity hot, q56 splits hot from cold; both gated so the driver
+    # exercises the window plan, the bucketed branch and their union);
+    # every unique semantic in the registry is driver-gated. The tail is
+    # purely alternate physical plans of gated oracles (q30<-q10,
+    # q40<-q15, q44<-q20). Adding query #51+ with a NEW oracle has two
+    # free moves (rotate q53/q56 into the tail) before folding is needed.
     return {
         "q01_transcripts_identity": q01_transcripts_identity,
         "q02_sessionize": q02_sessionize,
@@ -880,7 +870,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q56_asof_auto": q56_asof_auto,
         # --- tail: alternate physical plans sharing a gated oracle ---
         "q30_coverage_join": q30_coverage_join,
-        "q39_asof_broadcast": q39_asof_broadcast,
         "q40_dedup_digest": q40_dedup_digest,
         "q44_ann_topk_gemm": q44_ann_topk_gemm,
     }

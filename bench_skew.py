@@ -92,10 +92,13 @@ def main() -> None:
     skewed = tail_df(tail_convs).unionByName(giant_df(giant_n)).cache()
     n_uniform, n_skewed = uniform.count(), skewed.count()
 
-    # warm every python worker before timing (CLAUDE.md invariant)
-    backfill_features_stream(
-        uniform.limit(1024).repartition(cpus), k=4, n_turns=3
-    ).count()
+    # warm every python worker before timing (CLAUDE.md invariant), and
+    # run auto's hot branch once (every 10-turn conversation of the
+    # slice is hot at threshold 4) so the first timed auto run does not
+    # pay the first run of its sessionize / block / exchange stages
+    warm = uniform.limit(1024).repartition(cpus)
+    backfill_features_stream(warm, k=4, n_turns=3).count()
+    backfill_features_auto(warm, k=4, n_turns=3, hot_threshold=4, chunk=4).count()
 
     plans = {
         "stream": lambda df: backfill_features_stream(df, k=4, n_turns=3),

@@ -1,11 +1,6 @@
 """DataFrame -> DataFrame operators (SURVEY §2.4-§2.7 + engine additions)."""
 
-from .asof import (
-    asof_join,
-    asof_join_auto,
-    asof_join_broadcast,
-    asof_join_bucketed,
-)
+from .asof import asof_join, asof_join_auto
 from .binning import minimiser_index, record_minimisers
 from .counts import coverage_features, global_kmer_counts
 from .dedup import (
@@ -47,8 +42,6 @@ from .skew import salted_collect_list, salted_sum, with_salt
 __all__ = [
     "asof_join",
     "asof_join_auto",
-    "asof_join_broadcast",
-    "asof_join_bucketed",
     "minimiser_index",
     "record_minimisers",
     "coverage_features",

@@ -9,15 +9,18 @@ Leakage guarantee (structural): a probe at ``probe_ts`` sees only rows
 with ``ts < probe_ts`` — at equal timestamps the probe sorts BEFORE the
 feature row, so same-instant features are excluded (strict <).
 
-Scale notes: a single shuffle on the entity key co-partitions probes
-and features; AQE handles mild skew. For tiny probe sets prefer
-``asof_join_broadcast`` (range join against broadcast probes).
+Two public plans: ``asof_join`` (one shuffle on the entity key
+co-partitions probes and features; AQE handles mild skew) and the skew
+router ``asof_join_auto``, whose hot branch ``_asof_bucketed`` splits a
+whale entity into analytic time buckets.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .skew import hot_key_split
 
 _EV = "__is_event"
 
@@ -141,7 +144,7 @@ def asof_join(
     return _probe_output(u, w, on, probe_ts_col, value_cols, tolerance_ms)
 
 
-def asof_join_bucketed(
+def _asof_bucketed(
     features: DataFrame,
     probes: DataFrame,
     on: str = "conv_id",
@@ -150,7 +153,6 @@ def asof_join_bucketed(
     value_cols: tuple[str, ...] = ("turn_idx",),
     tolerance_ms: int | None = None,
     n_buckets: int = 256,
-    broadcast_stats: bool = True,
 ) -> DataFrame:
     """Hot-entity as-of plan: parallelize WITHIN an entity (r3 VERDICT
     item 3). asof_join's window partitions by entity only, so a
@@ -177,21 +179,17 @@ def asof_join_bucketed(
          partitioned by (entity, bucket): O(n/B log n/B) per task.
 
     Equality with asof_join is property-tested (ties, tolerance, NULL
-    probes). ``broadcast_stats``: the per-entity (lo, hi, span) row is
-    broadcast-joined (the intended use routes a HANDFUL of hot entities
-    here); pass False to let AQE decide when calling it standalone over
-    many entities.
+    probes). The per-entity (lo, hi) row is broadcast-joined: the router
+    sends only a handful of hot entities here.
     """
     from .timeutil import epoch_ms
 
     u = _union_marker(features, probes, on, ts_col, probe_ts_col, value_cols)
     u = u.withColumn("__tms", epoch_ms("__t"))
     B = int(n_buckets)
-    stats = u.groupBy(on).agg(
-        F.min("__tms").alias("__lo"), F.max("__tms").alias("__hi")
+    stats = F.broadcast(
+        u.groupBy(on).agg(F.min("__tms").alias("__lo"), F.max("__tms").alias("__hi"))
     )
-    if broadcast_stats:
-        stats = F.broadcast(stats)
     u2 = u.join(stats, on, "left").withColumn(
         "__b",
         F.expr(f"(__tms - __lo) * {B} div (__hi - __lo + 1)"),
@@ -257,25 +255,14 @@ def asof_join_auto(
     tolerance_ms: int | None = None,
     hot_threshold: int = 65536,
     n_buckets: int = 256,
-    hot_ids: list | None = None,
 ) -> DataFrame:
     """Skew-routing as-of join, mirroring backfill_features_auto: cold
     entities (<= hot_threshold feature rows) take the one-window
     asof_join; hot entities take the bucketed within-entity plan, so no
-    single task ever sorts a whale conversation. ``hot_ids`` skips the
-    sizing aggregation when the caller already knows the hot keys; the
-    sizing pass is a map-side-combined count and the collected list is
-    tiny by construction (entities LARGER than the threshold).
-    BENCH/BASELINE.md holds the measured crossover (bench_skew.py)."""
-    if hot_ids is None:
-        hot_ids = [
-            r[0]
-            for r in features.groupBy(on)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > hot_threshold)
-            .select(on)
-            .collect()
-        ]
+    single task ever sorts a whale conversation. The hot/cold split is
+    ``skew.hot_key_split`` over the feature rows (NULL keys route cold).
+    BENCH/BASELINE.md holds the measured crossover (bench_skew_asof.py)."""
+    is_hot = hot_key_split(features, on, hot_threshold)
     args = dict(
         on=on,
         ts_col=ts_col,
@@ -283,13 +270,10 @@ def asof_join_auto(
         value_cols=value_cols,
         tolerance_ms=tolerance_ms,
     )
-    if not hot_ids:
+    if is_hot is None:
         return asof_join(features, probes, **args)
-    # coalesce: isin() is NULL for a NULL key and where() drops NULL
-    # predicates on both branches — NULL-key rows must route cold
-    is_hot = F.coalesce(F.col(on).isin(list(hot_ids)), F.lit(False))
     cold = asof_join(features.where(~is_hot), probes.where(~is_hot), **args)
-    hot = asof_join_bucketed(
+    hot = _asof_bucketed(
         features.where(is_hot),
         probes.where(is_hot),
         n_buckets=n_buckets,
@@ -297,92 +281,3 @@ def asof_join_auto(
     )
     return cold.unionByName(hot)
 
-
-def asof_join_broadcast(
-    features: DataFrame,
-    probes: DataFrame,
-    on: str = "conv_id",
-    ts_col: str = "ts",
-    probe_ts_col: str = "probe_ts",
-    value_cols: tuple[str, ...] = ("turn_idx",),
-    tolerance_ms: int | None = None,
-) -> DataFrame:
-    """Alternative plan for small probe sets: broadcast range join +
-    per-probe top-1 (row_number). Same strict-< semantics (incl. null
-    rows for probes no feature precedes) and the same ``tolerance_ms``
-    staleness bound as asof_join (here an extra range-join predicate:
-    stale probes fall into the missed branch and emit nulls).
-
-    Spark cannot broadcast the preserved side of an outer join (the
-    hint is silently dropped for `build left / left outer`), so the
-    match step is an INNER join — genuinely broadcastable both ways —
-    and unmatched probes are re-added with a broadcast anti-join. Both
-    joins are BroadcastHashJoins (plan-asserted).
-
-    Duplicate probe rows are preserved (same multiplicity as
-    asof_join): the core runs on DISTINCT (on, probe_ts) keys and the
-    result is fanned back out by a final broadcast join against the
-    original probe rows (r2 ADVICE item 3 — the matched branch used to
-    collapse duplicates while the missed branch kept them).
-    """
-    probe_keys = probes.select(F.col(on), F.col(probe_ts_col))
-    probes = probe_keys.distinct()
-    conds = [
-        F.col(f"p.{on}") == F.col(f"f.{on}"),
-        F.col(f"f.{ts_col}") < F.col(f"p.{probe_ts_col}"),
-    ]
-    if tolerance_ms is not None:
-        from .timeutil import epoch_ms
-
-        conds.append(
-            epoch_ms(f"f.{ts_col}")
-            >= epoch_ms(f"p.{probe_ts_col}") - F.lit(tolerance_ms)
-        )
-    j = F.broadcast(probes.alias("p")).join(
-        features.alias("f"), on=conds, how="inner"
-    )
-    w = Window.partitionBy(f"p.{on}", f"p.{probe_ts_col}").orderBy(
-        F.col(f"f.{ts_col}").desc(), F.col("f.turn_idx").desc()
-    )
-    matched = (
-        j.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(
-            F.col(f"p.{on}").alias(on),
-            F.col(f"p.{probe_ts_col}").alias(probe_ts_col),
-            *[F.col(f"f.{c}").alias(f"asof_{c}") for c in value_cols],
-        )
-    )
-    hit_keys = matched.select(on, probe_ts_col)
-    missed = (
-        probes.select(F.col(on), F.col(probe_ts_col))
-        .join(F.broadcast(hit_keys), [on, probe_ts_col], "left_anti")
-        .select(
-            on,
-            probe_ts_col,
-            *[
-                F.lit(None)
-                .cast(features.schema[c].dataType)
-                .alias(f"asof_{c}")
-                for c in value_cols
-            ],
-        )
-    )
-    per_key = matched.unionByName(missed)
-    # restore original probe multiplicity (one output row per input row);
-    # null-safe equality so NULL-key/NULL-ts probe rows survive the fan-
-    # out (they always land in the missed branch) instead of vanishing
-    pk = probe_keys.alias("pk")
-    k = per_key.alias("k")
-    return pk.join(
-        F.broadcast(k),
-        on=[
-            F.col(f"pk.{on}").eqNullSafe(F.col(f"k.{on}")),
-            F.col(f"pk.{probe_ts_col}").eqNullSafe(F.col(f"k.{probe_ts_col}")),
-        ],
-        how="inner",
-    ).select(
-        F.col(f"k.{on}").alias(on),
-        F.col(f"k.{probe_ts_col}").alias(probe_ts_col),
-        *[F.col(f"k.asof_{c}").alias(f"asof_{c}") for c in value_cols],
-    )

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .skew import hot_key_split
 from .timeutil import epoch_ms, guard_null_ts
 from pyspark.sql.types import (
     ArrayType,
@@ -347,7 +348,6 @@ def backfill_features_auto(
     norm: bool = True,
     hot_threshold: int = 65536,
     chunk: int = 4096,
-    hot_ids: list | None = None,
 ) -> DataFrame:
     """Skew-routing backfill: the measured answer to docs/SCALE.md
     playbook item 1 (bench_skew.py holds the numbers).
@@ -364,28 +364,14 @@ def backfill_features_auto(
            (conv_id, block, turn_idx) — a hot conversation of T turns
            becomes ceil(T/chunk) segments spread over every task
 
-    ``hot_ids`` skips the sizing aggregation when the caller already
-    knows the hot keys (e.g. from yesterday's partition stats); the
-    sizing pass itself is a map-side-combined count per conv_id. The
-    hot-id list is collected to the driver — by construction it is tiny
-    (conversations longer than hot_threshold).
+    The hot/cold split is ``skew.hot_key_split`` (NULL conv_id routes
+    cold).
     """
-    if hot_ids is None:
-        hot_ids = [
-            r[0]
-            for r in df.groupBy("conv_id")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > hot_threshold)
-            .select("conv_id")
-            .collect()
-        ]
-    if not hot_ids:
+    is_hot = hot_key_split(df, "conv_id", hot_threshold)
+    if is_hot is None:
         return backfill_features_stream(
             df, k=k, n_turns=n_turns, gap_seconds=gap_seconds, norm=norm
         )
-    # coalesce: isin(...) is NULL for NULL conv_id, and both where(pred)
-    # and where(~pred) drop NULL predicates — NULL-key rows route cold
-    is_hot = F.coalesce(F.col("conv_id").isin(list(hot_ids)), F.lit(False))
     cold = backfill_features_stream(
         df.where(~is_hot), k=k, n_turns=n_turns, gap_seconds=gap_seconds, norm=norm
     )

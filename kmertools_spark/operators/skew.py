@@ -1,4 +1,5 @@
-"""Explicit skew handling: salted two-phase aggregation.
+"""Explicit skew handling: salted two-phase aggregation and the
+hot-key split the skew routers share.
 
 The engine-side analog of the reference's `min_mer % n_parts` explicit
 sharding (X2, counter/src/lib.rs:127, 243-247). AQE's skew mitigation
@@ -8,10 +9,35 @@ buckets, applyInPandas groups) need explicit salting.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SALT = "__salt"
+
+
+def hot_key_split(df: DataFrame, key: str, threshold: int) -> Column | None:
+    """Predicate that is True on the rows of every hot ``key``, or None
+    when no key is hot. A key is hot when it has more than ``threshold``
+    rows of ``df``.
+
+    The sizing pass is a map-side-combined count per key, and the hot
+    keys are collected to the driver — by construction a short list.
+    NULL keys always route cold: they are left out of the list, and the
+    coalesce turns isin()'s NULL into False, because both where(pred)
+    and where(~pred) drop rows whose predicate is NULL.
+    """
+    hot = [
+        r[0]
+        for r in df.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .where(F.col("__n") > threshold)
+        .select(key)
+        .collect()
+        if r[0] is not None
+    ]
+    if not hot:
+        return None
+    return F.coalesce(F.col(key).isin(hot), F.lit(False))
 
 
 def with_salt(df: DataFrame, n_salts: int) -> DataFrame:

@@ -129,17 +129,20 @@ class _Pool:
 _POOL = _Pool()
 
 
-def batch_shingle_hashes(
-    texts: list[str | None], width: int
+def batch_windows(
+    bs: list[bytes], width: int, mod: int | None, key: str
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(row_idx, hash) for every width-char window of every text.
+    """(row_idx, value) for every width-byte window lying inside one row
+    of ``bs``. ``mod`` set: value is the polynomial hash (BASE, reduced
+    mod ``mod``); ``mod`` None: the window's bytes packed exactly in
+    base 256 (injective; needs width <= 7). ``key`` prefixes this
+    caller's scratch buffers in the pool.
 
-    One numpy pass over the concatenated bytes of the batch; windows
-    spanning two rows are masked out via the separator offset math.
-    All scratch comes from the process-level pool (out=/take — zero
+    One numpy pass over the separator-joined bytes of the batch; windows
+    spanning two rows are masked out via the row-end offset math. All
+    scratch comes from the process-level pool (out=/take — zero
     steady-state allocations beyond the returned copies).
     """
-    bs = [t.encode("utf-8") if t else b"" for t in texts]
     lens = np.fromiter((len(b) for b in bs), dtype=np.int64, count=len(bs))
     joined = b"\x00".join(bs)
     if len(joined) < width:
@@ -154,32 +157,46 @@ def batch_shingle_hashes(
     # a 1.3 GB dense matrix in every python worker — code-review r5);
     # chunking bounds the dense copy to ~16 MB (pooled, so it is paid
     # once per worker, not once per batch) while keeping the BLAS-shaped
-    # inner loop
+    # inner loop. A separator byte inside a window is harmless: such
+    # windows are masked below.
     wview = np.lib.stride_tricks.sliding_window_view(data, width)
     n_win = wview.shape[0]
-    pv = pow_vector(width)
-    h = _POOL.get("sh_h", n_win, np.int64)
+    if mod is None:
+        pv = (256 ** np.arange(width - 1, -1, -1)).astype(np.int64)
+    else:
+        pv = pow_vector(width)
+    h = _POOL.get(f"{key}_h", n_win, np.int64)
     ch = 1 << 18
-    mm_flat = _POOL.get("sh_mm", min(ch, n_win) * width, np.int64)
+    mm_flat = _POOL.get(f"{key}_mm", min(ch, n_win) * width, np.int64)
     for s in range(0, n_win, ch):
         m = min(ch, n_win - s)
         mm = mm_flat[: m * width].reshape(m, width)
         np.copyto(mm, wview[s : s + m], casting="unsafe")
         np.matmul(mm, pv, out=h[s : s + m])
-        np.mod(h[s : s + m], MOD, out=h[s : s + m])
+        if mod is not None:
+            np.mod(h[s : s + m], mod, out=h[s : s + m])
     p = _POOL.positions(n_win)
     rows = np.searchsorted(starts, p, side="right")
     rows -= 1
     # valid window <=> it ends inside its own row: p + width <= row end
-    end = _POOL.get("sh_end", n_win, np.int64)
+    end = _POOL.get(f"{key}_end", n_win, np.int64)
     np.take(starts, rows, out=end)
-    t2 = _POOL.get("sh_t2", n_win, np.int64)
+    t2 = _POOL.get(f"{key}_t2", n_win, np.int64)
     np.take(lens, rows, out=t2)
     np.add(end, t2, out=end)
     end -= width
-    ok = _POOL.get("sh_ok", n_win, np.bool_)
+    ok = _POOL.get(f"{key}_ok", n_win, np.bool_)
     np.less_equal(p, end, out=ok)
     return rows[ok], h[ok]
+
+
+def batch_shingle_hashes(
+    texts: list[str | None], width: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(row_idx, hash) for every width-char window of every text
+    (``shingle_hashes`` over a whole batch at once)."""
+    bs = [t.encode("utf-8") if t else b"" for t in texts]
+    return batch_windows(bs, width, MOD, "sh")
 
 
 def _row_groups(rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

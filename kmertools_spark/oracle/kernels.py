@@ -21,7 +21,7 @@ from typing import Iterable, Sequence
 import numpy as np
 
 from .codec import SEQ_NT4, kmer_pos_maps
-from .hashing import _Pool
+from .hashing import _Pool, batch_windows
 
 # process-level scratch pool (see hashing._Pool: fresh numpy allocations
 # page-fault per page on this host and cost 10-100x the arithmetic).
@@ -607,41 +607,10 @@ def repetition_batch(texts: Sequence[str | None], n: int) -> list[float | None]:
     max_rows = int((2**63 - 1) // int(K))
     for r0 in range(0, len(bs), max_rows):
         cb = bs[r0 : r0 + max_rows]
-        lens = lens_all[r0 : r0 + max_rows]
-        joined = b"\x00".join(cb)
-        if len(joined) < n:
-            continue
-        starts = np.zeros(len(cb), dtype=np.int64)
-        if len(cb) > 1:
-            np.cumsum(lens[:-1] + 1, out=starts[1:])
-        data = np.frombuffer(joined, dtype=np.uint8)
-        wview = np.lib.stride_tricks.sliding_window_view(data, n)
-        n_win = wview.shape[0]
-        # exact base-256 packing (max 2^48 at n=6; a separator byte \x00
-        # inside a window is fine — those windows are masked by offsets)
-        pv = (256 ** np.arange(n - 1, -1, -1)).astype(np.int64)
-        h = _POOL.get("rp_h", n_win, np.int64)
-        ch = 1 << 18
-        mm_flat = _POOL.get("rp_mm", min(ch, n_win) * n, np.int64)
-        for s in range(0, n_win, ch):
-            m = min(ch, n_win - s)
-            mm = mm_flat[: m * n].reshape(m, n)
-            np.copyto(mm, wview[s : s + m], casting="unsafe")
-            np.matmul(mm, pv, out=h[s : s + m])
-        p = _POOL.positions(n_win)
-        rows = np.searchsorted(starts, p, side="right")
-        rows -= 1
-        end = _POOL.get("rp_end", n_win, np.int64)
-        np.take(starts, rows, out=end)
-        t2 = _POOL.get("rp_t2", n_win, np.int64)
-        np.take(lens, rows, out=t2)
-        np.add(end, t2, out=end)
-        end -= n
-        ok = _POOL.get("rp_ok", n_win, np.bool_)
-        np.less_equal(p, end, out=ok)
-        keys = rows[ok]
-        np.multiply(keys, K, out=keys)
-        keys += h[ok]
+        # exact base-256 gram values (max 2^48 at n=6)
+        keys, h = batch_windows(cb, n, None, "rp")
+        keys *= K
+        keys += h
         uk = np.unique(keys)
         distinct_all[r0 : r0 + len(cb)] = np.bincount(uk // K, minlength=len(cb))
     d_list = distinct_all.tolist()

@@ -548,8 +548,8 @@ SELECT doc_id, CAST(bin AS BIGINT) AS bin,
        - GREATEST(off, bin * 64) AS BIGINT) AS n_tok
 FROM ex"""
 
-    # q53: q13's semantics through the bucketed hot-entity plan — the
-    # oracle is IDENTICAL (alternative physical plan, like q30/q10)
+    # q53: q13's semantics through the router's all-hot edge (every
+    # entity takes the bucketed branch) — the oracle is IDENTICAL
     q["q53_asof_bucketed"] = q["q13_asof"]
     # q56: the skew router (cold window-plan + hot bucketed-plan union)
     # — alternative physical composition, identical oracle
@@ -734,7 +734,6 @@ SELECT conv_id, turn_idx, pos, CAST(fwd AS BIGINT) AS fwd, CAST(rc AS BIGINT) AS
 FROM kmers"""
 
     # alternative-physical-plan twins: identical rows to the originals
-    q["q39_asof_broadcast"] = q["q13_asof"]
     q["q40_dedup_digest"] = q["q15_dedup_exact"]
 
     from ..operators.sampling import MOD as _SMOD

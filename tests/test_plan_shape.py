@@ -157,18 +157,33 @@ def test_fastx_distributed_zero_shuffle(spark, tmp_path):
         assert df.rdd.getNumPartitions() >= 7
 
 
-def test_asof_broadcast_plan_is_broadcast(spark, tdf):
-    """asof_join_broadcast must produce genuine BroadcastHashJoins
-    (Spark silently drops a broadcast hint on the preserved side of an
-    outer join — the inner+anti formulation keeps it real)."""
-    from kmertools_spark.operators import asof_join_broadcast
+def test_asof_auto_plan_splits_whale(spark, tdf):
+    """With one whale above hot_threshold, asof_join_auto's plan holds
+    the bucketed hot branch (a Window partitioned by (conv_id, __b),
+    per-entity stats broadcast-joined) next to the cold window plan,
+    hash-partitioned on conv_id alone."""
+    import re
 
-    probes = spark.createDataFrame(
-        tdf.select("conv_id", "ts").limit(5).toPandas().rename(columns={"ts": "probe_ts"})
-    )
-    plan = _plan(asof_join_broadcast(tdf, probes))
-    assert plan.count("BroadcastHashJoin") >= 2, plan[:2000]
-    assert "SortMergeJoin" not in plan
+    from pyspark.sql import functions as F
+
+    from kmertools_spark.operators import asof_join_auto
+
+    sizes = {r.conv_id: r["count"] for r in tdf.groupBy("conv_id").count().collect()}
+    ranked = sorted(sizes.values())
+    assert ranked[-1] > ranked[-2]  # fixture sanity: one largest entity
+    probes = tdf.select("conv_id", F.col("ts").alias("probe_ts"))
+    plan = _plan(asof_join_auto(tdf, probes, hot_threshold=ranked[-2]))
+    # (partition spec, first order key) of every Window node
+    windows = re.findall(r"Window \[.*\], \[([^\]]*)\], \[(\w+)#", plan)
+    hot = [w for w in windows if re.fullmatch(r"conv_id#\d+, __b#\d+L?", w[0])]
+    cold = [w for w in windows if re.fullmatch(r"conv_id#\d+", w[0]) and w[1] == "__t"]
+    assert hot and cold, windows
+    assert re.search(r"hashpartitioning\(conv_id#\d+, \d+\)", plan)
+    assert re.search(r"hashpartitioning\(conv_id#\d+, __b#\d+L?, \d+\)", plan)
+    # the per-entity (lo, hi) stats reach the hot rows by broadcast
+    assert re.search(
+        r"BroadcastHashJoin \[conv_id#\d+\], \[conv_id#\d+\], LeftOuter", plan
+    ), plan[:2000]
 
 
 def test_packing_has_no_global_window(spark):

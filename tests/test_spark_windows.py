@@ -10,13 +10,12 @@ from pyspark.sql import functions as F
 from kmertools_spark.operators import (
     asof_join,
     asof_join_auto,
-    asof_join_broadcast,
-    asof_join_bucketed,
     backfill_features_auto,
     backfill_features_stream,
     lag_lead_features,
     sessionize,
 )
+from kmertools_spark.operators.asof import _asof_bucketed
 
 GAP = 1800.0
 
@@ -24,7 +23,7 @@ GAP = 1800.0
 def _asof_bucketed_small(*a, **kw):
     """bucketed plan with few buckets so tiny test data spans several"""
     kw.setdefault("n_buckets", 5)
-    return asof_join_bucketed(*a, **kw)
+    return _asof_bucketed(*a, **kw)
 
 
 def _asof_auto_small(*a, **kw):
@@ -35,11 +34,17 @@ def _asof_auto_small(*a, **kw):
     return asof_join_auto(*a, **kw)
 
 
+def _asof_all_hot(*a, **kw):
+    """auto router at its all-hot edge: every entity takes the bucketed
+    branch and the cold branch keeps only unmatched keys"""
+    return asof_join_auto(*a, hot_threshold=0, n_buckets=5, **kw)
+
+
 ASOF_IMPLS = {
     "window": asof_join,
-    "broadcast": asof_join_broadcast,
     "bucketed": _asof_bucketed_small,
     "auto": _asof_auto_small,
+    "all_hot": _asof_all_hot,
 }
 from kmertools_spark.oracle import composition_matrix
 from kmertools_spark.sources import synth_transcripts_pdf
@@ -121,7 +126,7 @@ def oracle_asof(pdf, probes):
     return exp
 
 
-@pytest.mark.parametrize("impl", ["window", "broadcast", "bucketed", "auto"])
+@pytest.mark.parametrize("impl", ["window", "bucketed", "auto", "all_hot"])
 def test_asof_join_strict_leakage_semantics(spark, tdf, impl):
     df, pdf = tdf
     probes = _probe_frame(pdf)
@@ -158,7 +163,7 @@ def test_asof_equal_ts_tiebreak_and_no_torn_rows(spark):
     probes = spark.createDataFrame(
         pd.DataFrame({"conv_id": ["c1"], "probe_ts": [ts + pd.Timedelta(hours=1)]})
     )
-    for impl in (asof_join, asof_join_broadcast, _asof_bucketed_small, _asof_auto_small):
+    for impl in ASOF_IMPLS.values():
         row = impl(feats, probes, value_cols=("turn_idx", "text", "tool")).first()
         assert row.asof_turn_idx == 5, impl.__name__
         assert row.asof_text == "CCCC", impl.__name__
@@ -166,14 +171,13 @@ def test_asof_equal_ts_tiebreak_and_no_torn_rows(spark):
 
 
 def test_asof_duplicate_probe_multiplicity(spark, tdf):
-    """Both asof plans must preserve duplicate probe rows with the same
-    multiplicity (r2 ADVICE item 3: the broadcast plan used to collapse
-    matched duplicates while keeping missed ones)."""
+    """Every asof plan must preserve duplicate probe rows with the same
+    multiplicity (r2 ADVICE item 3)."""
     df, pdf = tdf
     probes = _probe_frame(pdf)
     tripled = pd.concat([probes, probes.head(4), probes.head(4)])
     sp = spark.createDataFrame(tripled)
-    for impl in (asof_join, asof_join_broadcast, _asof_bucketed_small, _asof_auto_small):
+    for impl in ASOF_IMPLS.values():
         got = impl(df, sp, value_cols=("turn_idx",)).toPandas()
         assert len(got) == len(tripled), impl.__name__
         counts = got.groupby(["conv_id", "probe_ts"]).size()
@@ -184,9 +188,8 @@ def test_asof_duplicate_probe_multiplicity(spark, tdf):
 def test_asof_auto_skew_routing_equality(spark):
     """r3 VERDICT item 3: a whale entity must route through the
     bucketed within-entity plan and produce EXACTLY the window plan's
-    rows; the router must actually split hot from cold (both branches
-    exercised), and the bucketed window must partition by (entity,
-    bucket) — never by entity alone."""
+    rows, with and without a staleness bound (test_plan_shape pins the
+    routed plan's partitioning)."""
     rng = np.random.RandomState(11)
     base = pd.Timestamp("2024-01-01")
     rows = [
@@ -219,15 +222,6 @@ def test_asof_auto_skew_routing_equality(spark):
     want_t = norm(asof_join(fdf, pr, tolerance_ms=600_000))
     got_t = norm(asof_join_auto(fdf, pr, tolerance_ms=600_000, hot_threshold=1000))
     pd.testing.assert_frame_equal(want_t, got_t)
-    # the hot branch really is bucketed: its window partitions by
-    # (entity, bucket)
-    hot_plan = (
-        asof_join_bucketed(fdf.where("conv_id = 'whale'"), pr.where("conv_id = 'whale'"), n_buckets=16)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert "__b" in hot_plan
 
 
 def test_asof_zero_leakage_property(spark, tdf):
@@ -421,9 +415,25 @@ def test_backfill_auto_routes_and_matches_stream(spark, tdf):
     sizes = _routed_matches_stream(df, hot_threshold=8, n_turns=3, chunk=8)
     # sanity: the threshold really split the corpus (some conv is cold)
     assert (sizes["count"] <= 8).any()
+    # a NULL conv_id next to hot keys routes cold (skew.hot_key_split):
+    # its rows must come out, windowed as the plain stream windows them
+    hot_conv = sizes.sort_values("count")["conv_id"].iloc[-1]
+    nulls = df.where(F.col("conv_id") == hot_conv).limit(3).withColumn(
+        "conv_id", F.lit(None).cast("string")
+    )
+
+    def null_rows(d):
+        return d.where(F.col("conv_id").isNull()).toPandas().sort_values("turn_idx")
+
+    with_null = df.unionByName(nulls)
+    got = null_rows(backfill_features_auto(with_null, k=4, hot_threshold=8, chunk=8))
+    want = null_rows(backfill_features_stream(with_null, k=4))
+    assert len(got) == 3
+    assert got["turn_idx"].tolist() == want["turn_idx"].tolist()
+    assert np.allclose(np.vstack(got["roll_vec"]), np.vstack(want["roll_vec"]))
 
 
-@pytest.mark.parametrize("impl", ["window", "broadcast", "bucketed", "auto"])
+@pytest.mark.parametrize("impl", ["window", "bucketed", "auto", "all_hot"])
 def test_asof_join_tolerance_staleness(spark, impl):
     """tolerance_ms (merge_asof semantics): a probe whose latest
     preceding feature is older than the bound gets nulls; a fresh pick
@@ -467,7 +477,7 @@ def test_asof_join_tolerance_staleness(spark, impl):
     assert got_free["b"] == 0 and got_free["a"] == 1
 
 
-@pytest.mark.parametrize("impl", ["window", "broadcast", "bucketed", "auto"])
+@pytest.mark.parametrize("impl", ["window", "bucketed", "auto", "all_hot"])
 def test_asof_join_null_key_probes_survive(spark, impl):
     """A probe row with a NULL key (or NULL ts) must emit a null-valued
     output row in BOTH physical plans, not vanish (code-review r3)."""
@@ -494,10 +504,10 @@ def test_asof_join_null_key_probes_survive(spark, impl):
     assert ("zz", None) in got
 
 
-@pytest.mark.parametrize("impl", ["window", "broadcast", "bucketed", "auto"])
+@pytest.mark.parametrize("impl", ["window", "bucketed", "auto", "all_hot"])
 def test_asof_join_null_key_features_never_match(spark, impl):
     """A feature row with NULL key or NULL ts must never be picked —
-    equality joins (broadcast plan, SQL oracle) skip NULLs, so the
+    equality joins (the SQL oracle) skip NULLs, so the
     window plan must too (code-review r3 pass 2)."""
     import pandas as pd
 
@@ -559,7 +569,7 @@ def test_asof_bucketed_sub_millisecond_carry(spark):
     # probe@+500us sees only the +100us event (turn 5); probe@+100s
     # sees the +900us event (turn 1, the full-precision latest)
     assert [v for _, v in want] == [5, 1]
-    got_b = norm(asof_join_bucketed(feat, probes, n_buckets=4))
+    got_b = norm(_asof_bucketed(feat, probes, n_buckets=4))
     got_a = norm(asof_join_auto(feat, probes, hot_threshold=1, n_buckets=4))
     assert got_b == want
     assert got_a == want
