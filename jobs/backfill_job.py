@@ -66,11 +66,10 @@ def main() -> int:
                 "buckets_total": args.buckets,
                 "buckets_pending_before": pending_before,
                 "buckets_processed": len(done),
+                "rows_in": sum(e["rows_in"] for e in done),
                 "rows_out": rows,
                 "wall_sec": round(wall, 2),
-                "rows_per_sec": round(
-                    sum(e["rows_out"] for e in done) / max(wall, 1e-9), 1
-                ),
+                "rows_per_sec": round(rows / max(wall, 1e-9), 1),
             }
         )
     )

@@ -1,7 +1,10 @@
 """Vectorized composition-vector and coverage UDF builders.
 
-Each builder returns a pandas UDF (Arrow-batched; no per-row Python)
-wrapping the numpy oracle kernels. Executor-side constants (perfect-hash
+Each builder returns an Arrow UDF wrapping the numpy oracle kernels: a
+batch of texts in, one list<double> array built on the kernel matrix's
+flat buffer out (``vector_array``). A pandas UDF cannot do this: its
+serializer converts every ArrayType value to a Python list, even from
+an Arrow-backed Series. Executor-side constants (perfect-hash
 pos maps) are built lazily per python worker and cached — they depend
 only on k, so no broadcast traffic is needed.
 
@@ -14,8 +17,8 @@ from __future__ import annotations
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, DoubleType
 
 from ..oracle.codec import kmer_pos_maps
@@ -31,6 +34,18 @@ def _pos_map(k: int):
 # keyed by a build-time uuid, surviving across tasks (the whole point —
 # a closure dict resets per task)
 _LOOKUP_CACHE: dict[str, "SortedCountLookup"] = {}
+
+
+def vector_array(mat: np.ndarray) -> pa.ListArray:
+    """(rows x width) float64 matrix -> Arrow list<double> array over the
+    matrix's own flat buffer, with no per-row Python object (the CGR
+    column is built the same way, cgr._points_series). Offsets are int32,
+    as Spark's ArrayType expects; a batch past 2^31 values raises instead
+    of wrapping."""
+    n, w = mat.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int64) * w, type=pa.int32())
+    flat = np.ascontiguousarray(mat, dtype=np.float64).reshape(-1)
+    return pa.ListArray.from_arrays(offsets, pa.array(flat))
 
 
 def vector_header(k: int, canonical: bool = True) -> list[str]:
@@ -60,13 +75,13 @@ def composition_vector(
     norm: bool = True,
     binding_quirk: bool = False,
 ):
-    """pandas UDF: text column -> ArrayType(Double) composition vector."""
+    """Arrow UDF: text column -> ArrayType(Double) composition vector."""
 
-    @pandas_udf(ArrayType(DoubleType()))
-    def _udf(texts: pd.Series) -> pd.Series:
+    @arrow_udf(ArrayType(DoubleType()))
+    def _udf(texts: pa.Array) -> pa.Array:
         pos_map, _, kcount = _pos_map(k) if canonical else (None, None, None)
         mat = composition_matrix(
-            texts.tolist(),
+            texts.to_pylist(),
             k,
             canonical=canonical,
             norm=norm,
@@ -74,7 +89,7 @@ def composition_vector(
             kcount=kcount,
             binding_quirk=binding_quirk,
         )
-        return pd.Series(list(mat))
+        return vector_array(mat)
 
     return _udf
 
@@ -88,7 +103,7 @@ def coverage_vector(
     norm: bool = True,
     spark=None,
 ):
-    """pandas UDF: text -> coverage histogram against a global count table.
+    """Arrow UDF: text -> coverage histogram against a global count table.
 
     The count table ships to executors as a Spark broadcast when a
     session is given (J1/X10: broadcast hash lookup, the scale analog of
@@ -115,8 +130,8 @@ def coverage_vector(
     # caching the old closure never delivered)
     cache_key = uuid.uuid4().hex
 
-    @pandas_udf(ArrayType(DoubleType()))
-    def _udf(texts: pd.Series) -> pd.Series:
+    @arrow_udf(ArrayType(DoubleType()))
+    def _udf(texts: pa.Array) -> pa.Array:
         lk = _LOOKUP_CACHE.get(cache_key)
         if lk is None:
             kk, vv = bc.value if bc is not None else payload
@@ -125,8 +140,8 @@ def coverage_vector(
                 _LOOKUP_CACHE.pop(next(iter(_LOOKUP_CACHE)))
             _LOOKUP_CACHE[cache_key] = lk
         mat = coverage_matrix(
-            texts.tolist(), k, lk, bin_size, bin_count, norm=norm
+            texts.to_pylist(), k, lk, bin_size, bin_count, norm=norm
         )
-        return pd.Series(list(mat))
+        return vector_array(mat)
 
     return _udf

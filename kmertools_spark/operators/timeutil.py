@@ -19,14 +19,15 @@ def epoch_ms(col: Column | str) -> Column:
 
 
 def guard_null_ts(series, op: str) -> None:
-    """Raise if a pandas ts column (datetime64 or epoch-ms float) has
-    NULLs: numpy's int64 cast silently turns NaT/NaN into INT64_MIN,
-    which wraps subtractions and breaks sorted preconditions — the
-    windows come out silently wrong, not erroneous. ONE shared guard so
-    every pandas window kernel defends identically (code-review r5: the
-    guard existed only in backfill_features_stream; the time-mode batch
-    kernel and the stateful streaming kernel returned garbage)."""
-    if series.isna().any():
+    """Raise if a ts column — a pandas Series (datetime64 or epoch-ms
+    float) or an Arrow array — has NULLs: numpy's int64 cast silently
+    turns NaT/NaN into INT64_MIN, which wraps subtractions and breaks
+    sorted preconditions — the windows come out silently wrong, not
+    erroneous. ONE shared guard so every window kernel defends
+    identically (code-review r5: the guard existed only in
+    backfill_features_stream; the time-mode batch kernel and the
+    stateful streaming kernel returned garbage)."""
+    if series.null_count if hasattr(series, "null_count") else series.isna().any():
         raise ValueError(
             f"{op}: NULL ts encountered — an int64 cast would silently "
             "turn it into INT64_MIN and corrupt session/time windows; "

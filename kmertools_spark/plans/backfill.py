@@ -8,6 +8,19 @@ manifest entry (bucket, rows_in, rows_out, checksum, wall_ms,
 finished_at). Resume = skip buckets whose manifest entry exists — the
 anti-join of pending work against committed lineage.
 
+A bucket costs one write and no other pass over its data: the manifest's
+numbers are observed metrics (``DataFrame.observe``) of the write's own
+jobs. ``rows_in`` counts the bucket's source rows where they enter
+``feature_fn``; ``rows_out`` and ``checksum`` (bit_xor of xxhash64 over
+the output's own columns, 0 for an empty bucket) count the rows handed
+to the parquet writer, so they equal a fresh scan of ``bucket=<b>``. A
+failed task attempt's metrics are discarded. ``rows_out`` and
+``checksum`` are counted once per result partition. ``rows_in`` is
+observed in a shuffle-map stage when ``feature_fn`` shuffles, so it can
+overcount only if a lost shuffle file forces that stage to re-run. When
+``feature_fn`` runs its own action on its input first (a hot-key sizing
+pass), ``rows_in`` comes from that action, which reads the same rows.
+
 Scale notes: on a real cluster each bucket is a partition-pruned read
 (`pmod(xxhash64(conv_id), n)`) over an Iceberg/parquet table bucketed by
 conv_id, so a bucket touches only its files; the manifest doubles as the
@@ -19,13 +32,24 @@ from __future__ import annotations
 import json
 import os
 import time
+import warnings
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 def bucket_of(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
+
+def _observed(obs: Observation) -> dict:
+    """An observation's metrics, or ``rows`` 0 and ``h`` None when Spark
+    dropped the observation from a plan it proved empty (an empty bucket
+    of an in-memory source does this): it then reports an empty row,
+    which ``Observation.get`` cannot convert."""
+    if obs._jo.getRow().length() == 0:
+        return {"rows": 0, "h": None}
+    return obs.get
 
 
 def default_feature_fn(df: DataFrame) -> DataFrame:
@@ -54,12 +78,25 @@ class BackfillDriver:
     # ------------------------------------------------------------ lineage
 
     def committed(self) -> dict[int, dict]:
+        """Manifest entries by bucket. An entry that cannot be read (not
+        JSON, or without its ``bucket`` key) counts as not committed, so
+        the next ``run`` re-runs that bucket and overwrites it; each one
+        issues a RuntimeWarning naming the file."""
         out = {}
         for name in os.listdir(self.manifest_dir):
             if name.startswith("bucket_") and name.endswith(".json"):
-                with open(os.path.join(self.manifest_dir, name)) as f:
-                    e = json.load(f)
-                out[e["bucket"]] = e
+                path = os.path.join(self.manifest_dir, name)
+                try:
+                    with open(path) as f:
+                        e = json.load(f)
+                    out[e["bucket"]] = e
+                except (ValueError, KeyError, TypeError) as err:
+                    warnings.warn(
+                        f"BackfillDriver: unreadable manifest entry {path} "
+                        f"({err!r}); its bucket is pending again",
+                        RuntimeWarning,
+                        stacklevel=2,
+                    )
         return out
 
     def pending(self) -> list[int]:
@@ -78,27 +115,31 @@ class BackfillDriver:
 
     def run_bucket(self, df: DataFrame, bucket: int) -> dict:
         t0 = time.time()
-        part = df.where(bucket_of(self.n_buckets) == bucket)
-        rows_in = part.count()
+        seen_in, seen_out = Observation(), Observation()
+        part = df.where(bucket_of(self.n_buckets) == bucket).observe(
+            seen_in, F.count(F.lit(1)).alias("rows")
+        )
         feat = self.feature_fn(part)
-        out_path = os.path.join(self.out_dir, f"bucket={bucket}")
-        feat.write.mode("overwrite").parquet(out_path)
-        written = df.sparkSession.read.parquet(out_path)
-        rows_out = written.count()
         # checksum over the feature output's OWN columns: feature_fn is
         # pluggable, and hardcoding (conv_id, turn_idx) crashed AFTER
         # the expensive write but BEFORE the manifest commit for any
         # schema without them — every resume then re-wrote and
         # re-crashed (code-review r4)
-        checksum = written.select(
-            F.xxhash64(*written.columns).alias("__h")
-        ).agg(F.expr("bit_xor(__h)").alias("h")).first()["h"]
+        feat = feat.observe(
+            seen_out,
+            F.count(F.lit(1)).alias("rows"),
+            F.bit_xor(F.xxhash64(*[feat[c] for c in feat.columns])).alias("h"),
+        )
+        feat.write.mode("overwrite").parquet(
+            os.path.join(self.out_dir, f"bucket={bucket}")
+        )
+        out = _observed(seen_out)
         entry = {
             "bucket": bucket,
             "n_buckets": self.n_buckets,
-            "rows_in": rows_in,
-            "rows_out": rows_out,
-            "checksum": int(checksum or 0),
+            "rows_in": _observed(seen_in)["rows"],
+            "rows_out": out["rows"],
+            "checksum": out["h"] or 0,
             "wall_ms": int((time.time() - t0) * 1000),
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from kmertools_spark.plans import BackfillDriver
+from kmertools_spark.plans import BackfillDriver, bucket_of, default_feature_fn
 from kmertools_spark.sources import synth_transcripts_pdf
 from kmertools_spark.sources.multimodal import frame_sample, media_features, synth_media
 
@@ -59,6 +59,173 @@ def test_backfill_rerun_is_noop(spark, tdf, tmp_path):
     d.run(tdf)
     again = d.run(tdf)
     assert again == []
+
+
+def _drop_odd_turns(df):
+    return default_feature_fn(df).where(F.col("turn_idx") % 2 == 0)
+
+
+def _join_input_back(df):
+    return default_feature_fn(df).join(
+        df.select("conv_id", "turn_idx"), ["conv_id", "turn_idx"]
+    )
+
+
+def _auto_tiny_hot(df):
+    from kmertools_spark.operators import backfill_features_auto
+
+    return backfill_features_auto(df, hot_threshold=2, chunk=2)
+
+
+@pytest.fixture(scope="module")
+def few_convs(spark):
+    # 4 conversations in 6 buckets: at least two buckets are empty
+    return spark.createDataFrame(
+        synth_transcripts_pdf(n_convs=4, mean_turns=5, seed=11)
+    )
+
+
+@pytest.mark.parametrize(
+    "feature_fn",
+    [None, _drop_odd_turns, _join_input_back, _auto_tiny_hot],
+    ids=["default", "drop_rows", "self_join", "auto_tiny_hot"],
+)
+def test_manifest_equals_fresh_scan(spark, few_convs, tmp_path, feature_fn):
+    """Each manifest entry's rows_out and checksum equal a fresh
+    bit_xor(xxhash64(cols)) scan of bucket=<b>, and rows_in the bucket's
+    source rows — for feature_fns that drop rows, join their input back,
+    or run their own action on the input first (the hot-key sizing pass
+    of backfill_features_auto) — and an empty bucket commits 0 rows and
+    checksum 0."""
+    n = 6
+    d = BackfillDriver(str(tmp_path / "m"), n_buckets=n, feature_fn=feature_fn)
+    entries = {e["bucket"]: e for e in d.run(few_convs)}
+    assert sorted(entries) == list(range(n))
+    rows_in = dict(
+        few_convs.groupBy(bucket_of(n).alias("b")).count().collect()
+    )
+    assert len(rows_in) < n  # the empty-bucket case is exercised
+    for b, e in entries.items():
+        w = spark.read.parquet(str(tmp_path / "m" / f"bucket={b}"))
+        r = w.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.coalesce(F.bit_xor(F.xxhash64(*w.columns)), F.lit(0)).alias("h"),
+        ).first()
+        assert (e["rows_out"], e["checksum"]) == (r["rows"], r["h"]), b
+        assert e["rows_in"] == rows_in.get(b, 0), b
+        if b not in rows_in:
+            assert (e["rows_out"], e["checksum"]) == (0, 0)
+    if feature_fn is _drop_odd_turns:
+        assert any(e["rows_out"] < e["rows_in"] for e in entries.values())
+    else:
+        assert all(e["rows_out"] == e["rows_in"] for e in entries.values())
+
+
+def test_run_bucket_launches_at_most_two_jobs(spark, tdf, tmp_path):
+    """The write is the bucket's only pass: its shuffle-map stage and its
+    result stage, no count, re-read or checksum job."""
+    sc = spark.sparkContext
+    d = BackfillDriver(str(tmp_path / "jobs"), n_buckets=3)
+    try:
+        for b in range(3):
+            group = f"run_bucket_jobs_{b}"
+            sc.setJobGroup(group, group)
+            assert d.run_bucket(tdf, b)["rows_out"] > 0
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert 1 <= len(jobs) <= 2, (b, jobs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_corrupt_bucket_resume_reruns_exactly_those(spark, tdf, tmp_path):
+    """A deleted manifest entry and an unreadable one are both pending on
+    the next run, which re-runs exactly those buckets with the same rows
+    and checksums; the other buckets are left alone."""
+    out = tmp_path / "corrupt"
+    first = {e["bucket"]: e for e in BackfillDriver(str(out), n_buckets=4).run(tdf)}
+    manifest = out / "_manifest"
+    os.remove(manifest / "bucket_1.json")
+    (manifest / "bucket_2.json").write_text('{"bucket": 2, "rows_in"')
+    d = BackfillDriver(str(out), n_buckets=4)
+    with pytest.warns(RuntimeWarning, match="bucket_2.json"):
+        assert d.pending() == [1, 2]
+    with pytest.warns(RuntimeWarning, match="bucket_2.json"):
+        again = d.run(tdf)
+    assert [e["bucket"] for e in again] == [1, 2]
+    for e in again:
+        want = first[e["bucket"]]
+        assert (e["rows_in"], e["rows_out"], e["checksum"]) == (
+            want["rows_in"], want["rows_out"], want["checksum"]
+        )
+    assert d.metrics() == [first[0], *again, first[3]]
+
+
+_RETRY_SCRIPT = r"""
+import json, os, sys
+from pyspark import TaskContext
+from kmertools_spark.plans import BackfillDriver, default_feature_fn
+from kmertools_spark.session import get_spark
+from kmertools_spark.sources import synth_transcripts_pdf
+
+work = sys.argv[1]
+marker = os.path.join(work, "injected")
+spark = get_spark("retry", master="local[2,2]", shuffle_partitions=2,
+                  extra_conf={"spark.driver.memory": "1g"})
+src = os.path.join(work, "src")
+pdf = synth_transcripts_pdf(n_convs=12, mean_turns=6, seed=5)
+spark.createDataFrame(pdf).write.parquet(src)
+turns = spark.read.parquet(src)
+
+
+def first_attempt_fails(df):
+    # passes every batch on, then fails partition 0's first attempt: the
+    # rows it passed are in that attempt's metrics, which must be dropped
+    def gen(batches):
+        ctx = TaskContext.get()
+        yield from batches
+        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            with open(marker, "a") as f:
+                f.write(f"{ctx.stageId()}\n")
+            raise RuntimeError("injected first-attempt failure")
+    return df.mapInArrow(gen, df.schema)
+
+
+def flaky(df):
+    return first_attempt_fails(default_feature_fn(first_attempt_fails(df)))
+
+
+runs = {}
+for name, fn in (("clean", None), ("flaky", flaky)):
+    d = BackfillDriver(os.path.join(work, name), n_buckets=3, feature_fn=fn)
+    runs[name] = [
+        [e["bucket"], e["rows_in"], e["rows_out"], e["checksum"]] for e in d.run(turns)
+    ]
+spark.stop()
+with open(marker) as f:
+    runs["injected"] = len(f.read().split())
+print(json.dumps(runs))
+"""
+
+
+def test_backfill_retry_gives_same_manifest(tmp_path):
+    """Task retries at local[2,2] (one retry allowed per task) give the
+    manifest of a clean run: the failed attempts' observed rows and
+    checksums are not counted."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo)
+    r = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(tmp_path)],
+        capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path),
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    runs = json.loads(r.stdout.strip().splitlines()[-1])
+    assert runs["injected"] >= 3  # a failure in both stages of some buckets
+    assert runs["flaky"] == runs["clean"]
+    assert sum(e[1] for e in runs["clean"]) == sum(e[2] for e in runs["clean"]) > 0
 
 
 def test_streaming_sessionize_available_now(spark, tdf, tmp_path):

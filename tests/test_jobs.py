@@ -62,3 +62,32 @@ def test_prep_job_end_to_end(tmp_path):
     assert summary["tokens"] > (summary["windows"] - 1) * 256
     assert summary["tokens"] <= summary["windows"] * 256
     assert (out / "bin_bucket=0").exists()
+
+
+def test_backfill_job_end_to_end(spark, tmp_path):
+    from kmertools_spark.sources import transcripts_df
+
+    turns = transcripts_df(spark, "/root/testdata/sf0.001").count()
+    out = tmp_path / "features"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "jobs", "backfill_job.py"),
+            "--input", "/root/testdata/sf0.001",
+            "--output", str(out),
+            "--buckets", "4",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+        cwd=str(tmp_path),
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    summary = json.loads(r.stdout.strip().splitlines()[-1])
+    assert summary["buckets_processed"] == 4
+    assert summary["rows_in"] == summary["rows_out"] == turns > 0
+    assert sorted(os.listdir(out / "_manifest")) == [
+        f"bucket_{b}.json" for b in range(4)
+    ]
