@@ -228,10 +228,10 @@ def q13_asof(spark, sf_dir):
 
 def q53_asof_bucketed(spark, sf_dir):
     """q13's semantics through the router's all-hot edge:
-    hot_threshold=0 sends every entity down the bucketed hot branch
-    (analytic time buckets + per-bucket last-event carry, window per
-    (entity, bucket)) and leaves the cold branch empty; the oracle is
-    identical to q13's. q56 covers the mixed split."""
+    hot_threshold=0 buckets every entity by time (analytic time buckets
+    + per-bucket last-event carry, window per (entity, bucket)); only
+    unmatched probe keys stay in bucket 0. The oracle is identical to
+    q13's. q56 covers the mixed split."""
     from kmertools_spark.operators import asof_join_auto
     from kmertools_spark.sources import probes_df
 
@@ -280,10 +280,10 @@ def q55_vocab_pack(spark, sf_dir):
 
 def q56_asof_auto(spark, sf_dir):
     """The skew ROUTER under the gate: hot_threshold low enough that
-    real conversations split across both branches (hot entities take
-    the bucketed plan, cold the window plan, outputs unioned) — the
-    oracle is q13's, so the gate proves the routed union reproduces the
-    single-plan rows exactly."""
+    real conversations split (hot entities spread over time buckets,
+    cold ones in bucket 0 of the same window) — the oracle is q13's, so
+    the gate proves the routed plan reproduces the single-plan rows
+    exactly."""
     from kmertools_spark.operators import asof_join_auto
     from kmertools_spark.sources import probes_df
 
@@ -812,7 +812,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # — q53_asof_bucketed and q56_asof_auto deliberately share q13's
     # oracle (same semantics through asof_join_auto: q53 routes every
     # entity hot, q56 splits hot from cold; both gated so the driver
-    # exercises the window plan, the bucketed branch and their union);
+    # exercises the window plan and the bucketed plan, all hot and mixed);
     # every unique semantic in the registry is driver-gated. The tail is
     # purely alternate physical plans of gated oracles (q30<-q10,
     # q40<-q15, q44<-q20). Adding query #51+ with a NEW oracle has two

@@ -9,15 +9,15 @@ on the driver):
 
 Three physical plans over each:
 
-  window    asof_join — one exchange + per-entity window sort (the
-            winner on uniform data; a giant entity's sort serializes on
-            one task)
-  bucketed  _asof_bucketed (auto's hot branch alone) — analytic time
-            buckets + per-bucket last-event carry, so a giant entity
-            spreads over n_buckets parallel sorts at the cost of the
-            tiny stats/carry jobs
-  auto      asof_join_auto — routes hot entities to the bucketed plan
-            and everything else to the window plan
+  window    asof_join — one exchange + per-entity window sort (a
+            giant entity's sort serializes on one task)
+  bucketed  asof_join_auto(hot_threshold=0) — every entity is hot:
+            analytic time buckets + per-bucket last-event carry, so a
+            giant entity spreads over n_buckets parallel sorts at the
+            cost of one driver row per entity from the sizing pass
+  auto      asof_join_auto — one window over (entity, time bucket):
+            hot entities bucketed, the others in bucket 0; asof_join
+            itself when no entity is hot
 
 Probes are 1-per-50-events, derived JVM-side from the same id space.
 Prints ONE JSON line; recorded in BENCH/BASELINE.md.
@@ -45,7 +45,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from kmertools_spark.operators import asof_join, asof_join_auto
-    from kmertools_spark.operators.asof import _asof_bucketed
     from kmertools_spark.session import get_spark
 
     spark = get_spark(
@@ -94,8 +93,12 @@ def main() -> None:
 
     plans = {
         "window": lambda f, p: asof_join(f, p, value_cols=("turn_idx",)),
-        "bucketed": lambda f, p: _asof_bucketed(
-            f, p, value_cols=("turn_idx",), n_buckets=max(64, 4 * cpus)
+        "bucketed": lambda f, p: asof_join_auto(
+            f,
+            p,
+            value_cols=("turn_idx",),
+            hot_threshold=0,
+            n_buckets=max(64, 4 * cpus),
         ),
         "auto": lambda f, p: asof_join_auto(
             f,
@@ -109,18 +112,17 @@ def main() -> None:
     # ONE shared full-column forcing recipe (code-review r4 finding 6)
     from bench import force_cols
 
-    # run both auto branches once before timing, so no timed plan pays
-    # their first execution: on a 1,024-row slice, entities keeping all
-    # 10 events are hot at threshold 5 and those cut to 5 stay cold
-    warm = uniform.limit(1024).where(
-        (F.col("turn_idx") < 5) | (F.pmod(F.xxhash64("conv_id"), F.lit(2)) == 0)
-    )
+    # run both plan shapes once before timing, so no timed plan pays
+    # their first execution: asof_join, and asof_join_auto with every
+    # entity of a 1,024-row slice hot
+    warm = uniform.limit(1024)
     warm_pr = warm.select(
         "conv_id", (F.col("ts") + F.expr("INTERVAL 30 SECONDS")).alias("probe_ts")
     )
+    force_cols(asof_join(warm, warm_pr, value_cols=("turn_idx",)))
     force_cols(
         asof_join_auto(
-            warm, warm_pr, value_cols=("turn_idx",), hot_threshold=5, n_buckets=4
+            warm, warm_pr, value_cols=("turn_idx",), hot_threshold=0, n_buckets=4
         )
     )
 

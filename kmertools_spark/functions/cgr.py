@@ -9,7 +9,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -23,17 +23,15 @@ from ..oracle.kernels import cgr_batch
 _POINT = StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])
 
 
-def _points_series(trs: list[np.ndarray | None]) -> pd.Series:
-    """Batch list of (L, 2) trajectories -> an Arrow-backed pandas
-    Series of list<struct<x,y>> built from the flat float buffers.
+def _points_array(trs: list[np.ndarray | None]) -> pa.ListArray:
+    """Batch list of (L, 2) trajectories -> an Arrow list<struct<x,y>>
+    array built from the flat float buffers, with no per-point Python
+    object (a null trajectory is a null element).
 
-    The old path materialized one python dict PER POINT ({'x':…,'y':…}
-    — ~300 per row, tens of millions per pass) and let pyarrow walk the
-    object graph; this builds the ListArray/StructArray directly from
-    the concatenated kernel output (zero per-point python objects) and
-    hands Spark's serializer an ArrowDtype series it can pass through.
-    Measured: 1.28s -> 0.02s per 4096-row batch, values bit-identical
-    (spark_optimization_guide §4.2)."""
+    Returned straight from an Arrow UDF it crosses the boundary as is. A
+    pandas UDF return (even an ArrowDtype Series) goes through pyspark's
+    per-value ArrayType/StructType converter: 296 ms per 1,024 rows of
+    150 points, against 4.3 ms to build this array."""
     n = len(trs)
     lens = np.fromiter(
         (0 if tr is None else tr.shape[0] for tr in trs), dtype=np.int64, count=n
@@ -57,16 +55,15 @@ def _points_series(trs: list[np.ndarray | None]) -> pd.Series:
     for i, tr in enumerate(trs):
         mask[i] = tr is None
     offs = pa.array(off.astype(np.int32), mask=mask)
-    arr = pa.ListArray.from_arrays(offs, struct)
-    return pd.Series(arr, dtype=pd.ArrowDtype(arr.type))
+    return pa.ListArray.from_arrays(offs, struct)
 
 
 def cgr_points(vecsize: float = 1.0):
-    """pandas UDF: text -> array<struct<x,y>> CGR walk (null on OOV)."""
+    """Arrow UDF: text -> array<struct<x,y>> CGR walk (null on OOV)."""
 
-    @pandas_udf(ArrayType(_POINT))
-    def _udf(texts: pd.Series) -> pd.Series:
-        return _points_series(cgr_batch(texts.tolist(), vecsize))
+    @arrow_udf(ArrayType(_POINT))
+    def _udf(texts: pa.Array) -> pa.Array:
+        return _points_array(cgr_batch(texts.to_pylist(), vecsize))
 
     return _udf
 

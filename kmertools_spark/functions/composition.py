@@ -39,7 +39,7 @@ _LOOKUP_CACHE: dict[str, "SortedCountLookup"] = {}
 def vector_array(mat: np.ndarray) -> pa.ListArray:
     """(rows x width) float64 matrix -> Arrow list<double> array over the
     matrix's own flat buffer, with no per-row Python object (the CGR
-    column is built the same way, cgr._points_series). Offsets are int32,
+    column is built the same way, cgr._points_array). Offsets are int32,
     as Spark's ArrayType expects; a batch past 2^31 values raises instead
     of wrapping."""
     n, w = mat.shape

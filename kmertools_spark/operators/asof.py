@@ -9,18 +9,29 @@ Leakage guarantee (structural): a probe at ``probe_ts`` sees only rows
 with ``ts < probe_ts`` — at equal timestamps the probe sorts BEFORE the
 feature row, so same-instant features are excluded (strict <).
 
-Two public plans: ``asof_join`` (one shuffle on the entity key
-co-partitions probes and features; AQE handles mild skew) and the skew
-router ``asof_join_auto``, whose hot branch ``_asof_bucketed`` splits a
-whale entity into analytic time buckets.
+One plan shape. ``asof_join`` runs the window partitioned by the entity
+key (one shuffle; AQE handles mild skew). The skew router
+``asof_join_auto`` runs the same window partitioned by (entity, time
+bucket): cold entities all sit in bucket 0, a hot entity's rows spread
+over ``n_buckets`` analytic time buckets, and each bucket's carry-in
+(the latest event of the entity's earlier buckets) is joined back to
+its probes by broadcast.
+
+Evaluations of ``features``: ``asof_join`` reads it once. When a key is
+hot, ``asof_join_auto`` reads it 3 times: the sizing pass, the window
+input and the carry aggregate. Spark does not reuse an exchange above a
+mapInArrow/mapInPandas, so both consumers of the shuffled union
+recompute the caller's frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from .skew import hot_key_split
+from .skew import hot_keys
+from .timeutil import epoch_ms
 
 _EV = "__is_event"
 
@@ -33,9 +44,9 @@ def _union_marker(
     probe_ts_col: str,
     value_cols: tuple[str, ...],
 ) -> DataFrame:
-    """Shared probe/feature union for the window and bucketed plans:
-    one struct payload per feature row (atomic pick), probes carry a
-    NULL payload and sort before same-ts events (strict '<')."""
+    """Probe/feature union: one struct payload per feature row (atomic
+    pick), probes carry a NULL payload and sort before same-ts events
+    (strict '<')."""
     ord_col = (
         F.col("turn_idx").cast("long")
         if "turn_idx" in features.columns
@@ -67,43 +78,36 @@ def _probe_output(
     probe_ts_col: str,
     value_cols: tuple[str, ...],
     tolerance_ms: int | None,
-    tms: Column | None = None,
+    carry: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared pick + projection: last non-null payload strictly before
-    the probe (the window already excludes the current row), optional
+    """Pick + projection: last non-null payload strictly before the probe
+    in its window partition (the frame excludes the current row), else
+    the partition's ``carry`` row (joined on (on, __b)); optional
     staleness nulling via the picked row's own event time."""
-    picked = F.last("__payload", ignorenulls=True).over(w).alias("__picked")
+    tms = epoch_ms("__t")
+    picks = [F.last("__payload", ignorenulls=True).over(w).alias("__picked")]
     if tolerance_ms is not None:
-        from .timeutil import epoch_ms
-
-        if tms is None:
-            tms = epoch_ms("__t")
-        picked_tms = F.last(
-            F.when(F.col(_EV) == 1, tms), ignorenulls=True
-        ).over(w)
-        out = (
-            u.select(on, "__t", _EV, picked, picked_tms.alias("__picked_tms"))
-            .where(F.col(_EV) == 0)
-            .withColumn(
-                "__fresh",
-                F.col("__picked_tms") >= epoch_ms("__t") - F.lit(tolerance_ms),
-            )
+        picks.append(
+            F.last(F.when(F.col(_EV) == 1, tms), ignorenulls=True)
+            .over(w)
+            .alias("__picked_tms")
         )
-        return out.select(
-            on,
-            F.col("__t").alias(probe_ts_col),
-            *[
-                F.when(F.col("__fresh"), F.col(f"__picked.asof_{c}")).alias(
-                    f"asof_{c}"
-                )
-                for c in value_cols
-            ],
-        )
-    out = u.select(on, "__t", _EV, picked).where(F.col(_EV) == 0)
+    part = [on, "__t"] if carry is None else [on, "__t", "__b"]
+    out = u.select(*part, _EV, *picks).where(F.col(_EV) == 0)
+    picked = F.col("__picked")
+    picked_tms = F.col("__picked_tms")
+    if carry is not None:
+        out = out.join(F.broadcast(carry), [on, "__b"], "left")
+        picked = F.coalesce(picked, F.col("__c.__payload"))
+        picked_tms = F.coalesce(picked_tms, F.col("__c.__tms"))
+    vals = [picked[f"asof_{c}"] for c in value_cols]
+    if tolerance_ms is not None:
+        fresh = picked_tms >= tms - F.lit(tolerance_ms)
+        vals = [F.when(fresh, v) for v in vals]
     return out.select(
         on,
         F.col("__t").alias(probe_ts_col),
-        *[F.col(f"__picked.asof_{c}").alias(f"asof_{c}") for c in value_cols],
+        *[v.alias(f"asof_{c}") for v, c in zip(vals, value_cols)],
     )
 
 
@@ -144,107 +148,6 @@ def asof_join(
     return _probe_output(u, w, on, probe_ts_col, value_cols, tolerance_ms)
 
 
-def _asof_bucketed(
-    features: DataFrame,
-    probes: DataFrame,
-    on: str = "conv_id",
-    ts_col: str = "ts",
-    probe_ts_col: str = "probe_ts",
-    value_cols: tuple[str, ...] = ("turn_idx",),
-    tolerance_ms: int | None = None,
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Hot-entity as-of plan: parallelize WITHIN an entity (r3 VERDICT
-    item 3). asof_join's window partitions by entity only, so a
-    10^6-event entity serializes onto a single task's sort — the same
-    straggler shape backfill_features_auto routes around.
-
-    Plan (the distributed-prefix shape of operators/rolling and
-    packing):
-      1. one tiny agg per entity: (min, max) event/probe time;
-      2. every row gets a time bucket computed ANALYTICALLY from its
-         timestamp — floor((tms - lo) * B / span) — monotone in ts, so
-         bucket boundaries never split an instant and no sampled range
-         partitioner is involved;
-      3. per-(entity, bucket) agg picks the bucket's LAST event (max
-         (tms, ord) struct — the same tie order as the window plan);
-      4. a per-entity window over the <=B per-bucket aggregates (tiny:
-         B rows per entity) turns them into an exclusive prefix —
-         bucket k's carry-in is the latest event of buckets < k,
-         keeping its ORIGINAL event time (so staleness still measures
-         against real event age);
-      5. the carry-in is unioned into its bucket as a pseudo-event that
-         sorts first (its ms is strictly below the bucket's — equal ms
-         implies equal bucket), and the usual union-marker window runs
-         partitioned by (entity, bucket): O(n/B log n/B) per task.
-
-    Equality with asof_join is property-tested (ties, tolerance, NULL
-    probes). The per-entity (lo, hi) row is broadcast-joined: the router
-    sends only a handful of hot entities here.
-    """
-    from .timeutil import epoch_ms
-
-    u = _union_marker(features, probes, on, ts_col, probe_ts_col, value_cols)
-    u = u.withColumn("__tms", epoch_ms("__t"))
-    B = int(n_buckets)
-    stats = F.broadcast(
-        u.groupBy(on).agg(F.min("__tms").alias("__lo"), F.max("__tms").alias("__hi"))
-    )
-    u2 = u.join(stats, on, "left").withColumn(
-        "__b",
-        F.expr(f"(__tms - __lo) * {B} div (__hi - __lo + 1)"),
-    )
-    # order by FULL-precision __t (then ord) — the window plan's event
-    # order; ms-truncated __tms alone would mis-pick between two events
-    # inside one millisecond (code-review r4 finding 3). __tms rides
-    # along for the tolerance check. max_by keeps __payload OUT of the
-    # comparison key (r4 ADVICE): a full (ts, ord) tie is unspecified in
-    # BOTH plans (the window plan takes whichever sorted last), but the
-    # payload must not bias which row this plan picks.
-    last_ev = F.max_by(
-        F.struct("__t", "__ord", "__tms", "__payload"),
-        F.when(F.col(_EV) == 1, F.struct("__t", "__ord")),
-    ).alias("__lastev")
-    bstats = u2.groupBy(on, "__b").agg(last_ev)
-    wcarry = (
-        Window.partitionBy(on)
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = (
-        bstats.select(
-            on,
-            "__b",
-            F.last("__lastev", ignorenulls=True).over(wcarry).alias("__c"),
-        )
-        .where(F.col("__c").isNotNull())
-        .select(
-            F.col(on),
-            F.col("__b"),
-            F.col("__c.__t").alias("__t"),
-            F.col("__c.__tms").alias("__tms"),
-            F.lit(1).alias(_EV),
-            F.col("__c.__ord").alias("__ord"),
-            F.col("__c.__payload").alias("__payload"),
-        )
-    )
-    u3 = u2.select(
-        on, "__b", "__t", "__tms", _EV, "__ord", "__payload"
-    ).unionByName(carry)
-    # __t after __tms keeps sub-ms event order identical to the window
-    # plan (epoch ms truncates microseconds); the carry pseudo-event
-    # keeps its ORIGINAL full-precision __t and can never tie a real
-    # row on __tms (equal ms => same bucket), so it always sorts first
-    w = (
-        Window.partitionBy(on, "__b")
-        .orderBy("__tms", "__t", _EV, "__ord")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return _probe_output(
-        u3, w, on, probe_ts_col, value_cols, tolerance_ms, tms=F.col("__tms")
-    )
-
-
 def asof_join_auto(
     features: DataFrame,
     probes: DataFrame,
@@ -256,28 +159,90 @@ def asof_join_auto(
     hot_threshold: int = 65536,
     n_buckets: int = 256,
 ) -> DataFrame:
-    """Skew-routing as-of join, mirroring backfill_features_auto: cold
-    entities (<= hot_threshold feature rows) take the one-window
-    asof_join; hot entities take the bucketed within-entity plan, so no
-    single task ever sorts a whale conversation. The hot/cold split is
-    ``skew.hot_key_split`` over the feature rows (NULL keys route cold).
-    BENCH/BASELINE.md holds the measured crossover (bench_skew_asof.py)."""
-    is_hot = hot_key_split(features, on, hot_threshold)
-    args = dict(
-        on=on,
-        ts_col=ts_col,
-        probe_ts_col=probe_ts_col,
-        value_cols=value_cols,
-        tolerance_ms=tolerance_ms,
-    )
-    if is_hot is None:
-        return asof_join(features, probes, **args)
-    cold = asof_join(features.where(~is_hot), probes.where(~is_hot), **args)
-    hot = _asof_bucketed(
-        features.where(is_hot),
-        probes.where(is_hot),
-        n_buckets=n_buckets,
-        **args,
-    )
-    return cold.unionByName(hot)
+    """Skew-routing as-of join, mirroring backfill_features_auto: no
+    single task sorts a whale entity. An entity is hot when it has more
+    than ``hot_threshold`` feature rows; with no hot entity this is
+    ``asof_join``. Otherwise every row goes through ONE window
+    partitioned by (on, __b):
 
+      1. the sizing pass (``skew.hot_keys``) also returns each hot
+         key's event-time range [lo, hi] in epoch ms, broadcast-joined
+         to the union as a driver-local frame (NULL keys stay cold);
+      2. a hot row's bucket is (clamp(tms, lo, hi) - lo) div
+         ((hi - lo) div n_buckets + 1): monotone in ts, so an instant
+         never splits; probes outside [lo, hi] land in the first or
+         last bucket; no product, so no int64 overflow. Cold rows and
+         NULL-ts probes sit in bucket 0;
+      3. one exchange on (on, __b) feeds both the window and the carry
+         aggregate: each bucket's latest hot event (max_by over
+         (ts, turn_idx), the window's tie order, keeping its ORIGINAL
+         event ms so staleness measures real age). A tiny window over
+         the buckets turns them into an exclusive prefix, the carry-in;
+      4. a probe takes its in-bucket pick, else its bucket's carry-in.
+
+    ``features`` is evaluated 3 times when a key is hot (module
+    docstring). BENCH/BASELINE.md holds the measured crossover
+    (bench_skew_asof.py)."""
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    tms = epoch_ms(ts_col)
+    hot = hot_keys(features, on, hot_threshold, __lo=F.min(tms), __hi=F.max(tms))
+    if not hot:
+        return asof_join(
+            features, probes, on, ts_col, probe_ts_col, value_cols, tolerance_ms
+        )
+    spark = features.sparkSession
+    ranges = spark.createDataFrame(
+        hot,
+        StructType(
+            [
+                StructField(on, features.schema[on].dataType),
+                StructField("__lo", LongType()),
+                StructField("__hi", LongType()),
+            ]
+        ),
+    )
+    u = (
+        _union_marker(features, probes, on, ts_col, probe_ts_col, value_cols)
+        .withColumn("__tms", epoch_ms("__t"))
+        .join(F.broadcast(ranges), on, "left")
+    )
+    # greatest/least skip NULLs: a NULL-ts probe clamps to lo (bucket
+    # 0), and a cold row's NULL range makes the bucket NULL, then 0
+    bucket = F.expr(
+        "(least(greatest(__tms, __lo), __hi) - __lo)"
+        f" div ((__hi - __lo) div {int(n_buckets)} + 1)"
+    )
+    x = u.select(
+        on,
+        "__t",
+        "__tms",
+        _EV,
+        "__ord",
+        "__payload",
+        F.coalesce(bucket, F.lit(0)).alias("__b"),
+        F.col("__lo").isNotNull().alias("__hot"),
+    ).repartition(spark.sparkContext.defaultParallelism, on, "__b")
+    # a cold entity contributes one NULL row to the carry, not its
+    # payload; max_by keeps __payload out of the comparison key
+    last_ev = F.max_by(
+        F.struct("__tms", "__payload"),
+        F.when((F.col(_EV) == 1) & F.col("__hot"), F.struct("__t", "__ord")),
+    )
+    wcarry = (
+        Window.partitionBy(on)
+        .orderBy("__b")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    carry = (
+        x.groupBy(on, "__b")
+        .agg(last_ev.alias("__last"))
+        .select(on, "__b", F.last("__last", ignorenulls=True).over(wcarry).alias("__c"))
+        .where(F.col("__c").isNotNull())
+    )
+    w = (
+        Window.partitionBy(on, "__b")
+        .orderBy("__t", _EV, "__ord")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return _probe_output(x, w, on, probe_ts_col, value_cols, tolerance_ms, carry)

@@ -9,32 +9,41 @@ buckets, applyInPandas groups) need explicit salting.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 SALT = "__salt"
 
 
-def hot_key_split(df: DataFrame, key: str, threshold: int) -> Column | None:
-    """Predicate that is True on the rows of every hot ``key``, or None
-    when no key is hot. A key is hot when it has more than ``threshold``
-    rows of ``df``.
+def hot_keys(df: DataFrame, key: str, threshold: int, **extra: Column) -> list[Row]:
+    """The sizing pass both skew routers share: one row per hot ``key``
+    (more than ``threshold`` rows of ``df``), holding the key and each
+    ``extra`` per-key aggregate under its keyword name, computed in the
+    same map-side-combined groupBy as the count.
 
-    The sizing pass is a map-side-combined count per key, and the hot
-    keys are collected to the driver — by construction a short list.
-    NULL keys always route cold: they are left out of the list, and the
-    coalesce turns isin()'s NULL into False, because both where(pred)
-    and where(~pred) drop rows whose predicate is NULL.
+    The rows are collected to the driver, so memory there is bounded by
+    one row per hot key (a short list by construction). NULL keys are
+    never hot.
     """
-    hot = [
-        r[0]
+    aggs = [F.count(F.lit(1)).alias("__n")] + [c.alias(n) for n, c in extra.items()]
+    return [
+        r
         for r in df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(*aggs)
         .where(F.col("__n") > threshold)
-        .select(key)
+        .select(key, *extra)
         .collect()
         if r[0] is not None
     ]
+
+
+def hot_key_split(df: DataFrame, key: str, threshold: int) -> Column | None:
+    """Predicate that is True on the rows of every hot ``key`` (see
+    ``hot_keys``), or None when no key is hot. NULL keys route cold: the
+    coalesce turns isin()'s NULL into False, because both where(pred)
+    and where(~pred) drop rows whose predicate is NULL.
+    """
+    hot = [r[0] for r in hot_keys(df, key, threshold)]
     if not hot:
         return None
     return F.coalesce(F.col(key).isin(hot), F.lit(False))

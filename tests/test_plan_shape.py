@@ -158,10 +158,13 @@ def test_fastx_distributed_zero_shuffle(spark, tmp_path):
 
 
 def test_asof_auto_plan_splits_whale(spark, tdf):
-    """With one whale above hot_threshold, asof_join_auto's plan holds
-    the bucketed hot branch (a Window partitioned by (conv_id, __b),
-    per-entity stats broadcast-joined) next to the cold window plan,
-    hash-partitioned on conv_id alone."""
+    """With one whale above hot_threshold, asof_join_auto's plan is ONE
+    row window, partitioned by (conv_id, __b) over an explicit exchange
+    on (conv_id, __b): cold entities share it in bucket 0, so no window
+    orders a conversation's rows by __t under conv_id alone (the only
+    conv_id window is the carry's, over buckets). The whale's time
+    range comes from the sizing pass and reaches the rows by broadcast:
+    no min/max aggregate over the features is left in the plan."""
     import re
 
     from pyspark.sql import functions as F
@@ -175,15 +178,53 @@ def test_asof_auto_plan_splits_whale(spark, tdf):
     plan = _plan(asof_join_auto(tdf, probes, hot_threshold=ranked[-2]))
     # (partition spec, first order key) of every Window node
     windows = re.findall(r"Window \[.*\], \[([^\]]*)\], \[(\w+)#", plan)
-    hot = [w for w in windows if re.fullmatch(r"conv_id#\d+, __b#\d+L?", w[0])]
-    cold = [w for w in windows if re.fullmatch(r"conv_id#\d+", w[0]) and w[1] == "__t"]
-    assert hot and cold, windows
-    assert re.search(r"hashpartitioning\(conv_id#\d+, \d+\)", plan)
+    rows = [w for w in windows if re.fullmatch(r"conv_id#\d+, __b#\d+L?", w[0])]
+    assert len(rows) == 1 and rows[0][1] == "__t", windows
+    alone = [w for w in windows if re.fullmatch(r"conv_id#\d+", w[0])]
+    assert alone and all(w[1] == "__b" for w in alone), windows
     assert re.search(r"hashpartitioning\(conv_id#\d+, __b#\d+L?, \d+\)", plan)
-    # the per-entity (lo, hi) stats reach the hot rows by broadcast
+    assert not re.search(r"\b(min|max)\(", plan), plan[:3000]
+    # the sizing pass's (conv_id, lo, hi) rows reach the union by broadcast
     assert re.search(
         r"BroadcastHashJoin \[conv_id#\d+\], \[conv_id#\d+\], LeftOuter", plan
-    ), plan[:2000]
+    ), plan[:3000]
+
+
+def test_asof_auto_evaluates_features_three_times(spark):
+    """Spark recomputes a mapInArrow frame once per consumer in a plan
+    (the exchange above it is not reused). With one hot key,
+    asof_join_auto evaluates the caller's features exactly 3 times: the
+    sizing pass, the window input and the carry aggregate."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from kmertools_spark.operators import asof_join_auto
+
+    base = pd.Timestamp("2024-01-01")
+    src = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "conv_id": ["whale"] * 40 + [f"c{i}" for i in range(10)],
+                "turn_idx": range(50),
+                "ts": [base + pd.Timedelta(minutes=i) for i in range(50)],
+            }
+        )
+    ).coalesce(1)
+    batches = spark.sparkContext.accumulator(0)
+
+    def count_batches(it):
+        for b in it:
+            batches.add(1)
+            yield b
+
+    feats = src.mapInArrow(count_batches, src.schema)
+    probes = src.select(
+        "conv_id", (F.col("ts") + F.expr("INTERVAL 30 SECONDS")).alias("probe_ts")
+    )
+    rows = asof_join_auto(feats, probes, hot_threshold=10, n_buckets=4).collect()
+    # each probe sits 30 s after its own turn: it picks exactly that turn
+    assert sorted(r.asof_turn_idx for r in rows) == list(range(50))
+    assert batches.value == 3  # one batch per evaluation (one partition)
 
 
 def test_packing_has_no_global_window(spark):

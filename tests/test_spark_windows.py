@@ -15,34 +15,26 @@ from kmertools_spark.operators import (
     lag_lead_features,
     sessionize,
 )
-from kmertools_spark.operators.asof import _asof_bucketed
 
 GAP = 1800.0
 
 
-def _asof_bucketed_small(*a, **kw):
-    """bucketed plan with few buckets so tiny test data spans several"""
-    kw.setdefault("n_buckets", 5)
-    return _asof_bucketed(*a, **kw)
-
-
 def _asof_auto_small(*a, **kw):
     """auto router with a threshold low enough that test data routes
-    SOME entities hot (exercising both branches + the union)"""
+    SOME entities hot (cold bucket 0 next to bucketed hot entities)"""
     kw.setdefault("hot_threshold", 3)
     kw.setdefault("n_buckets", 5)
     return asof_join_auto(*a, **kw)
 
 
 def _asof_all_hot(*a, **kw):
-    """auto router at its all-hot edge: every entity takes the bucketed
-    branch and the cold branch keeps only unmatched keys"""
+    """auto router at its all-hot edge: every entity with a feature row
+    is bucketed; only unmatched and NULL keys stay in bucket 0"""
     return asof_join_auto(*a, hot_threshold=0, n_buckets=5, **kw)
 
 
 ASOF_IMPLS = {
     "window": asof_join,
-    "bucketed": _asof_bucketed_small,
     "auto": _asof_auto_small,
     "all_hot": _asof_all_hot,
 }
@@ -126,7 +118,7 @@ def oracle_asof(pdf, probes):
     return exp
 
 
-@pytest.mark.parametrize("impl", ["window", "bucketed", "auto", "all_hot"])
+@pytest.mark.parametrize("impl", ["window", "auto", "all_hot"])
 def test_asof_join_strict_leakage_semantics(spark, tdf, impl):
     df, pdf = tdf
     probes = _probe_frame(pdf)
@@ -433,7 +425,7 @@ def test_backfill_auto_routes_and_matches_stream(spark, tdf):
     assert np.allclose(np.vstack(got["roll_vec"]), np.vstack(want["roll_vec"]))
 
 
-@pytest.mark.parametrize("impl", ["window", "bucketed", "auto", "all_hot"])
+@pytest.mark.parametrize("impl", ["window", "auto", "all_hot"])
 def test_asof_join_tolerance_staleness(spark, impl):
     """tolerance_ms (merge_asof semantics): a probe whose latest
     preceding feature is older than the bound gets nulls; a fresh pick
@@ -477,7 +469,7 @@ def test_asof_join_tolerance_staleness(spark, impl):
     assert got_free["b"] == 0 and got_free["a"] == 1
 
 
-@pytest.mark.parametrize("impl", ["window", "bucketed", "auto", "all_hot"])
+@pytest.mark.parametrize("impl", ["window", "auto", "all_hot"])
 def test_asof_join_null_key_probes_survive(spark, impl):
     """A probe row with a NULL key (or NULL ts) must emit a null-valued
     output row in BOTH physical plans, not vanish (code-review r3)."""
@@ -504,7 +496,7 @@ def test_asof_join_null_key_probes_survive(spark, impl):
     assert ("zz", None) in got
 
 
-@pytest.mark.parametrize("impl", ["window", "bucketed", "auto", "all_hot"])
+@pytest.mark.parametrize("impl", ["window", "auto", "all_hot"])
 def test_asof_join_null_key_features_never_match(spark, impl):
     """A feature row with NULL key or NULL ts must never be picked —
     equality joins (the SQL oracle) skip NULLs, so the
@@ -530,20 +522,23 @@ def test_asof_join_null_key_features_never_match(spark, impl):
 
 
 def test_asof_bucketed_sub_millisecond_carry(spark):
-    """code-review r4 finding 3: two events inside ONE millisecond —
-    the bucketed plan's per-bucket carry must pick by FULL-precision
-    (ts, ord), not by (ms, ord), or a later-bucket probe is served the
-    wrong row. Also covers the same-ms in-bucket tie."""
+    """code-review r4 finding 3: two events inside ONE millisecond — the
+    hot entity's per-bucket carry must pick by FULL-precision (ts, ord),
+    not by (ms, ord), or a later-bucket probe is served the wrong row.
+    Also covers the same-ms in-bucket tie. With 4 buckets over the
+    400 s event range, the three early events share bucket 0, the
+    +100 s probe falls in bucket 1 and reads bucket 0's carry."""
     base = pd.Timestamp("2024-01-01 10:00:00")
     feat = spark.createDataFrame(
         pd.DataFrame(
             {
-                "conv_id": ["a", "a", "a"],
-                "turn_idx": [0, 5, 1],
+                "conv_id": ["a", "a", "a", "a"],
+                "turn_idx": [0, 5, 1, 7],
                 "ts": [
                     base - pd.Timedelta(seconds=100),
                     base + pd.Timedelta(microseconds=100),
                     base + pd.Timedelta(microseconds=900),
+                    base + pd.Timedelta(seconds=300),
                 ],
             }
         )
@@ -569,10 +564,76 @@ def test_asof_bucketed_sub_millisecond_carry(spark):
     # probe@+500us sees only the +100us event (turn 5); probe@+100s
     # sees the +900us event (turn 1, the full-precision latest)
     assert [v for _, v in want] == [5, 1]
-    got_b = norm(_asof_bucketed(feat, probes, n_buckets=4))
-    got_a = norm(asof_join_auto(feat, probes, hot_threshold=1, n_buckets=4))
-    assert got_b == want
-    assert got_a == want
+    assert norm(asof_join_auto(feat, probes, hot_threshold=0, n_buckets=4)) == want
+
+
+def _edge_frames(spark):
+    """Feature and probe frames for the bucketing edges. Hot entities:
+    ``span`` (events over five centuries, so (tms - lo) * 2**20
+    overflows int64), ``flat`` (every event at one ts, hi == lo) and
+    ``nullts`` (some NULL-ts feature rows); cold: ``c0``..``c2``.
+    Probes fall before each hot entity's first event, after its last,
+    on and between events, and carry NULL keys and NULL ts."""
+    from datetime import datetime, timedelta
+
+    rng = np.random.RandomState(23)
+    t0 = datetime(1750, 1, 1)
+    span = datetime(2250, 1, 1) - t0
+    rows = [("span", i, t0 + span * float(f)) for i, f in enumerate(np.sort(rng.rand(40)))]
+    rows += [("flat", i, datetime(2024, 3, 1, 12)) for i in range(6)]
+    base = datetime(2024, 1, 1)
+    for i in range(12):
+        ts = None if i % 4 == 1 else base + timedelta(minutes=int(rng.randint(0, 600)))
+        rows.append(("nullts", i, ts))
+    for c in range(3):
+        for i in range(2):
+            rows.append((f"c{c}", i, base + timedelta(minutes=int(rng.randint(0, 600)))))
+    rows.append((None, 99, base))
+    probes = []
+    for key in ("span", "flat", "nullts", "c0", "c1", "c2"):
+        ts = sorted(t for c, _, t in rows if c == key and t is not None)
+        probes += [
+            (key, ts[0] - timedelta(days=1)),  # before the first event
+            (key, ts[-1] + timedelta(days=1)),  # after the last
+            (key, ts[len(ts) // 2]),  # on an event
+            (key, ts[0] + (ts[-1] - ts[0]) / 3),  # between events
+            (key, None),  # NULL ts
+        ]
+    probes += [(None, base + timedelta(hours=1)), (None, None)]
+    return (
+        spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp"),
+        spark.createDataFrame(probes, "conv_id string, probe_ts timestamp"),
+    )
+
+
+@pytest.mark.parametrize("tolerance_ms", [None, 3 * 3_600_000])
+@pytest.mark.parametrize("n_buckets", [1, 4, 2**20])
+def test_asof_auto_bucket_edges_match_window(spark, n_buckets, tolerance_ms):
+    """asof_join_auto with three hot entities equals asof_join on every
+    bucketing edge (see _edge_frames), for one bucket, a few, and 2**20
+    over five centuries (the clamped, product-free bucket cannot
+    overflow), with and without a staleness bound."""
+    from kmertools_spark.operators.skew import hot_keys
+
+    feat, probes = _edge_frames(spark)
+    assert {r[0] for r in hot_keys(feat, "conv_id", 5)} == {"span", "flat", "nullts"}
+
+    def norm(df):
+        return sorted(
+            (str(r.conv_id), str(r.probe_ts), r.asof_turn_idx) for r in df.collect()
+        )
+
+    want = norm(asof_join(feat, probes, tolerance_ms=tolerance_ms))
+    got = norm(
+        asof_join_auto(
+            feat, probes, tolerance_ms=tolerance_ms, hot_threshold=5, n_buckets=n_buckets
+        )
+    )
+    assert len(got) == probes.count()
+    assert got == want
+    assert sum(v is not None for *_, v in want) >= (16 if tolerance_ms is None else 3)
+    with pytest.raises(ValueError, match="n_buckets"):
+        asof_join_auto(feat, probes, hot_threshold=5, n_buckets=0)
 
 
 def test_rolling_chunked_window_wider_than_chunk(spark, tdf):
