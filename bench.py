@@ -210,9 +210,8 @@ def main() -> None:
             F.sum(F.size("cgr"))
         ).collect()
 
-    # signatures are cached before the banding self-join — otherwise the
-    # join's two branches each recompute the minhash UDF over the whole
-    # corpus (the shape any real pipeline persists)
+    # signatures are cached before banding, so the leg times the LSH
+    # pair pass, not the minhash UDF (the shape any real pipeline persists)
     def dedup_leg():
         sigs = minhash_signatures(docs).cache()
         force(sigs)

@@ -34,7 +34,6 @@ from .similarity import (
     cosine_topk,
     embedding_dedup_keep,
     cosine_topk_gemm,
-    hyperplane_buckets,
     hyperplane_buckets_multi,
 )
 from .skew import salted_collect_list, salted_sum, with_salt
@@ -72,7 +71,6 @@ __all__ = [
     "embedding_dedup_keep",
     "cosine_topk",
     "cosine_topk_gemm",
-    "hyperplane_buckets",
     "hyperplane_buckets_multi",
     "salted_collect_list",
     "salted_sum",

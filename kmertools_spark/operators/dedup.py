@@ -57,26 +57,62 @@ def minhash_signatures(
     )
 
 
-def cap_hot_groups(
-    df: DataFrame, group_cols: tuple[str, ...], id_col: str, max_bucket: int
-) -> tuple[DataFrame, DataFrame]:
-    """(kept, star): the shared hot-bucket cap for every LSH path
-    (text banding here, hyperplane tables in operators/similarity —
-    code-review r5 single-sited the mechanism). Groups larger than
-    ``max_bucket`` are removed from the all-pairs join and replaced by
-    star edges (group minimum -> member): connectivity-exact, linear
-    in group size, NOT pair-exact (see lsh_candidate_pairs)."""
+def _bucket_pairs(
+    banded: DataFrame, keys: tuple[str, ...], id_col: str, max_bucket: int | None
+) -> DataFrame:
+    """(id_a, id_b) candidate pairs of every bucket of ``banded``, one
+    row per pair per bucket — the one LSH pair kernel (text bands here,
+    hyperplane tables in operators/similarity).
+
+    Plan: NULL ids are dropped (they neither count toward a bucket's
+    size nor pair), then ONE Window partitioned by ``keys`` and ordered
+    by id gives each row the ids sorting before it (``collect_list``
+    over a rows frame) and its bucket's size and minimum (``count`` and
+    ``first`` over the full frame); exploding the preceding ids emits
+    id_a <= id_b by construction, and ``id_a != id_b`` removes the
+    self-pairs of a duplicated id. The banded relation is shuffled once,
+    on ``keys``.
+
+    ``max_bucket`` (the hot-bucket cap, docs/SCALE.md): a bucket larger
+    than the cap emits star edges (bucket minimum, member) instead of
+    its O(size^2) pairs — connectivity-exact, NOT pair-exact. The frame
+    is then ``max_bucket`` rows back, which still covers every earlier
+    member of an under-cap bucket. Per-row memory: O(bucket size) ids
+    uncapped, O(max_bucket) ids capped; WindowExec spills its partition
+    buffer to disk, so no row ever holds a bucket's pair array.
+
+    Measured (BENCH/BASELINE.md "LSH bucket pairs", local[4]): faster
+    than the grouped pair expansion on text bands, capped and uncapped,
+    and no slower than the cap-window + self-join + star union on
+    capped hyperplane tables (faster at 2k vectors, a tie at 20k). It
+    loses about 3x to a plain ``(keys, a < b)`` self-join on deep
+    UNCAPPED hyperplane buckets (44 M pairs from 20k vectors: 110-131 s
+    against 33-47 s), because every collected id is boxed, so
+    cosine_neardup_lsh keeps that self-join when ``max_bucket`` is None.
+    """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*group_cols)
-    sized = df.withColumn("__n", F.count(F.lit(1)).over(w)).withColumn(
-        "__min", F.min(id_col).over(w)
+    w = Window.partitionBy(*keys).orderBy(id_col)
+    # a cap below 1 stars every bucket; the frame still needs a valid bound
+    prev = w.rowsBetween(
+        -max(max_bucket, 1) if max_bucket is not None else Window.unboundedPreceding,
+        -1,
     )
-    star = sized.where(
-        (F.col("__n") > max_bucket) & (F.col(id_col) != F.col("__min"))
-    ).select(F.col("__min").alias("id_a"), F.col(id_col).alias("id_b"))
-    kept = sized.where(F.col("__n") <= max_bucket).drop("__n", "__min")
-    return kept, star
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    rows = banded.where(F.col(id_col).isNotNull()).select(
+        F.col(id_col),
+        F.collect_list(id_col).over(prev).alias("__prev"),
+        F.count(id_col).over(whole).alias("__n"),
+        F.first(id_col).over(whole).alias("__min"),
+    )
+    partners = F.col("__prev")
+    if max_bucket is not None:
+        partners = F.when(F.col("__n") > max_bucket, F.array("__min")).otherwise(
+            partners
+        )
+    return rows.select(
+        F.explode(partners).alias("id_a"), F.col(id_col).alias("id_b")
+    ).where(F.col("id_a") != F.col("id_b"))
 
 
 def lsh_candidate_pairs(
@@ -90,9 +126,12 @@ def lsh_candidate_pairs(
     """Candidate near-duplicate pairs via LSH banding.
 
     Signature split into ``bands`` bands of ``rows_per_band`` values;
-    docs sharing any full band collide. Shuffle = one exchange on the
-    band key; the band key is a string fold of the band's values (works
-    identically in the SQL oracle).
+    docs sharing any full band collide. The band key is a string fold
+    of the band's values (works identically in the SQL oracle).
+
+    Plan: ``_bucket_pairs`` over (band, key) — one exchange of the
+    banded relation, one Window, then the final distinct. Per-row
+    memory is O(bucket size) ids uncapped and O(max_bucket) ids capped.
 
     ``max_bucket`` is the hot-band cap (docs/SCALE.md): a bucket larger
     than the cap (e.g. a boilerplate flood of near-identical docs) would
@@ -106,40 +145,7 @@ def lsh_candidate_pairs(
     emit one row per COLLIDING BAND: composed pipelines that pay a
     distinct downstream anyway (dedup_keep's Jaccard stage) use it so
     the candidate-pair relation — the largest intermediate of a corpus
-    dedup — is shuffled for dedup exactly once (r4 VERDICT item 3).
-
-    Physical shape (r7): ONE exchange — groupBy(band, key) collects
-    each bucket's sorted id list and the pair expansion is a codegen'd
-    array expression (flatten/transform over the sorted list, so
-    id_a < id_b by construction). The former self-join formulation
-    shuffled (or broadcast) BOTH banded branches and, under the cap,
-    paid an extra Window exchange for the bucket sizes — this plan
-    reads the signatures once and moves each (id, band, key) row once
-    (measured: 1.9s -> 1.2s uncapped, 1.68s -> 1.18s capped at 100k
-    docs; pair sets identical).
-
-    Memory (r7 code-review): the uncapped grouped pass materializes
-    each bucket's id list AND its O(size^2) pair array in ONE
-    aggregation row — fine for the gate's pair-exactness contract at
-    bench scale, but a boilerplate-flooded bucket at corpus scale
-    would build a multi-GB array value (the pre-r7 self-join streamed
-    the same pairs with O(1) per-row state). That regime is exactly
-    what production's ``max_bucket`` exists for, so the CAPPED path is
-    built to be flood-safe: one Window pass over (band, key) annotates
-    rows with bucket count + min id (WindowExec buffers spill to
-    disk), over-cap buckets emit their star edges as a streaming
-    projection — no arrays at all — and only under-cap buckets take
-    the grouped array pass, whose per-row memory is then bounded by
-    max_bucket^2. Cost: the two branches are canonically identical up
-    to the exchange, but AQE's stage cache does NOT reuse it here
-    (verified empirically: with AQE off, ReuseExchange fires; with AQE
-    on, both branch stages execute), so the capped path shuffles the
-    banded relation twice where the uncapped gate path shuffles once —
-    measured +0.23 s at 100k docs (0.874 vs 0.647 s, pair sets
-    bit-identical), still well under the pre-r7 join formulation and
-    the price of a hard memory bound in the flood regime. The grouped
-    pass's groupBy adds no third exchange (satisfied by the window's
-    (band, key) hash partitioning).
+    dedup — is shuffled for dedup exactly once.
     """
     from ..functions.hashing import band_key_struct
 
@@ -147,57 +153,7 @@ def lsh_candidate_pairs(
     banded = sigs.select(
         F.col(id_col), band_key_struct(bands, r).alias("bk")
     ).select(id_col, "bk.band", "bk.key")
-
-    stars = None
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "key")
-        # count(id)/min(id) skip NULL ids — same bucket membership as
-        # collect_list below (which also drops NULLs)
-        ann = banded.select(
-            F.col(id_col),
-            F.col("band"),
-            F.col("key"),
-            F.count(F.col(id_col)).over(w).alias("__n"),
-            F.min(F.col(id_col)).over(w).alias("__min"),
-        )
-        # star edges (bucket min -> member): connectivity-exact, linear
-        # in bucket size; identical to the former cap_hot_groups output
-        stars = ann.where(
-            (F.col("__n") > max_bucket) & (F.col(id_col) != F.col("__min"))
-        ).select(F.col("__min").alias("id_a"), F.col(id_col).alias("id_b"))
-        grouped_src = ann.where(F.col("__n") <= max_bucket).select(
-            id_col, "band", "key"
-        )
-    else:
-        grouped_src = banded
-
-    g = (
-        grouped_src.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    ids = F.col("ids")
-    all_pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids) - i - 1),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    pairs = (
-        g.select(F.explode(all_pairs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        # a duplicate id inside one bucket (duplicate ids in ``sigs``)
-        # sorts adjacent and would pair with itself; the join plan's
-        # strict '<' excluded those
-        .where(F.col("id_a") != F.col("id_b"))
-    )
-    if stars is not None:
-        pairs = pairs.unionByName(stars)
+    pairs = _bucket_pairs(banded, ("band", "key"), id_col, max_bucket)
     return pairs.distinct() if _distinct else pairs
 
 
@@ -406,8 +362,8 @@ def dedup_keep(
     Returns (id, cluster_id, keep): every document labeled with its
     verified near-dup cluster and keep = (doc is the cluster minimum) —
     the row a training-data pipeline filters on. Every stage is the
-    scale-safe formulation (band equi-join, pairs-driven grams, star
-    edges under the cap, pointer-jumping components).
+    scale-safe formulation (one-window bucket pairs, pairs-driven
+    grams, star edges under the cap, pointer-jumping components).
 
     Cap caveat: with ``max_bucket`` set, flooded buckets contribute
     star edges only, so the Jaccard verify sees (min, other) pairs — a
@@ -467,17 +423,12 @@ def jaccard_for_pairs(
     (VERDICT r1 item 4). Pairs sharing no gram drop out (their Jaccard
     is 0, below any positive threshold).
 
-    Cache lifetime: the gram relation is cached because three plan
-    subtrees reference it (sizes, side a, side b); the result is lazy,
-    so the cache must outlive the caller's action — long-lived sessions
-    issuing many verifications should unpersist via
-    ``spark.catalog.clearCache()`` or wrap the action themselves.
-
     The gram relation is cached: it feeds three plan subtrees (sizes,
     side-a, side-b) and would otherwise re-run the n-gram explosion
-    over the full corpus three times (r2 ADVICE item 4). Callers that can bound the result's lifetime should
-    use ``_jaccard_for_pairs_cached`` and unpersist the returned gram
-    handle once the result is consumed (dedup_keep does).
+    over the full corpus three times. The result is lazy, so the cache
+    outlives this call; callers that can bound the result's lifetime
+    should use ``_jaccard_for_pairs_cached`` and unpersist the returned
+    gram handle once the result is consumed (dedup_keep does).
     """
     out, _ = _jaccard_for_pairs_cached(
         pairs, docs, id_col, text_col, n=n, threshold=threshold

@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -202,78 +203,18 @@ def cosine_topk_gemm(
     return out
 
 
-def _rademacher_planes(dim: int, n_planes: int, plane_offset: int = 0) -> np.ndarray:
+def _rademacher_planes(dim: int, n_planes: int) -> np.ndarray:
     """Deterministic +1/-1 hyperplane signs s[p, d] from the shared hash
-    constants: sign(i) for flat index i = (plane_offset + p) * dim + d.
+    constants: sign(i) for flat index i = p * dim + d.
 
     Exactly reproducible in SQL (``CASE WHEN (A*i+B) % MOD % 2 = 1``),
     which is what makes the hash-plane LSH mode oracle-checkable.
     """
     from ..oracle.hashing import MOD, PLANE_A, PLANE_B
 
-    idx = plane_offset * dim + np.arange(n_planes * dim, dtype=np.int64)
+    idx = np.arange(n_planes * dim, dtype=np.int64)
     signs = ((PLANE_A * idx + PLANE_B) % MOD) % 2 * 2 - 1
     return signs.reshape(n_planes, dim)
-
-
-def hyperplane_buckets(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 12,
-    vec_col: str = "embedding",
-    seed: int = ANN_SEED,
-    planes: str = "gauss",
-    plane_offset: int = 0,
-) -> DataFrame:
-    """LSH bucket id per vector: sign pattern against hyperplanes.
-
-    ``planes="gauss"`` (default): Gaussian hyperplanes deterministic
-    from (seed, dim, n_planes), regenerated executor-side (no broadcast
-    traffic). ``planes="hash"``: Rademacher (+1/-1) signs from the
-    shared hash constants over floor(v*QUANT) fixed-point coordinates —
-    every projection is exact int64, so buckets are bit-identical
-    between Spark and the DuckDB oracle. Vectors in the same bucket are
-    ANN candidates; shuffle = one exchange on bucket.
-
-    A vector containing a non-finite coordinate gets a NULL bucket and
-    therefore joins no candidates (code-review r5: the float->int64
-    cast of NaN is undefined and used to hand such vectors an
-    arbitrary-but-real bucket; NULL makes the exclusion explicit and
-    engine-portable — the same contract as cosine_topk_gemm's
-    isfinite cut).
-    """
-
-    def _null_nonfinite(m: np.ndarray, vals: np.ndarray) -> pd.Series:
-        out = vals.astype(np.float64)
-        out[~np.isfinite(m).all(axis=1)] = np.nan  # NaN -> NULL long
-        return pd.Series(out)
-
-    if planes == "hash":
-        from ..oracle.hashing import QUANT
-
-        signs_t = _rademacher_planes(dim, n_planes, plane_offset).T  # (d, p)
-        pow2 = 1 << np.arange(n_planes, dtype=np.int64)
-
-        @pandas_udf(LongType())
-        def bucket(vecs: pd.Series) -> pd.Series:
-            m = np.vstack(vecs.to_numpy()).astype(np.float64)
-            xq = np.floor(np.nan_to_num(m) * QUANT).astype(np.int64)
-            bits = (xq @ signs_t) > 0
-            return _null_nonfinite(m, (bits @ pow2).astype(np.int64))
-
-    else:
-
-        @pandas_udf(LongType())
-        def bucket(vecs: pd.Series) -> pd.Series:
-            h = np.random.RandomState(seed).standard_normal((dim, n_planes))
-            m = np.vstack(vecs.to_numpy()).astype(np.float64)
-            bits = (np.nan_to_num(m) @ h) > 0
-            vals = (bits @ (1 << np.arange(n_planes, dtype=np.int64))).astype(
-                np.int64
-            )
-            return _null_nonfinite(m, vals)
-
-    return df.withColumn("bucket", bucket(F.col(vec_col)))
 
 
 def hyperplane_buckets_multi(
@@ -286,42 +227,38 @@ def hyperplane_buckets_multi(
     planes: str = "gauss",
     out_col: str = "buckets",
 ) -> DataFrame:
-    """All ``n_tables`` LSH bucket ids in ONE pass over the vectors
-    (array<long>, one entry per table) — bit-identical to calling
-    hyperplane_buckets per table with seed+7919*t / plane_offset=
-    t*n_planes, but the source is scanned once and the kernel runs one
-    (n, dim) x (dim, tables*planes) product instead of n_tables
-    separate UDF passes (code-review r5: cosine_neardup_lsh used to
-    re-scan df per table). Non-finite vectors get a NULL array, so a
-    posexplode consumer drops them (same contract as the single-table
-    NULL bucket)."""
+    """LSH bucket ids of ``n_tables`` hyperplane tables in ONE pass over
+    the vectors: ``out_col`` array<long>, one sign pattern per table.
+
+    ``planes="gauss"`` (default): table t's Gaussian hyperplanes are
+    deterministic from (seed + 7919*t, dim, n_planes), regenerated
+    executor-side (no broadcast traffic). ``planes="hash"``: Rademacher
+    (+1/-1) signs from the shared hash constants (table t owns global
+    planes t*n_planes ..) over floor(v*QUANT) fixed-point coordinates —
+    every projection is exact int64, so buckets are bit-identical
+    between Spark and the DuckDB oracle. The kernel is one
+    (n, dim) x (dim, tables*planes) product per Arrow batch, and the
+    (n, tables) bucket matrix leaves Python as an Arrow list array over
+    its own flat buffer.
+
+    A vector containing a non-finite coordinate gets a NULL array (the
+    float->int64 cast of NaN is undefined and would hand it an
+    arbitrary-but-real bucket), so a posexplode consumer drops it and it
+    joins no candidates — the same contract as cosine_topk_gemm's
+    isfinite cut.
+    """
     pow2 = 1 << np.arange(n_planes, dtype=np.int64)
-
-    def _vals(m: np.ndarray, proj_pos: np.ndarray) -> pd.Series:
-        vals = proj_pos.reshape(len(m), n_tables, n_planes) @ pow2  # (n, T)
-        ok = np.isfinite(m).all(axis=1)
-        return pd.Series(
-            [v.tolist() if o else None for v, o in zip(vals, ok)]
-        )
-
     if planes == "hash":
         from ..oracle.hashing import QUANT
 
-        # global plane index (t*n_planes + p) == per-table plane_offset
-        # t*n_planes, so one concatenated sign matrix reproduces every
-        # table's buckets exactly
         signs_t = _rademacher_planes(dim, n_planes * n_tables).T  # (d, T*p)
 
-        @pandas_udf(ArrayType(LongType()))
-        def buckets(vecs: pd.Series) -> pd.Series:
-            m = np.vstack(vecs.to_numpy()).astype(np.float64)
-            xq = np.floor(np.nan_to_num(m) * QUANT).astype(np.int64)
-            return _vals(m, (xq @ signs_t) > 0)
+        def project(m: np.ndarray) -> np.ndarray:
+            return (np.floor(np.nan_to_num(m) * QUANT).astype(np.int64) @ signs_t) > 0
 
     else:
 
-        @pandas_udf(ArrayType(LongType()))
-        def buckets(vecs: pd.Series) -> pd.Series:
+        def project(m: np.ndarray) -> np.ndarray:
             h = np.concatenate(
                 [
                     np.random.RandomState(seed + 7919 * t).standard_normal(
@@ -331,8 +268,20 @@ def hyperplane_buckets_multi(
                 ],
                 axis=1,
             )
-            m = np.vstack(vecs.to_numpy()).astype(np.float64)
-            return _vals(m, (np.nan_to_num(m) @ h) > 0)
+            return (np.nan_to_num(m) @ h) > 0
+
+    @arrow_udf(ArrayType(LongType()))
+    def buckets(vecs: pa.Array) -> pa.Array:
+        n = len(vecs)
+        m = vecs.flatten().to_numpy(zero_copy_only=False)
+        m = m.astype(np.float64).reshape(n, dim)
+        vals = project(m).reshape(n, n_tables, n_planes) @ pow2  # (n, T)
+        offsets = pa.array(np.arange(n + 1, dtype=np.int32) * n_tables)
+        return pa.ListArray.from_arrays(
+            offsets,
+            pa.array(vals.reshape(-1)),
+            mask=pa.array(~np.isfinite(m).all(axis=1)),
+        )
 
     return df.withColumn(out_col, buckets(F.col(vec_col)))
 
@@ -354,11 +303,20 @@ def ann_topk_lsh(
     deterministic integer functions of the shared hash constants, so
     the whole query (buckets -> candidates -> cosine top-k) has an
     exact DuckDB twin (gate row r30).
+
+    The bucket is table 0 of ``hyperplane_buckets_multi(n_tables=1)``
+    (Gaussian seed ANN_SEED, or hash planes 0..n_planes-1), so it is
+    bit-identical to a dedicated single-table kernel.
     """
-    c = hyperplane_buckets(corpus, dim, n_planes, vec_col, planes=planes).alias("c")
-    q = hyperplane_buckets(queries, dim, n_planes, vec_col, planes=planes).alias("q")
-    c = with_norm(c, vec_col).alias("c")
-    q = with_norm(q, vec_col).alias("q")
+
+    def bucketed(df: DataFrame) -> DataFrame:
+        return with_norm(
+            hyperplane_buckets_multi(df, dim, n_planes, 1, vec_col, planes=planes),
+            vec_col,
+        ).withColumn("bucket", F.col("buckets")[0])
+
+    c = bucketed(corpus).alias("c")
+    q = bucketed(queries).alias("q")
     j = c.join(
         F.broadcast(q),
         (F.col("c.bucket") == F.col("q.bucket"))
@@ -534,22 +492,29 @@ def cosine_neardup_lsh(
     only recall is approximate (tested against the exact block-GEMM).
     For exhaustive exact output use cosine_neardup_pairs.
 
-    ``max_bucket`` is the hot-bucket cap (code-review r4 — the same
-    star-edge mechanism as dedup.lsh_candidate_pairs): a flooded
-    (table, bucket) — boilerplate embeddings, or all-zero vectors,
-    which collide in EVERY table — would emit O(size^2) candidates;
-    capped buckets emit star edges to the bucket minimum instead,
-    linear in size. Same caveat as the text cap: star candidates still
-    pass the exact cosine verify, so a member near the bucket but not
-    near its minimum can lose an edge all-pairs banding would keep —
-    connectivity-oriented callers (embedding_dedup_keep) accept this;
-    the exact gate (q45) pins max_bucket=None.
+    ``max_bucket`` is the hot-bucket cap (the same star-edge mechanism
+    as dedup.lsh_candidate_pairs): a flooded (table, bucket) —
+    boilerplate embeddings, or all-zero vectors, which collide in EVERY
+    table — would emit O(size^2) candidates; capped buckets emit star
+    edges to the bucket minimum instead, linear in size. Same caveat as
+    the text cap: star candidates still pass the exact cosine verify, so
+    a member near the bucket but not near its minimum can lose an edge
+    all-pairs banding would keep — connectivity-oriented callers
+    (embedding_dedup_keep) accept this; the exact gate (q45) pins
+    max_bucket=None.
+
+    Candidates: capped, dedup._bucket_pairs over (table, bucket) — one
+    exchange, O(max_bucket) ids per row. Uncapped, a (table, bucket,
+    a < b) self-join, which streams deep buckets' pairs without the
+    window's boxed id lists (about 3x faster at 44 M pairs,
+    BENCH/BASELINE.md "LSH bucket pairs").
     """
-    # one vector scan + one fused projection for ALL tables (the old
-    # per-table loop re-scanned df and re-ran the UDF n_tables times);
-    # posexplode drops the NULL arrays of non-finite vectors, so they
-    # neither form a NULL cap-window group (star edges between
-    # unrelated NaN vectors) nor reach the equi-join
+    from .dedup import _bucket_pairs
+
+    # one vector scan + one fused projection for ALL tables; posexplode
+    # drops the NULL arrays of non-finite vectors, so they neither form
+    # a NULL bucket (star edges between unrelated NaN vectors) nor
+    # reach the equi-join
     banded = hyperplane_buckets_multi(
         df, dim, n_planes, n_tables, vec_col, seed=seed, planes=planes
     ).select(
@@ -557,29 +522,21 @@ def cosine_neardup_lsh(
         F.posexplode("buckets").alias("table", "bucket"),
     ).select(F.col("table").cast("int").alias("table"), id_col, "bucket")
 
-    star = None
     if max_bucket is not None:
-        from .dedup import cap_hot_groups
-
-        banded, star = cap_hot_groups(banded, ("table", "bucket"), id_col, max_bucket)
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
+        cand = _bucket_pairs(banded, ("table", "bucket"), id_col, max_bucket)
+    else:
+        a = banded.alias("a")
+        b = banded.alias("b")
+        cand = a.join(
             b,
             on=[
                 F.col("a.table") == F.col("b.table"),
                 F.col("a.bucket") == F.col("b.bucket"),
                 F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
             ],
-        )
-        .select(
+        ).select(
             F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
         )
-    )
-    if star is not None:
-        cand = cand.unionByName(star)
     cand = cand.distinct()
     va = with_norm(df, vec_col).select(
         F.col(id_col).alias("id_a"),

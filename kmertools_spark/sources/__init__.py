@@ -1,5 +1,5 @@
 """Input sources: shared transcript derivation, synthetic generator,
-partitioned feature-table IO, and multimodal binary-column plumbing."""
+partitioned feature-table IO, and the FASTA/FASTQ readers."""
 
 from .fastx import read_fastx, read_fastx_distributed, seq_stats
 from .io import read_feature_table, write_feature_table

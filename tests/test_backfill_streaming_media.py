@@ -1,4 +1,4 @@
-"""Backfill kill/resume equivalence, streaming surface, multimodal stubs."""
+"""Backfill kill/resume equivalence and the streaming surface."""
 
 import os
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from kmertools_spark.plans import BackfillDriver, bucket_of, default_feature_fn
 from kmertools_spark.sources import synth_transcripts_pdf
-from kmertools_spark.sources.multimodal import frame_sample, media_features, synth_media
 
 
 @pytest.fixture(scope="module")
@@ -270,144 +269,6 @@ def test_streaming_kmer_counts_match_batch(spark, tdf, tmp_path):
     exp = global_kmer_counts(tdf, k=4).toPandas().sort_values("kmer")
     assert got["kmer"].tolist() == exp["kmer"].tolist()
     assert got["cnt"].tolist() == exp["cnt"].tolist()
-
-
-def test_media_features_deterministic(spark):
-    media = synth_media(spark, n=12)
-    f1 = media_features(media).toPandas().sort_values("media_id")
-    f2 = media_features(media).toPandas().sort_values("media_id")
-    assert len(f1) == 12
-    for a, b in zip(f1["feat"], f2["feat"]):
-        assert list(a) == list(b)
-        assert len(a) == 3 + 8
-        assert abs(sum(a[3:]) - 1.0) < 1e-9  # histogram part normalized
-
-
-def test_frame_sample(spark):
-    media = synth_media(spark, n=12)
-    frames = frame_sample(media, every=2).toPandas()
-    vids = media.where("kind = 'video'").select("media_id", "meta.n_frames").toPandas()
-    exp = sum(len(range(0, int(n), 2)) for n in vids["n_frames"])
-    assert len(frames) == exp
-
-
-def test_media_resize_shapes_and_determinism(spark):
-    import numpy as np
-
-    from kmertools_spark.sources.multimodal import media_resize, synth_media
-
-    media = synth_media(spark, n=12)
-    out = {r.media_id: r for r in media_resize(media, out_w=16, out_h=8).collect()}
-    assert len(out) == 12
-    for r in out.values():
-        assert r.width == 16 and r.height == 8
-        assert len(bytes(r.payload)) == 16 * 8 * 3
-    # deterministic across runs
-    again = {r.media_id: bytes(r.payload) for r in media_resize(media, 16, 8).collect()}
-    assert {k: bytes(v.payload) for k, v in out.items()} == again
-
-
-def test_media_features_nonstandard_bins_row_isolation(spark):
-    """n_bins != 8 must keep histograms row-local (review finding:
-    the shift-based bin index spilled into the neighbor's slots)."""
-    import numpy as np
-    import pandas as pd
-
-    from kmertools_spark.sources.multimodal import MEDIA_SCHEMA, media_features
-
-    rows = [
-        (0, "image", bytearray(b"\xff" * 64), (4, 4, 1, "x")),
-        (1, "image", bytearray(b"\x00" * 64), (4, 4, 1, "x")),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r.media_id: list(r.feat) for r in media_features(df, n_bins=4).collect()}
-    # image 0: all bytes 255 -> last bin only; image 1: all 0 -> first bin
-    assert out[0][3:] == [0.0, 0.0, 0.0, 1.0]
-    assert out[1][3:] == [1.0, 0.0, 0.0, 0.0]
-    assert out[0][:3] == [1.0, 1.0, 1.0] and out[1][:3] == [0.0, 0.0, 0.0]
-
-
-def test_decode_rgb_real_codec_when_available(spark):
-    """With Pillow installed, a genuine PNG payload decodes through the
-    real codec (true pixels win over the metadata hint); without it the
-    deterministic fallback is used. Both modes keep the pipeline green:
-    the pipeline assertions below run in either environment."""
-    import numpy as np
-    import pytest
-
-    from kmertools_spark.sources.multimodal import _HAS_PIL, _decode_rgb
-
-    if _HAS_PIL:
-        import io
-
-        from PIL import Image
-
-        arr = (np.arange(5 * 4 * 3, dtype=np.uint8) * 3).reshape(4, 5, 3)
-        buf = io.BytesIO()
-        Image.fromarray(arr).save(buf, format="PNG")
-        got = _decode_rgb(buf.getvalue(), width=99, height=99)  # hint ignored
-        assert got.shape == (4, 5, 3) and (got == arr).all()
-    else:
-        pytest.skip("Pillow not installed: fallback mode covered below")
-
-
-def test_decode_rgb_fallback_deterministic():
-    import numpy as np
-
-    from kmertools_spark.sources.multimodal import _decode_rgb
-
-    payload = bytes(range(7)) * 3  # no image magic -> fallback tiling
-    a = _decode_rgb(payload, width=6, height=4)
-    b = _decode_rgb(payload, width=6, height=4)
-    assert a.shape == (4, 6, 3) and (a == b).all()
-    assert a.ravel()[: len(payload)].tolist() == list(payload)
-
-
-def test_audio_features_python_oracle_and_batch_independence(spark):
-    """audio_features must equal a per-clip python replay (int16-PCM
-    interpretation, windowed RMS, boundary-masked zero crossings) and be
-    independent of Arrow batch slicing (the concat/bincount fusion must
-    never bleed across clips)."""
-    import numpy as np
-
-    from kmertools_spark.sources.multimodal import audio_features, synth_media
-
-    media = synth_media(spark, n=24)
-    got = {
-        r.media_id: (r.n_samples, r.zcr, list(r.rms))
-        for r in audio_features(media, n_windows=4).collect()
-    }
-    clips = media.where("kind = 'audio'").select("media_id", "payload").collect()
-    assert set(got) == {r.media_id for r in clips} and got
-    for r in clips:
-        b = bytes(r.payload)
-        w = np.frombuffer(b[: len(b) & ~1], dtype="<i2").astype(np.float64) / 32768.0
-        n = w.size
-        rms = []
-        for k in range(4):
-            seg = w[(np.arange(n) * 4 // max(1, n)) == k]
-            rms.append(float(np.sqrt((seg * seg).sum() / max(1, seg.size))))
-        sign = w >= 0
-        zcr = float((sign[1:] != sign[:-1]).sum() / max(1, n - 1))
-        gn, gz, gr = got[r.media_id]
-        assert gn == n
-        assert abs(gz - zcr) < 1e-12
-        assert np.allclose(gr, rms, atol=1e-12)
-    # batch-size independence: 1-row batches == default batches
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
-    try:
-        got1 = {
-            r.media_id: (r.n_samples, r.zcr, list(r.rms))
-            for r in audio_features(media, n_windows=4).collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-    assert got1 == {k: (a, b, c) for k, (a, b, c) in got.items()} or all(
-        got1[k][0] == got[k][0]
-        and abs(got1[k][1] - got[k][1]) < 1e-12
-        and np.allclose(got1[k][2], got[k][2], atol=1e-12)
-        for k in got
-    )
 
 
 def test_streaming_sessionize_ntz_and_exact_gap_boundary(spark, tmp_path):

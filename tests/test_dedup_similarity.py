@@ -102,39 +102,92 @@ def test_lsh_hot_band_cap_flood(spark):
     assert c1 == c2
 
 
-def test_lsh_cap_exact_star_and_noop_semantics(spark):
-    """Pins the capped path's EXACT output (r7 flood-safe routing —
-    window-annotated stars for over-cap buckets, grouped pass for the
-    rest): identical docs share every band, so a flood of n identical
-    docs under cap < n must yield exactly the star set
-    {(min_id, other)} — nothing more; and a cap >= every bucket size
-    must reproduce the uncapped pair set bit-for-bit."""
-    from kmertools_spark.operators import lsh_candidate_pairs, minhash_signatures
+def _banding_reference(rows, cap):
+    """Plain-Python LSH pairs: rows are (id, bucket keys); every bucket
+    pairs all its distinct ids, unless it holds more than ``cap`` ids
+    (duplicates count, NULL ids neither count nor pair), in which case
+    it gives a star to its minimum."""
+    buckets = {}
+    for i, keys in rows:
+        if i is not None:
+            for key in keys:
+                buckets.setdefault(key, []).append(i)
+    out = set()
+    for ids in buckets.values():
+        lo = min(ids)
+        if cap is not None and len(ids) > cap:
+            out |= {(lo, i) for i in ids if i != lo}
+        else:
+            out |= {(a, b) for a in ids for b in ids if a < b}
+    return out
 
-    flood_ids = [7, 3, 11, 5, 19, 2, 13]  # unsorted on purpose; min = 2
-    rows = [(i, "exact same flood text body " * 5) for i in flood_ids]
-    rows += [(100 + i, f"distinct doc {i} carrying words {i * 17}") for i in range(12)]
+
+def test_lsh_cap_exact_star_and_noop_semantics(spark):
+    """The text and embedding LSH pair sets equal a plain-Python banding
+    at every cap: all pairs per bucket, a star to the minimum for an
+    over-cap bucket. The fixtures carry a flood, a duplicated id and a
+    NULL id inside the flood; the NULL id neither pairs nor counts
+    toward its bucket's size (8 ids + NULL under cap 8 is all pairs,
+    not a star), on both paths."""
+    from kmertools_spark.operators import (
+        cosine_neardup_lsh,
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+    from kmertools_spark.operators.similarity import _rademacher_planes
+    from kmertools_spark.oracle.hashing import N_PERMS, QUANT
+
+    flood = "exact same flood text body " * 5
+    # unsorted on purpose; 3 is duplicated, so the flood holds 8 ids
+    rows = [(i, flood) for i in (7, 3, 11, 5, 19, 2, 13, 3)] + [(None, flood)]
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
+    rng = np.random.RandomState(5)
+    for g in range(6):  # near-duplicate groups share some bands
+        base = " ".join(rng.choice(words, 12))
+        rows += [(100 + 10 * g + v, f"{base} v{v}") for v in range(5)]
+    rows += [(200 + i, f"distinct doc {i} carrying words {i * 17}") for i in range(12)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sigs = minhash_signatures(docs).cache()
 
-    uncapped = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, bands=4).collect()}
-    capped = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sigs, bands=4, max_bucket=4).collect()
-    }
-    flood = set(flood_ids)
-    star = {(2, i) for i in flood if i != 2}
-    # over-cap buckets contribute exactly the star edges; every other
-    # pair (if any) must also be in the uncapped set
-    assert star <= capped
-    assert not any(a in flood and b in flood and (a, b) not in star for a, b in capped)
-    assert capped - star <= uncapped
-    # cap above every bucket size is a strict no-op
-    noop = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sigs, bands=4, max_bucket=10_000).collect()
-    }
-    assert noop == uncapped
+    r = N_PERMS // 4
+    banded = [
+        (x.doc_id, [(b, "_".join(map(str, x.sig[b * r : (b + 1) * r]))) for b in range(4)])
+        for x in sigs.collect()
+    ]
+    sizes = {}
+    for i, keys in banded:
+        for key in keys:
+            sizes[key] = sizes.get(key, 0) + 1
+    assert sorted(sizes.values())[-1] == 9  # the flood bucket, NULL included
+    assert len(set(sizes.values())) > 3  # buckets of several sizes
+    for cap in (None, 2, 8, 64, 1000):
+        got = lsh_candidate_pairs(sigs, bands=4, max_bucket=cap).collect()
+        assert {(x.id_a, x.id_b) for x in got} == _banding_reference(banded, cap), cap
+        assert len(got) == len({(x.id_a, x.id_b) for x in got})
+    star = {(2, i) for i in (3, 5, 7, 11, 13, 19)}
+    assert star <= _banding_reference(banded, 2)
+    assert (3, 5) in _banding_reference(banded, 8)
+
+    # embeddings: one flood vector (every table) + a spread of random ones
+    dim, n_planes, n_tables = 8, 4, 3
+    vecs = [(i, [1.0, 0.5, -0.25, 0.125] * 2) for i in (7, 3, 11, 5, 19, 2, 13, 3)]
+    vecs += [(None, [1.0, 0.5, -0.25, 0.125] * 2)]
+    vecs += [(100 + i, rng.standard_normal(dim).tolist()) for i in range(30)]
+    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    signs_t = _rademacher_planes(dim, n_planes * n_tables).T
+    pow2 = 1 << np.arange(n_planes, dtype=np.int64)
+    tables = []
+    for i, v in vecs:
+        xq = np.floor(np.asarray(v) * QUANT).astype(np.int64)
+        bits = ((xq @ signs_t) > 0).reshape(n_tables, n_planes)
+        tables.append((i, [(t, int(bits[t] @ pow2)) for t in range(n_tables)]))
+    for cap in (None, 2, 8):
+        got = cosine_neardup_lsh(
+            emb, dim, threshold=-1.0, n_planes=n_planes, n_tables=n_tables,
+            planes="hash", max_bucket=cap,
+        ).collect()
+        assert {(x.id_a, x.id_b) for x in got} == _banding_reference(tables, cap), cap
+    assert (3, 5) in _banding_reference(tables, 8)
 
 
 def test_jaccard_for_pairs_matches_allpairs(spark):
@@ -395,26 +448,30 @@ def test_deterministic_sample_huge_ids_no_overflow(spark):
 def test_hash_plane_buckets_deterministic_and_match_spec(spark, emb):
     """planes="hash" buckets are a pure int64 function of the shared
     constants: partition-independent and equal to a direct numpy replay
-    of the spec (floor(v*QUANT) @ Rademacher signs > 0)."""
-    from kmertools_spark.operators.similarity import (
-        _rademacher_planes,
-        hyperplane_buckets,
-    )
+    of the spec (floor(v*QUANT) @ Rademacher signs > 0), table t on
+    global planes t*n_planes ..; a non-finite vector gets a NULL array."""
+    from kmertools_spark.operators import hyperplane_buckets_multi
+    from kmertools_spark.operators.similarity import _rademacher_planes
     from kmertools_spark.oracle.hashing import QUANT
 
-    b1 = hyperplane_buckets(emb, dim=16, n_planes=6, planes="hash")
-    b2 = hyperplane_buckets(emb.repartition(7, "vec_id"), 16, 6, planes="hash")
-    g1 = {r.vec_id: r.bucket for r in b1.collect()}
-    g2 = {r.vec_id: r.bucket for r in b2.collect()}
+    bad = spark.createDataFrame(
+        [(999, [float("nan")] + [0.5] * 15)], emb.schema
+    )
+    src = emb.unionByName(bad)
+    b1 = hyperplane_buckets_multi(src, 16, 6, 2, planes="hash")
+    b2 = hyperplane_buckets_multi(src.repartition(7, "vec_id"), 16, 6, 2, planes="hash")
+    g1 = {r.vec_id: r.buckets for r in b1.collect()}
+    g2 = {r.vec_id: r.buckets for r in b2.collect()}
     assert g1 == g2
+    assert g1.pop(999) is None
 
     rows = emb.orderBy("vec_id").collect()
     m = np.asarray([r.embedding for r in rows], dtype=np.float64)
     xq = np.floor(m * QUANT).astype(np.int64)
-    bits = (xq @ _rademacher_planes(16, 6).T) > 0
-    want = bits @ (1 << np.arange(6, dtype=np.int64))
+    bits = (xq @ _rademacher_planes(16, 12).T) > 0
+    want = bits.reshape(len(rows), 2, 6) @ (1 << np.arange(6, dtype=np.int64))
     assert [g1[r.vec_id] for r in rows] == want.tolist()
-    assert len(set(want.tolist())) > 1  # the fixture spreads over buckets
+    assert len(set(want[:, 0].tolist())) > 1  # the fixture spreads over buckets
 
 
 def test_ann_ivf_hash_init_deterministic_and_structured(spark, emb):

@@ -326,3 +326,45 @@ def test_training_prep_composition_single_exchange(spark):
     # 5.7s vs 1.05s on sf0.1 docs)
     fopt = _opt(pf)
     assert fopt.count("regexp_replace") <= 16, fopt.count("regexp_replace")
+
+
+@pytest.mark.parametrize("path", ["text", "text_capped", "embedding_capped"])
+def test_lsh_bucket_pairs_one_window_one_exchange(spark, path):
+    """LSH bucket pairs are one Window over the bucket keys: the banded
+    relation is shuffled once (hashpartitioning on the bucket keys,
+    below the final distinct's exchange), with no Union of a star
+    branch and no collect_list aggregate expanding pair arrays."""
+    import re
+
+    import numpy as np
+
+    from kmertools_spark.operators import (
+        cosine_neardup_lsh,
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+
+    if path == "embedding_capped":
+        emb = spark.createDataFrame(
+            [(i, np.random.RandomState(i).standard_normal(4).tolist()) for i in range(20)],
+            "vec_id long, embedding array<double>",
+        )
+        plan = _plan(cosine_neardup_lsh(emb, 4, planes="hash", max_bucket=4))
+        keys = r"hashpartitioning\(table#\d+, bucket#\d+L?, \d+\)"
+    else:
+        docs = spark.createDataFrame(
+            [(i, f"document {i % 5} text body") for i in range(20)],
+            "doc_id long, text string",
+        )
+        cap = 4 if path == "text_capped" else None
+        plan = _plan(lsh_candidate_pairs(minhash_signatures(docs), max_bucket=cap))
+        keys = r"hashpartitioning\(band#\d+, key#\d+, \d+\)"
+        assert plan.count("Exchange") == 2, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert len(re.findall(keys, plan)) == 1, plan
+    distinct = re.search(r"hashpartitioning\(id_a#\d+L?, id_b#\d+L?, \d+\)", plan)
+    assert distinct and distinct.start() < re.search(keys, plan).start(), plan
+    assert "Union" not in plan
+    for line in plan.splitlines():
+        if "collect_list" in line:
+            assert "Window [" in line, line
