@@ -737,16 +737,6 @@ def r33_ann_ivf(spark, sf_dir):
     )
 
 
-def q44_ann_topk_gemm(spark, sf_dir):
-    """q20's exact top-k through the GEMM physical path (per-batch
-    numpy matmul + per-batch top-k cut, broadcast query matrix) —
-    identical results, so it shares q20's SQL twin."""
-    from kmertools_spark.operators import cosine_topk_gemm
-
-    emb = _emb(spark, sf_dir)
-    return cosine_topk_gemm(emb, emb.where("vec_id < 8"), k=5)
-
-
 def q51_embedding_dedup_keep(spark, sf_dir):
     """Semantic (embedding) dedup keep-list end to end: hash-plane LSH
     candidates -> exact cosine verify -> connected components ->
@@ -815,7 +805,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # exercises the window plan and the bucketed plan, all hot and mixed);
     # every unique semantic in the registry is driver-gated. The tail is
     # purely alternate physical plans of gated oracles (q30<-q10,
-    # q40<-q15, q44<-q20). Adding query #51+ with a NEW oracle has two
+    # q40<-q15). Adding query #51+ with a NEW oracle has two
     # free moves (rotate q53/q56 into the tail) before folding is needed.
     return {
         "q01_transcripts_identity": q01_transcripts_identity,
@@ -871,7 +861,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- tail: alternate physical plans sharing a gated oracle ---
         "q30_coverage_join": q30_coverage_join,
         "q40_dedup_digest": q40_dedup_digest,
-        "q44_ann_topk_gemm": q44_ann_topk_gemm,
     }
 
 

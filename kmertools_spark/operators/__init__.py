@@ -33,7 +33,6 @@ from .similarity import (
     cosine_neardup_pairs,
     cosine_topk,
     embedding_dedup_keep,
-    cosine_topk_gemm,
     hyperplane_buckets_multi,
 )
 from .skew import salted_collect_list, salted_sum, with_salt
@@ -70,7 +69,6 @@ __all__ = [
     "cosine_neardup_pairs",
     "embedding_dedup_keep",
     "cosine_topk",
-    "cosine_topk_gemm",
     "hyperplane_buckets_multi",
     "salted_collect_list",
     "salted_sum",

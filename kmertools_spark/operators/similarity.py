@@ -1,9 +1,13 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k via JVM higher-order functions (zip_with +
-aggregate — whole-stage codegen, bit-reproducible in the SQL oracle),
-plus an LSH-bucketed (random hyperplane) scale path and a vectorized
-numpy matmul path for throughput.
+Exact cosine top-k is one plan, cosine_topk: a broadcast query matrix
+and one numpy matrix product per corpus Arrow batch. The approximate
+paths (hyperplane LSH buckets, IVF inverted lists, multi-table LSH
+near-dup candidates) score their candidates with a JVM
+higher-order-function dot (zip_with + aggregate, bit-reproducible in the
+SQL oracle); exact all-pairs near-dup is a tiled block-GEMM. Every
+cosine uses one zero-norm rule, dot / max(|a| * |b|, 1e-300): a zero
+vector has cos 0.0 with everything, never a division by zero.
 """
 
 from __future__ import annotations
@@ -11,9 +15,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -24,6 +28,10 @@ from pyspark.sql.types import (
 )
 
 ANN_SEED = 20240616
+
+# cosine_topk collects its query side to the driver: a larger query set
+# is an error (use ann_topk_lsh / ann_topk_ivf), not a driver OOM
+MAX_QUERY_ROWS = 65536
 
 
 def _dot(a, b):
@@ -38,90 +46,86 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("__norm", F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
 
 
+def _cos(a: str, b: str, norm_a: str, norm_b: str) -> Column:
+    """Cosine of two vector columns given their norms, with the numpy
+    kernels' zero-norm rule (denominator clamped at 1e-300 -> cos 0.0)."""
+    denom = F.greatest(F.col(norm_a) * F.col(norm_b), F.lit(1e-300))
+    return _dot(F.col(a), F.col(b)) / denom
+
+
+def _topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The rank tail of every top-k path over (query_id, neighbor_id,
+    cos): rank by cos desc then neighbor id asc, keep rank <= k, round
+    cos to 6 places (ranking sees the raw cosine)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id")
+    )
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .withColumn("cos", F.round("cos", 6))
+    )
+
+
+def _topk_within(
+    c: DataFrame, q: DataFrame, key: str, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Exact cosine top-k of each query among the corpus rows sharing its
+    ``key`` (a bucket or list id); both sides carry ``__norm``."""
+    c, q = c.alias("c"), q.alias("q")
+    j = c.join(
+        F.broadcast(q),
+        (F.col(f"c.{key}") == F.col(f"q.{key}"))
+        & (F.col(f"c.{id_col}") != F.col(f"q.{id_col}")),
+    ).select(
+        F.col(f"q.{id_col}").alias("query_id"),
+        F.col(f"c.{id_col}").alias("neighbor_id"),
+        _cos(f"q.{vec_col}", f"c.{vec_col}", "q.__norm", "c.__norm").alias("cos"),
+    )
+    return _topk(j, k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """Exact brute-force cosine top-k: (query_id, neighbor_id, cos, rank).
 
-    Queries are broadcast (the small side); corpus streams — this is
-    the baseline ANN oracle. Ties break by neighbor id ascending.
+    Ties break by neighbor id ascending, cos is rounded to 6 places
+    after ranking, and a query is never its own neighbor (equal ids).
+    A zero-norm vector has cos 0.0 with everything. A row whose id or
+    embedding is NULL, or whose embedding holds a NaN/inf coordinate, is
+    dropped on either side: it has no meaningful cosine.
+
+    Plan: the query side is collected once and shipped to executors as
+    a Spark broadcast (once per executor, not pickled into every task
+    closure). A mapInArrow over the corpus reads each Arrow batch's flat
+    embedding buffer as an (n, dim) matrix, scores it with one
+    (q, dim) x (dim, n) product, and emits a candidate set holding each
+    query's top-k of that batch: an argpartition on cos, with boundary
+    ties (the kth value inside and outside the selection) resolved by
+    smallest neighbor id, so the id-ascending tie rule stays exact. One
+    Window then ranks the O(batches * q * k) candidates globally.
+
+    Driver bound: the query collect is limit(MAX_QUERY_ROWS + 1), so an
+    oversized query side raises ValueError having pulled at most that
+    many rows. Executor bound: one q-by-n float64 score matrix per Arrow
+    batch (argpartition's index output is chunked to 1024 queries).
+    The query broadcast lives until the returned DataFrame is
+    garbage-collected (ContextCleaner reclaims it with the plan);
+    callers looping over many query sets should not retain the results.
     """
-    c = with_norm(corpus, vec_col).alias("c")
-    q = with_norm(queries, vec_col).alias("q")
-    j = c.join(
-        F.broadcast(q), F.col(f"c.{id_col}") != F.col(f"q.{id_col}"), "inner"
-    ).select(
-        F.col(f"q.{id_col}").alias("query_id"),
-        F.col(f"c.{id_col}").alias("neighbor_id"),
-        (
-            _dot(F.col(f"q.{vec_col}"), F.col(f"c.{vec_col}"))
-            / (F.col("q.__norm") * F.col("c.__norm"))
-        ).alias("cos"),
+    qrows = (
+        queries.select(id_col, vec_col).dropna().limit(MAX_QUERY_ROWS + 1).collect()
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    out = (
-        j.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-    if round_to is not None:
-        out = out.withColumn("cos", F.round("cos", round_to))
-    return out
-
-
-def cosine_topk_gemm(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_to: int | None = 6,
-    max_query_rows: int = 65536,
-) -> DataFrame:
-    """Exact brute-force cosine top-k via per-batch GEMM — the
-    throughput path for large query sets.
-
-    The query matrix is collected once (queries are the small side by
-    contract, same as cosine_topk's broadcast) and shipped to executors
-    as a Spark BROADCAST (torrent-distributed once per executor, not
-    re-pickled into every task closure); each corpus Arrow batch
-    contributes one numpy matrix product and a per-batch top-k cut, so
-    at most batch_k rows per (query, batch) reach the final global
-    top-k window — candidate traffic is O(n_batches * q * k), not
-    O(corpus * q). Same results as cosine_topk (ties by neighbor id
-    ascending; equality-tested).
-
-    ``max_query_rows`` makes the small-side contract a hard error
-    instead of a driver OOM (r2 VERDICT item 3): the collect is bounded
-    by limit(max+1), so an oversized query set fails fast having pulled
-    at most max+1 rows. Executor peak memory is bounded by the single
-    q-by-n score matrix: the per-batch cut is a chunked argpartition
-    with explicit boundary-tie resolution, not a full lexsort (which
-    built three more q-by-n temporaries — code-review r5).
-
-    Degenerate-input notes (code-review r4): a zero-norm corpus vector
-    gets cos=0.0 here (clamped denominator) where the HOF plan's
-    division yields NULL (ranked last), and NaN-containing vectors are
-    dropped here (isfinite cut) where Spark sorts NaN first — the two
-    plans agree on all finite nonzero embeddings (the gate corpus), and
-    neither degenerate ranking is meaningful. The query broadcast lives
-    until the returned DataFrame is garbage-collected (ContextCleaner
-    reclaims it with the plan); callers looping over many query sets
-    should not retain the results.
-    """
-    qrows = queries.select(id_col, vec_col).limit(max_query_rows + 1).collect()
-    if len(qrows) > max_query_rows:
+    if len(qrows) > MAX_QUERY_ROWS:
         raise ValueError(
-            f"cosine_topk_gemm: query side exceeds max_query_rows="
-            f"{max_query_rows}; it is collected to the driver by design "
-            "(small-side contract). Raise the cap explicitly, or use the "
-            "LSH/IVF paths for large query sets."
+            f"cosine_topk: query side exceeds MAX_QUERY_ROWS={MAX_QUERY_ROWS}; "
+            "it is collected to the driver by design. Use the LSH/IVF "
+            "paths for large query sets."
         )
     if not qrows:
         return corpus.sparkSession.createDataFrame(
@@ -132,37 +136,21 @@ def cosine_topk_gemm(
     qn = np.sqrt((Q * Q).sum(axis=1))
     bq = corpus.sparkSession.sparkContext.broadcast((q_ids, Q, qn))
 
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cos", DoubleType()),
-        ]
-    )
-
     def gen(batches):
         q_ids, Q, qn = bq.value
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0 or q_ids.size == 0:
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
                 continue
-            ids = pdf[id_col].to_numpy(np.int64)
-            C = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            ids = b.column(0).to_numpy().astype(np.int64, copy=False)
+            C = b.column(1).flatten().to_numpy(zero_copy_only=False)
+            C = C.astype(np.float64).reshape(n, Q.shape[1])
             cn = np.sqrt((C * C).sum(axis=1))
             S = (Q @ C.T) / np.maximum(np.outer(qn, cn), 1e-300)
             S[q_ids[:, None] == ids[None, :]] = -np.inf  # exclude self-pairs
             kk = min(k, n)
-            # Per-batch cut: emit a candidate SET containing each
-            # query's true top-kk by (cos desc, neighbor asc) — the
-            # final window re-ranks globally, so per-batch order is
-            # irrelevant, only membership. argpartition on cos alone is
-            # O(n) and memory-light (the old full lexsort built -S plus
-            # a q-by-n repeated id key matrix — 3 extra q*n arrays,
-            # code-review r5); boundary ties (kth value appearing both
-            # inside and outside the selection) are resolved explicitly
-            # by smallest neighbor id, so the id-ascending tie contract
-            # stays exact. Query chunking bounds argpartition's own
-            # q-by-n index output to chunk-by-n.
+            # the final window re-ranks globally, so only membership of
+            # each query's top-kk matters here, not per-batch order
             sel_qi: list[np.ndarray] = []
             sel_ci: list[np.ndarray] = []
             CH = 1024
@@ -187,20 +175,15 @@ def cosine_topk_gemm(
             ci = np.concatenate(sel_ci)
             cos = S[qi, ci]
             keep = np.isfinite(cos)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[qi][keep],
-                    "neighbor_id": ids[ci][keep],
-                    "cos": cos[keep],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(q_ids[qi][keep]), pa.array(ids[ci][keep]), pa.array(cos[keep])],
+                names=["query_id", "neighbor_id", "cos"],
             )
 
-    cand = corpus.select(id_col, vec_col).mapInPandas(gen, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    out = cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-    if round_to is not None:
-        out = out.withColumn("cos", F.round("cos", round_to))
-    return out
+    cand = corpus.select(id_col, vec_col).dropna().mapInArrow(
+        gen, "query_id long, neighbor_id long, cos double"
+    )
+    return _topk(cand, k)
 
 
 def _rademacher_planes(dim: int, n_planes: int) -> np.ndarray:
@@ -244,8 +227,14 @@ def hyperplane_buckets_multi(
     A vector containing a non-finite coordinate gets a NULL array (the
     float->int64 cast of NaN is undefined and would hand it an
     arbitrary-but-real bucket), so a posexplode consumer drops it and it
-    joins no candidates — the same contract as cosine_topk_gemm's
-    isfinite cut.
+    joins no candidates — the same contract as cosine_topk's isfinite
+    cut.
+
+    The UDF is marked nondeterministic so the optimizer evaluates it
+    once per read: a consumer's inferred filter (posexplode's
+    ``size(buckets) > 0``, a bucket join's ``isnotnull``) would
+    otherwise be pushed below the projection with the UDF inlined into
+    it, stacking a second ArrowEvalPython over the same vectors.
     """
     pow2 = 1 << np.arange(n_planes, dtype=np.int64)
     if planes == "hash":
@@ -283,7 +272,7 @@ def hyperplane_buckets_multi(
             mask=pa.array(~np.isfinite(m).all(axis=1)),
         )
 
-    return df.withColumn(out_col, buckets(F.col(vec_col)))
+    return df.withColumn(out_col, buckets.asNondeterministic()(F.col(vec_col)))
 
 
 def ann_topk_lsh(
@@ -315,27 +304,8 @@ def ann_topk_lsh(
             vec_col,
         ).withColumn("bucket", F.col("buckets")[0])
 
-    c = bucketed(corpus).alias("c")
-    q = bucketed(queries).alias("q")
-    j = c.join(
-        F.broadcast(q),
-        (F.col("c.bucket") == F.col("q.bucket"))
-        & (F.col(f"c.{id_col}") != F.col(f"q.{id_col}")),
-    ).select(
-        F.col(f"q.{id_col}").alias("query_id"),
-        F.col(f"c.{id_col}").alias("neighbor_id"),
-        (
-            _dot(F.col(f"q.{vec_col}"), F.col(f"c.{vec_col}"))
-            / (F.col("q.__norm") * F.col("c.__norm"))
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .withColumn("cos", F.round("cos", 6))
+    return _topk_within(
+        bucketed(corpus), bucketed(queries), "bucket", id_col, vec_col, k
     )
 
 
@@ -367,6 +337,7 @@ def ann_topk_ivf(
     lets the DuckDB oracle verify the whole query (gate row r33); list
     quality is k-means||-init grade (no Lloyd iterations).
     """
+    quant = None
     if init == "hash":
         from ..oracle.hashing import CENT_A, CENT_B, MOD, QUANT
 
@@ -384,28 +355,10 @@ def ann_topk_ivf(
             .limit(n_lists)
             .collect()
         )
-        centers_q = np.floor(
+        quant = QUANT
+        centers = np.floor(
             np.asarray([r[1] for r in crows], dtype=np.float64) * QUANT
         ).astype(np.int64)  # (n_lists, dim), list_id = hash-rank order
-
-        def _int_dists(vecs: pd.Series) -> np.ndarray:
-            m = np.vstack(vecs.to_numpy()).astype(np.float64)
-            xq = np.floor(m * QUANT).astype(np.int64)
-            return ((xq[:, None, :] - centers_q[None, :, :]) ** 2).sum(axis=2)
-
-        @pandas_udf("array<int>")
-        def probe_lists(vecs: pd.Series) -> pd.Series:
-            d = _int_dists(vecs)
-            # stable sort: ties resolve to the smaller list id, same as
-            # the oracle's ORDER BY dist, list_id
-            order = np.argsort(d, axis=1, kind="stable")[:, :n_probe].astype(np.int32)
-            return pd.Series(list(order))
-
-        @pandas_udf("int")
-        def assign_list(vecs: pd.Series) -> pd.Series:
-            # argmin returns the first minimum -> smallest list id on ties
-            return pd.Series(_int_dists(vecs).argmin(axis=1).astype(np.int32))
-
     else:
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
@@ -415,57 +368,56 @@ def ann_topk_ivf(
             array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
         )
         model = KMeans(k=n_lists, seed=seed, featuresCol="features").fit(feat)
-        centers = [c.tolist() for c in model.clusterCenters()]
+        centers = np.asarray(model.clusterCenters(), dtype=np.float64)
+    assign_list, probe_lists = _ivf_list_udfs(centers, quant, n_probe)
 
-        @pandas_udf("array<int>")
-        def probe_lists(vecs: pd.Series) -> pd.Series:
-            C = np.asarray(centers)  # (n_lists, dim)
-            m = np.vstack(vecs.to_numpy()).astype(np.float64)
-            d = ((m[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            order = np.argsort(d, axis=1)[:, :n_probe].astype(np.int32)
-            return pd.Series(list(order))
-
-        @pandas_udf("int")
-        def assign_list(vecs: pd.Series) -> pd.Series:
-            C = np.asarray(centers)
-            m = np.vstack(vecs.to_numpy()).astype(np.float64)
-            d = ((m[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            return pd.Series(d.argmin(axis=1).astype(np.int32))
-
-    c = with_norm(
-        corpus.withColumn("list_id", assign_list(F.col(vec_col))), vec_col
-    ).alias("c")
-    q = with_norm(
-        queries.withColumn(
-            "list_id", F.explode(probe_lists(F.col(vec_col)))
-        ),
-        vec_col,
-    ).alias("q")
-    j = c.join(
-        F.broadcast(q),
-        (F.col("c.list_id") == F.col("q.list_id"))
-        & (F.col(f"c.{id_col}") != F.col(f"q.{id_col}")),
-    ).select(
-        F.col(f"q.{id_col}").alias("query_id"),
-        F.col(f"c.{id_col}").alias("neighbor_id"),
-        (
-            _dot(F.col(f"q.{vec_col}"), F.col(f"c.{vec_col}"))
-            / (F.col("q.__norm") * F.col("c.__norm"))
-        ).alias("cos"),
-    )
     # no distinct: each corpus row has exactly one list_id and
     # probe_lists yields n_probe DISTINCT lists per query, so a
-    # (query, corpus) pair matches at most once — the old distinct()
-    # was a full extra shuffle of the largest intermediate for nothing
-    # (code-review r4)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
+    # (query, corpus) pair matches at most once
+    return _topk_within(
+        with_norm(corpus.withColumn("list_id", assign_list(F.col(vec_col))), vec_col),
+        with_norm(
+            queries.withColumn("list_id", F.explode(probe_lists(F.col(vec_col)))),
+            vec_col,
+        ),
+        "list_id",
+        id_col,
+        vec_col,
+        k,
     )
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .withColumn("cos", F.round("cos", 6))
-    )
+
+
+def _ivf_list_udfs(centers: np.ndarray, quant: int | None, n_probe: int):
+    """(assign_list, probe_lists) Arrow UDFs over the (n_lists, dim)
+    ``centers``: a vector's nearest list id, and its ``n_probe`` nearest
+    list ids in order, by squared Euclidean distance, computed in
+    floor(v * quant) int64 fixed point when ``quant`` is given. Ties go
+    to the smaller list id (argmin's first minimum, a stable argsort),
+    as in the oracle's ORDER BY dist, list_id."""
+    n_lists, dim = centers.shape
+    n_probe = min(n_probe, n_lists)
+
+    def dists(vecs: pa.Array) -> np.ndarray:
+        m = vecs.flatten().to_numpy(zero_copy_only=False)
+        m = m.astype(np.float64).reshape(len(vecs), dim)
+        if quant is not None:
+            m = np.floor(m * quant).astype(np.int64)
+        return ((m[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+
+    @arrow_udf(IntegerType())
+    def assign_list(vecs: pa.Array) -> pa.Array:
+        return pa.array(dists(vecs).argmin(axis=1).astype(np.int32))
+
+    @arrow_udf(ArrayType(IntegerType()))
+    def probe_lists(vecs: pa.Array) -> pa.Array:
+        order = np.argsort(dists(vecs), axis=1, kind="stable")[:, :n_probe]
+        offsets = pa.array(np.arange(len(vecs) + 1, dtype=np.int32) * n_probe)
+        flat = pa.array(order.astype(np.int32).reshape(-1))
+        return pa.ListArray.from_arrays(offsets, flat)
+
+    # nondeterministic for the reason given in hyperplane_buckets_multi:
+    # the join's inferred isnotnull(list_id) would re-inline the UDF
+    return assign_list.asNondeterministic(), probe_lists
 
 
 def cosine_neardup_lsh(
@@ -554,10 +506,7 @@ def cosine_neardup_lsh(
         .select(
             "id_a",
             "id_b",
-            F.round(
-                _dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
-                6,
-            ).alias("cos"),
+            F.round(_cos("__va", "__vb", "__na", "__nb"), 6).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
     )

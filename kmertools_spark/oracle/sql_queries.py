@@ -855,8 +855,8 @@ FROM ranked WHERE rank <= {k}"""
 
 
 def _add_ann_oracles(q: dict[str, str]) -> None:
-    """Exact twins for the deterministic ANN paths (gate rows r30/r33 +
-    the q44/q45 plan variants). The Spark side runs the hash-plane /
+    """Exact twins for the deterministic ANN paths (gate rows r30, r33,
+    q45 and q51). The Spark side runs the hash-plane /
     hash-init modes (operators/similarity.py), whose every bucket and
     list decision is exact int64 arithmetic on the shared constants —
     so these are full hash-checked oracles, not rows-only."""
@@ -923,9 +923,6 @@ cand AS (
   FROM probe pr JOIN assign a
     ON a.list_id = pr.list_id AND a.vec_id <> pr.vec_id
 ),{_cos_rank_tail()}"""
-
-    # q44: the GEMM physical path computes the identical exact top-k
-    q["q44_ann_topk_gemm"] = q["q20_ann_topk"]
 
     # q45/q51 shared body: multi-table hash-plane near-dup candidates +
     # exact cosine verify (cosine_neardup_lsh(planes="hash"),

@@ -55,6 +55,153 @@ def _topk_sets(df):
     return out
 
 
+def _ref_topk(corpus, queries, k):
+    """Plain-numpy full-sort exact top-k over [(id, vector)] rows:
+    {(query_id, rank): (neighbor_id, cos)}. NULL and non-finite vectors
+    are dropped, cos = dot / max(|a| * |b|, 1e-300), ranked by cos desc
+    then neighbor id asc, cos rounded to 6 places after ranking."""
+
+    def finite(rows):
+        out = []
+        for i, v in rows:
+            if v is not None:
+                a = np.asarray(v, dtype=np.float64)
+                if np.isfinite(a).all():
+                    out.append((i, a))
+        return out
+
+    cs = finite(corpus)
+    want = {}
+    for qi, qv in finite(queries):
+        scored = sorted(
+            (-float(qv @ cv) / max(np.linalg.norm(qv) * np.linalg.norm(cv), 1e-300), ci)
+            for ci, cv in cs
+            if ci != qi
+        )
+        for rank, (neg, ci) in enumerate(scored[:k], 1):
+            want[(qi, rank)] = (ci, round(-neg, 6))
+    return want
+
+
+def _assert_topk(df, want):
+    got = {(r.query_id, r.rank): (r.neighbor_id, r.cos) for r in df.collect()}
+    assert set(got) == set(want), (sorted(got), sorted(want))
+    for key, (nb, cos) in want.items():
+        assert got[key][0] == nb, (key, got[key], (nb, cos))
+        assert abs(got[key][1] - cos) < 2e-6, (key, got[key], (nb, cos))
+
+
+def test_cosine_topk_empty_queries(spark, emb):
+    out = cosine_topk(emb, emb.where("vec_id < 0"), k=5)
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == [
+        "query_id", "neighbor_id", "cos", "rank",
+    ]
+
+
+def test_cosine_topk_query_cap(spark, monkeypatch):
+    """The small-side contract is a hard error, not a driver OOM: the
+    bounded collect pulls at most MAX_QUERY_ROWS + 1 rows then raises."""
+    from kmertools_spark.operators import similarity
+
+    emb = spark.createDataFrame(
+        [(i, np.random.RandomState(i).standard_normal(4).tolist()) for i in range(10)],
+        "vec_id long, embedding array<double>",
+    )
+    monkeypatch.setattr(similarity, "MAX_QUERY_ROWS", 4)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS=4"):
+        cosine_topk(emb, emb, k=2)
+    # under the cap: works as before
+    assert cosine_topk(emb, emb.where("vec_id < 3"), k=2).count() == 6
+
+
+def test_cosine_topk_boundary_ties_exact(spark, emb):
+    """The per-batch argpartition cut must resolve kth-value ties by
+    smallest neighbor id exactly like a full sort: planted duplicate
+    vectors straddle the top-k boundary, so arbitrary tie selection
+    would surface. Ranks, rounded cosines and tie-breaks equal the
+    numpy full-sort reference, also across 4 corpus partitions."""
+    base = np.eye(8, dtype=np.float64)
+    rows = []
+    # 6 identical copies of direction 0 (ids 10..15), query also dir 0:
+    # all tie at cos=1.0 and k=3 must pick ids 10,11,12
+    for i in range(6):
+        rows.append((10 + i, base[0].tolist()))
+    for i in range(5):
+        rows.append((30 + i, (base[1] * (i + 1)).tolist()))  # cos 0 to q
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    qrows = [(99, base[0].tolist())]
+    q = spark.createDataFrame(qrows, "vec_id long, embedding array<double>")
+    want = _ref_topk(rows, qrows, 3)
+    assert {key: nb for key, (nb, _) in want.items()} == {
+        (99, 1): 10, (99, 2): 11, (99, 3): 12,
+    }
+    _assert_topk(cosine_topk(corpus, q, k=3), want)
+
+    erows = [(r.vec_id, r.embedding) for r in emb.collect()]
+    _assert_topk(
+        cosine_topk(emb.repartition(4), emb.where("vec_id < 10"), k=5),
+        _ref_topk(erows, [r for r in erows if r[0] < 10], 5),
+    )
+
+
+def test_cosine_topk_drops_null_and_nan_embeddings(spark):
+    """A NULL embedding or one holding a NaN is dropped on both sides:
+    it is never a neighbor, and as a query it yields no rows."""
+    rng = np.random.RandomState(5)
+    rows = [(i, rng.standard_normal(4).tolist()) for i in range(8)]
+    rows.append((20, None))
+    rows.append((21, [1.0, float("nan"), 0.0, 0.0]))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    want = _ref_topk(rows, rows, 3)
+    assert {qi for qi, _ in want} == set(range(8))
+    _assert_topk(cosine_topk(df, df, k=3), want)
+
+
+def test_zero_norm_cosine_is_zero_on_every_path(spark):
+    """A zero vector has cos 0.0 with everything on every cosine path
+    (dot / max(|a| * |b|, 1e-300)); under ANSI mode a plain division
+    raised DIVIDE_BY_ZERO instead."""
+    from kmertools_spark.operators import (
+        cosine_neardup_lsh,
+        embedding_dedup_keep,
+    )
+
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 0.0]), (4, [1.0, 1.0])]
+    z = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    want = _ref_topk(rows, rows, 4)
+    assert want[(1, 1)] == (0, 0.0) and want[(1, 4)] == (4, 0.0)
+    ref_cos = {(qi, nb): cos for (qi, _), (nb, cos) in want.items()}
+
+    _assert_topk(cosine_topk(z, z, k=4), want)
+    # probing every list makes IVF exact
+    _assert_topk(
+        ann_topk_ivf(z, z, k=4, n_lists=2, n_probe=2, init="hash"), want
+    )
+    lsh = {
+        (r.query_id, r.neighbor_id): r.cos
+        for r in ann_topk_lsh(z, z, dim=2, k=4, n_planes=2, planes="hash").collect()
+    }
+    assert lsh[(1, 3)] == lsh[(3, 1)] == 0.0  # zero vectors share bucket 0
+    assert all(abs(c - ref_cos[key]) < 2e-6 for key, c in lsh.items()), lsh
+    pairs = {
+        (r.id_a, r.id_b): r.cos
+        for r in cosine_neardup_lsh(
+            z, 2, threshold=-1.0, n_planes=2, planes="hash"
+        ).collect()
+    }
+    assert pairs[(1, 3)] == 0.0
+    assert all(abs(c - ref_cos[key]) < 2e-6 for key, c in pairs.items()), pairs
+    keep = {
+        r.vec_id: (r.cluster_id, r.keep)
+        for r in embedding_dedup_keep(
+            z, 2, threshold=0.5, n_planes=2, planes="hash"
+        ).collect()
+    }
+    assert len(keep) == 5
+    assert keep[1] == (1, True) and keep[3] == (3, True)
+
+
 def test_ann_recall_vs_bruteforce(spark, emb):
     q = emb.where("vec_id < 10")
     exact = _topk_sets(cosine_topk(emb, q, k=5))
@@ -259,25 +406,6 @@ def test_cosine_neardup_blocked_matches_naive(spark, emb):
         assert abs(got[k] - want[k]) < 2e-6, (k, got[k], want[k])
 
 
-def test_cosine_topk_gemm_matches_hof(spark, emb):
-    """GEMM brute-force top-k == the JVM higher-order-function top-k
-    (same ranks, same rounded cosines, same tie-breaks)."""
-    from kmertools_spark.operators import cosine_topk, cosine_topk_gemm
-
-    q = emb.where("vec_id < 10")
-    cols = ["query_id", "neighbor_id", "cos", "rank"]
-
-    def rows(d):
-        return sorted(tuple(r) for r in d.select(*cols).collect())
-
-    a = rows(cosine_topk(emb, q, k=5))
-    b = rows(cosine_topk_gemm(emb.repartition(4), q, k=5))
-    assert len(a) == len(b)
-    for ra, rb in zip(a, b):
-        assert ra[:2] == rb[:2] and ra[3] == rb[3], (ra, rb)
-        assert abs(ra[2] - rb[2]) < 2e-6, (ra, rb)
-
-
 def test_exact_dedup_digest_matches_exact(spark):
     """sha256-digest grouping (the 100 TB shuffle-shrinking path) equals
     byte-exact text grouping."""
@@ -322,33 +450,6 @@ def test_cosine_neardup_lsh_recall_and_precision(spark):
     recall = len(approx) / max(1, len(exact))
     assert len(exact) >= 25  # the planted pairs are found by the exact path
     assert recall >= 0.8, (recall, len(exact), len(approx))
-
-
-def test_cosine_topk_gemm_empty_queries(spark, emb):
-    from kmertools_spark.operators import cosine_topk_gemm
-
-    out = cosine_topk_gemm(emb, emb.where("vec_id < 0"), k=5)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "query_id", "neighbor_id", "cos", "rank",
-    ]
-
-
-def test_cosine_topk_gemm_query_cap(spark):
-    """The small-side contract is a hard error, not a driver OOM: the
-    bounded collect pulls at most max+1 rows then raises."""
-    import numpy as np
-
-    from kmertools_spark.operators import cosine_topk_gemm
-
-    emb = spark.createDataFrame(
-        [(i, np.random.RandomState(i).standard_normal(4).tolist()) for i in range(10)],
-        "vec_id long, embedding array<double>",
-    )
-    with pytest.raises(ValueError, match="max_query_rows"):
-        cosine_topk_gemm(emb, emb, k=2, max_query_rows=4)
-    # under the cap: works as before
-    assert cosine_topk_gemm(emb, emb.where("vec_id < 3"), k=2).count() == 6
 
 
 def test_dedup_clusters_stress_path_and_star(spark):
@@ -678,34 +779,6 @@ def test_dedup_keep_single_distinct_composition(spark):
     }
     assert got == want
     spark.catalog.clearCache()
-
-
-def test_cosine_topk_gemm_boundary_ties_exact(spark):
-    """code-review r5: the argpartition per-batch cut must resolve
-    kth-value ties by smallest neighbor id exactly like the full-sort
-    formulation — planted duplicate vectors straddle the top-k
-    boundary so arbitrary tie selection would surface."""
-    from kmertools_spark.operators import cosine_topk, cosine_topk_gemm
-
-    base = np.eye(8, dtype=np.float64)
-    rows = []
-    # 6 identical copies of direction 0 (ids 10..15), query also dir 0:
-    # all tie at cos=1.0 and k=3 must pick ids 10,11,12
-    for i in range(6):
-        rows.append((10 + i, base[0].tolist()))
-    for i in range(5):
-        rows.append((30 + i, (base[1] * (i + 1)).tolist()))  # cos 0 to q
-    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = spark.createDataFrame([(99, base[0].tolist())], "vec_id long, embedding array<double>")
-    got = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in cosine_topk_gemm(corpus, q, k=3).collect()
-    }
-    want = {
-        (r.query_id, r.rank): r.neighbor_id
-        for r in cosine_topk(corpus, q, k=3).collect()
-    }
-    assert got == want == {(99, 1): 10, (99, 2): 11, (99, 3): 12}, (got, want)
 
 
 def test_band_key_struct_rejects_overflowing_bands(spark):

@@ -368,3 +368,47 @@ def test_lsh_bucket_pairs_one_window_one_exchange(spark, path):
     for line in plan.splitlines():
         if "collect_list" in line:
             assert "Window [" in line, line
+
+
+@pytest.mark.parametrize(
+    "path, udf, reads",
+    [
+        ("neardup", "buckets", 1),
+        ("neardup_capped", "buckets", 1),
+        ("ann_lsh", "buckets", 2),
+        ("ann_ivf", "assign_list", 1),
+    ],
+)
+def test_vector_udfs_evaluated_once_per_read(spark, path, udf, reads):
+    """The bucket / list-id Arrow UDFs run once per read of the vectors.
+    A consumer's inferred filter (posexplode's size(buckets) > 0, a join's
+    isnotnull on the key) must not be pushed below the projection with the
+    UDF re-inlined, which stacks a second ArrowEvalPython over the same
+    rows. Counted in the final AQE plan (the uncapped self-join reuses
+    its banded exchange: one read)."""
+    import re
+
+    import numpy as np
+
+    from kmertools_spark.operators import (
+        ann_topk_ivf,
+        ann_topk_lsh,
+        cosine_neardup_lsh,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, np.random.RandomState(i).standard_normal(4).tolist()) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    q = emb.where("vec_id < 3")
+    df = {
+        "neardup": lambda: cosine_neardup_lsh(emb, 4, threshold=-1.0, planes="hash"),
+        "neardup_capped": lambda: cosine_neardup_lsh(
+            emb, 4, threshold=-1.0, planes="hash", max_bucket=4
+        ),
+        "ann_lsh": lambda: ann_topk_lsh(emb, q, dim=4, planes="hash"),
+        "ann_ivf": lambda: ann_topk_ivf(emb, q, n_lists=3, init="hash"),
+    }[path]()
+    assert df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert len(re.findall(rf"ArrowEvalPython \[{udf}\(", final)) == reads, final
