@@ -17,15 +17,28 @@ over ``n_buckets`` analytic time buckets, and each bucket's carry-in
 (the latest event of the entity's earlier buckets) is joined back to
 its probes by broadcast.
 
-Evaluations of ``features``: ``asof_join`` reads it once. When a key is
-hot, ``asof_join_auto`` reads it 3 times: the sizing pass, the window
-input and the carry aggregate. Spark does not reuse an exchange above a
-mapInArrow/mapInPandas, so both consumers of the shuffled union
-recompute the caller's frame.
+Evaluations of ``features``: ``asof_join`` reads it once.
+``asof_join_auto`` reads it more than once (the sizing pass, then the
+window input and the carry aggregate when a key is hot, or the plain
+window when none is), and Spark does not reuse an exchange above a
+mapInArrow/mapInPandas, so each read would recompute the caller's
+frame. It therefore narrows ``features`` to the columns it reads and
+pins them with a lazy DISK_ONLY ``localCheckpoint``: the sizing pass
+evaluates the caller's frame once and fills the pin, and every later
+read takes the stored blocks, so the caller's frame is evaluated once.
+The pin is skipped when the input is already materialized (only
+Project/Filter over a cached, checkpointed, local, file or range
+leaf), whose re-reads cost less than the write: such an input is read
+3 times with a hot key, 2 without. The pin holds one row of the
+narrowed columns per feature row, on executor disk only, and is
+released when the result DataFrame is garbage-collected. Like
+``pack_documents``' local checkpoint it does not survive executor
+loss: a lost block fails the query instead of being recomputed.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -34,6 +47,18 @@ from .skew import hot_keys
 from .timeutil import epoch_ms
 
 _EV = "__is_event"
+# optimized-plan leaves whose rows are already stored: re-reading them
+# is cheaper than writing a pin
+_STORED = {"InMemoryRelation", "LogicalRDD", "LocalRelation", "LogicalRelation", "Range"}
+
+
+def _stored(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is only Project/Filter nodes
+    over an already-materialized leaf."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.children().head()
+    return node.nodeName() in _STORED
 
 
 def _union_marker(
@@ -180,11 +205,26 @@ def asof_join_auto(
          the buckets turns them into an exclusive prefix, the carry-in;
       4. a probe takes its in-bucket pick, else its bucket's carry-in.
 
-    ``features`` is evaluated 3 times when a key is hot (module
-    docstring). BENCH/BASELINE.md holds the measured crossover
-    (bench_skew_asof.py)."""
+    The caller's ``features`` is evaluated once: its columns ``on``,
+    ``ts_col``, ``value_cols`` (and ``turn_idx`` when present) are
+    pinned with a lazy DISK_ONLY localCheckpoint that the sizing pass
+    fills. An already-materialized input (Project/Filter over a cache,
+    checkpoint, local relation, file scan or range) is not pinned and is
+    read 3 times with a hot key, 2 without. The pin is one row of the
+    narrowed columns per feature row on executor disk, released when
+    the result DataFrame is garbage-collected; it does not survive
+    executor loss (a lost block fails the query). BENCH/BASELINE.md
+    holds the measured crossover (bench_skew_asof.py)."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    cols = [on, ts_col, *value_cols]
+    if "turn_idx" in features.columns:
+        cols.append("turn_idx")
+    features = features.select(*dict.fromkeys(cols))
+    if not _stored(features):
+        features = features.localCheckpoint(
+            eager=False, storageLevel=StorageLevel.DISK_ONLY
+        )
     tms = epoch_ms(ts_col)
     hot = hot_keys(features, on, hot_threshold, __lo=F.min(tms), __hi=F.max(tms))
     if not hot:

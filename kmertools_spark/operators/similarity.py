@@ -186,6 +186,18 @@ def cosine_topk(
     return _topk(cand, k)
 
 
+def _vector_rows(vecs: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """The (n, dim) float64 matrix of a list<double> Arrow array and the
+    mask of its usable rows. ``flatten`` skips NULL slots, so a NULL
+    vector stays a zero row; it and any row holding a non-finite
+    coordinate are masked out."""
+    ok = vecs.is_valid().to_numpy(zero_copy_only=False)
+    m = np.zeros((len(vecs), dim))
+    m[ok] = vecs.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+    ok &= np.isfinite(m).all(axis=1)
+    return m, ok
+
+
 def _rademacher_planes(dim: int, n_planes: int) -> np.ndarray:
     """Deterministic +1/-1 hyperplane signs s[p, d] from the shared hash
     constants: sign(i) for flat index i = p * dim + d.
@@ -224,11 +236,11 @@ def hyperplane_buckets_multi(
     (n, tables) bucket matrix leaves Python as an Arrow list array over
     its own flat buffer.
 
-    A vector containing a non-finite coordinate gets a NULL array (the
-    float->int64 cast of NaN is undefined and would hand it an
-    arbitrary-but-real bucket), so a posexplode consumer drops it and it
-    joins no candidates — the same contract as cosine_topk's isfinite
-    cut.
+    A NULL vector, or one containing a non-finite coordinate, gets a
+    NULL array (the float->int64 cast of NaN is undefined and would hand
+    it an arbitrary-but-real bucket), so a posexplode consumer drops it
+    and it joins no candidates — the same contract as cosine_topk's
+    isfinite cut.
 
     The UDF is marked nondeterministic so the optimizer evaluates it
     once per read: a consumer's inferred filter (posexplode's
@@ -262,14 +274,11 @@ def hyperplane_buckets_multi(
     @arrow_udf(ArrayType(LongType()))
     def buckets(vecs: pa.Array) -> pa.Array:
         n = len(vecs)
-        m = vecs.flatten().to_numpy(zero_copy_only=False)
-        m = m.astype(np.float64).reshape(n, dim)
+        m, ok = _vector_rows(vecs, dim)
         vals = project(m).reshape(n, n_tables, n_planes) @ pow2  # (n, T)
         offsets = pa.array(np.arange(n + 1, dtype=np.int32) * n_tables)
         return pa.ListArray.from_arrays(
-            offsets,
-            pa.array(vals.reshape(-1)),
-            mask=pa.array(~np.isfinite(m).all(axis=1)),
+            offsets, pa.array(vals.reshape(-1)), mask=pa.array(~ok)
         )
 
     return df.withColumn(out_col, buckets.asNondeterministic()(F.col(vec_col)))
@@ -350,7 +359,8 @@ def ann_topk_ivf(
             F.lit(MOD),
         )
         crows = (
-            corpus.select(F.col(id_col), F.col(vec_col), hv.alias("__hv"))
+            corpus.where(F.col(vec_col).isNotNull())
+            .select(F.col(id_col), F.col(vec_col), hv.alias("__hv"))
             .orderBy("__hv", id_col)
             .limit(n_lists)
             .collect()
@@ -363,7 +373,7 @@ def ann_topk_ivf(
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
-        feat = corpus.select(
+        feat = corpus.where(F.col(vec_col).isNotNull()).select(
             F.col(id_col),
             array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
         )
@@ -393,27 +403,32 @@ def _ivf_list_udfs(centers: np.ndarray, quant: int | None, n_probe: int):
     list ids in order, by squared Euclidean distance, computed in
     floor(v * quant) int64 fixed point when ``quant`` is given. Ties go
     to the smaller list id (argmin's first minimum, a stable argsort),
-    as in the oracle's ORDER BY dist, list_id."""
+    as in the oracle's ORDER BY dist, list_id. A NULL or non-finite
+    vector gets a NULL list id and a NULL probe array, as in
+    hyperplane_buckets_multi, so it joins no list."""
     n_lists, dim = centers.shape
     n_probe = min(n_probe, n_lists)
 
-    def dists(vecs: pa.Array) -> np.ndarray:
-        m = vecs.flatten().to_numpy(zero_copy_only=False)
-        m = m.astype(np.float64).reshape(len(vecs), dim)
+    def dists(vecs: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+        m, ok = _vector_rows(vecs, dim)
+        m[~ok] = 0.0  # masked rows: no NaN reaches the int64 cast
         if quant is not None:
             m = np.floor(m * quant).astype(np.int64)
-        return ((m[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+        d = ((m[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+        return d, ~ok
 
     @arrow_udf(IntegerType())
     def assign_list(vecs: pa.Array) -> pa.Array:
-        return pa.array(dists(vecs).argmin(axis=1).astype(np.int32))
+        d, null = dists(vecs)
+        return pa.array(d.argmin(axis=1).astype(np.int32), mask=null)
 
     @arrow_udf(ArrayType(IntegerType()))
     def probe_lists(vecs: pa.Array) -> pa.Array:
-        order = np.argsort(dists(vecs), axis=1, kind="stable")[:, :n_probe]
+        d, null = dists(vecs)
+        order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
         offsets = pa.array(np.arange(len(vecs) + 1, dtype=np.int32) * n_probe)
         flat = pa.array(order.astype(np.int32).reshape(-1))
-        return pa.ListArray.from_arrays(offsets, flat)
+        return pa.ListArray.from_arrays(offsets, flat, mask=pa.array(null))
 
     # nondeterministic for the reason given in hyperplane_buckets_multi:
     # the join's inferred isnotnull(list_id) would re-inline the UDF

@@ -158,6 +158,33 @@ def test_cosine_topk_drops_null_and_nan_embeddings(spark):
     _assert_topk(cosine_topk(df, df, k=3), want)
 
 
+def test_null_embedding_joins_nothing_on_approximate_paths(spark):
+    """A NULL embedding gets a NULL bucket array (LSH) or list id (IVF):
+    ann_topk_lsh, ann_topk_ivf(init="hash") and cosine_neardup_lsh give
+    exactly the results of the same vectors without it (the kernels used
+    to fail reshaping a batch whose flattened buffer skipped the row)."""
+    from kmertools_spark.operators import cosine_neardup_lsh
+
+    rows = [(0, [1.0, 0.0]), (1, [0.6, 0.8]), (2, None), (3, [0.0, 1.0]), (4, [1.0, 1.0])]
+    schema = "vec_id long, embedding array<double>"
+    with_null = spark.createDataFrame(rows, schema)
+    without = spark.createDataFrame([r for r in rows if r[1] is not None], schema)
+
+    def run(df):
+        return {
+            "lsh": ann_topk_lsh(df, df, dim=2, k=3, n_planes=2, planes="hash"),
+            "ivf": ann_topk_ivf(df, df, k=3, n_lists=2, n_probe=2, init="hash"),
+            "neardup": cosine_neardup_lsh(df, 2, threshold=-1.0, n_planes=2, planes="hash"),
+        }
+
+    want, got = run(without), run(with_null)
+    for path in want:
+        rows_want = sorted(want[path].collect())
+        assert rows_want and sorted(got[path].collect()) == rows_want, path
+    # probing every list makes IVF exact over the non-NULL vectors
+    _assert_topk(got["ivf"], _ref_topk(rows, rows, 3))
+
+
 def test_zero_norm_cosine_is_zero_on_every_path(spark):
     """A zero vector has cos 0.0 with everything on every cosine path
     (dot / max(|a| * |b|, 1e-300)); under ANSI mode a plain division

@@ -190,15 +190,12 @@ def test_asof_auto_plan_splits_whale(spark, tdf):
     ), plan[:3000]
 
 
-def test_asof_auto_evaluates_features_three_times(spark):
-    """Spark recomputes a mapInArrow frame once per consumer in a plan
-    (the exchange above it is not reused). With one hot key,
-    asof_join_auto evaluates the caller's features exactly 3 times: the
-    sizing pass, the window input and the carry aggregate."""
+def _counted_asof_features(spark):
+    """A one-partition mapInArrow frame of one 40-turn whale and 10
+    one-turn conversations, the accumulator counting its batches (one
+    per evaluation), and probes 30 s after every turn."""
     import pandas as pd
     from pyspark.sql import functions as F
-
-    from kmertools_spark.operators import asof_join_auto
 
     base = pd.Timestamp("2024-01-01")
     src = spark.createDataFrame(
@@ -207,6 +204,7 @@ def test_asof_auto_evaluates_features_three_times(spark):
                 "conv_id": ["whale"] * 40 + [f"c{i}" for i in range(10)],
                 "turn_idx": range(50),
                 "ts": [base + pd.Timedelta(minutes=i) for i in range(50)],
+                "text": ["unread"] * 50,
             }
         )
     ).coalesce(1)
@@ -217,14 +215,55 @@ def test_asof_auto_evaluates_features_three_times(spark):
             batches.add(1)
             yield b
 
-    feats = src.mapInArrow(count_batches, src.schema)
     probes = src.select(
         "conv_id", (F.col("ts") + F.expr("INTERVAL 30 SECONDS")).alias("probe_ts")
     )
-    rows = asof_join_auto(feats, probes, hot_threshold=10, n_buckets=4).collect()
+    return src.mapInArrow(count_batches, src.schema), batches, probes
+
+
+@pytest.mark.parametrize("hot_threshold", [10, 100], ids=["hot", "no_hot"])
+def test_asof_auto_evaluates_features_once(spark, hot_threshold):
+    """Spark recomputes a mapInArrow frame once per consumer in a plan
+    (the exchange above it is not reused). asof_join_auto pins the
+    narrowed features on disk, so the sizing pass evaluates the
+    caller's frame once and the window, the carry aggregate (one hot
+    key) or the plain as-of fallback (no hot key) read the pin."""
+    import re
+
+    from kmertools_spark.operators import asof_join_auto
+
+    feats, batches, probes = _counted_asof_features(spark)
+    res = asof_join_auto(feats, probes, hot_threshold=hot_threshold, n_buckets=4)
+    rows = res.collect()
     # each probe sits 30 s after its own turn: it picks exactly that turn
     assert sorted(r.asof_turn_idx for r in rows) == list(range(50))
-    assert batches.value == 3  # one batch per evaluation (one partition)
+    assert batches.value == 1  # one batch per evaluation (one partition)
+    plan = _plan(res)
+    assert "MapInArrow" not in plan, plan
+    assert re.search(r"Scan ExistingRDD\[[^\]]*\bts#", plan), plan
+
+
+def test_asof_auto_reads_cached_features_without_pin(spark):
+    """A cached input is already materialized: asof_join_auto reads the
+    cache in every branch instead of writing a pin of it. (The only
+    Scan ExistingRDD left is the hot keys' driver-local ranges, which
+    carry no ts column.)"""
+    import re
+
+    from kmertools_spark.operators import asof_join_auto
+
+    feats, batches, probes = _counted_asof_features(spark)
+    feats = feats.cache()
+    try:
+        feats.count()
+        res = asof_join_auto(feats, probes, hot_threshold=10, n_buckets=4)
+        assert sorted(r.asof_turn_idx for r in res.collect()) == list(range(50))
+        plan = _plan(res)
+        assert "InMemoryTableScan" in plan, plan
+        assert not re.search(r"Scan ExistingRDD\[[^\]]*\bts#", plan), plan
+        assert batches.value == 1  # the cache fill
+    finally:
+        feats.unpersist()
 
 
 def test_packing_has_no_global_window(spark):

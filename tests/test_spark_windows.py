@@ -636,6 +636,91 @@ def test_asof_auto_bucket_edges_match_window(spark, n_buckets, tolerance_ms):
         asof_join_auto(feat, probes, hot_threshold=5, n_buckets=0)
 
 
+_ASOF_RETRY_SCRIPT = r"""
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from kmertools_spark.operators import asof_join_auto
+from kmertools_spark.session import get_spark
+from kmertools_spark.sources import synth_transcripts_pdf
+
+work = sys.argv[1]
+spark = get_spark("asof-retry", master="local[2,2]", shuffle_partitions=2,
+                  extra_conf={"spark.driver.memory": "1g"})
+src = os.path.join(work, "src")
+spark.createDataFrame(synth_transcripts_pdf(n_convs=12, mean_turns=6, seed=5)) \
+    .repartition(2).write.parquet(src)
+turns = spark.read.parquet(src)
+
+
+def passthrough(df, tag=None):
+    # with a tag, passes every batch on and then fails the first task
+    # attempt of each stage that runs it (a union renumbers partitions,
+    # so "first task" stands in for "partition 0"); one marker file per
+    # injected failure
+    def gen(batches):
+        ctx = TaskContext.get()
+        yield from batches
+        if tag is None or ctx.attemptNumber() != 0:
+            return
+        try:
+            fd = os.open(os.path.join(work, f"{tag}-{ctx.stageId()}"),
+                         os.O_CREAT | os.O_EXCL)
+        except FileExistsError:
+            return
+        os.close(fd)
+        raise RuntimeError("injected first-attempt failure")
+    return df.mapInArrow(gen, df.schema)
+
+
+feats_src = turns.select("conv_id", "turn_idx", "ts", "text")
+probes_src = turns.select(
+    "conv_id", (F.col("ts") + F.expr("INTERVAL 90 SECONDS")).alias("probe_ts"))
+out = {}
+for name, ftag, ptag in (("clean", None, None), ("features", "f", None),
+                         ("probes", None, "p")):
+    res = asof_join_auto(passthrough(feats_src, ftag), passthrough(probes_src, ptag),
+                         value_cols=("turn_idx", "text"), hot_threshold=3, n_buckets=4)
+    row = res.agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64(*res.columns))).first()
+    out[name] = [row[0], row[1]]
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    out[name + "_pin"] = [[i.memSize(), i.diskSize()] for i in infos]
+out["injected"] = sorted(f.split("-")[0] for f in os.listdir(work) if "-" in f)
+spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_asof_auto_retry_gives_same_result(tmp_path):
+    """Task retries at local[2,2] (one retry allowed per task) give the
+    result of a clean run, whether the failed attempt is in the features'
+    mapInArrow while the sizing job fills the pin, or in a probes-side
+    mapInArrow of a later stage that reads the pin. The pin is on disk
+    only: no stored RDD holds a byte in memory."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo)
+    r = subprocess.run(
+        [sys.executable, "-c", _ASOF_RETRY_SCRIPT, str(tmp_path)],
+        capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path),
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads(r.stdout.strip().splitlines()[-1])
+    # the features run in one stage (the pinned sizing job), the probes
+    # in the window's and the carry's exchanges
+    assert out["injected"].count("f") == 1
+    assert out["injected"].count("p") >= 1
+    assert out["clean"][0] > 0
+    assert out["features"] == out["clean"] == out["probes"]
+    for name in ("clean", "features", "probes"):
+        pins = out[name + "_pin"]
+        assert pins and all(mem == 0 and disk > 0 for mem, disk in pins), pins
+
+
 def test_rolling_chunked_window_wider_than_chunk(spark, tdf):
     """code-review r4: a window WIDER than the chunk (n_turns - 1 >
     chunk) must replicate carry rows as many blocks ahead as the window
