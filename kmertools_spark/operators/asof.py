@@ -26,9 +26,9 @@ frame. It therefore narrows ``features`` to the columns it reads and
 pins them with a lazy DISK_ONLY ``localCheckpoint``: the sizing pass
 evaluates the caller's frame once and fills the pin, and every later
 read takes the stored blocks, so the caller's frame is evaluated once.
-The pin is skipped when the input is already materialized (only
-Project/Filter over a cached, checkpointed, local, file or range
-leaf), whose re-reads cost less than the write: such an input is read
+The pin is skipped when the caller passes a ``.cache()``d frame
+(``DataFrame.is_cached``), whose re-reads measured cheaper than the
+write (BENCH/BASELINE.md, "As-of skew routing"): such an input is read
 3 times with a hot key, 2 without. The pin holds one row of the
 narrowed columns per feature row, on executor disk only, and is
 released when the result DataFrame is garbage-collected. Like
@@ -47,18 +47,6 @@ from .skew import hot_keys
 from .timeutil import epoch_ms
 
 _EV = "__is_event"
-# optimized-plan leaves whose rows are already stored: re-reading them
-# is cheaper than writing a pin
-_STORED = {"InMemoryRelation", "LogicalRDD", "LocalRelation", "LogicalRelation", "Range"}
-
-
-def _stored(df: DataFrame) -> bool:
-    """True when ``df``'s optimized plan is only Project/Filter nodes
-    over an already-materialized leaf."""
-    node = df._jdf.queryExecution().optimizedPlan()
-    while node.nodeName() in ("Project", "Filter"):
-        node = node.children().head()
-    return node.nodeName() in _STORED
 
 
 def _union_marker(
@@ -208,20 +196,21 @@ def asof_join_auto(
     The caller's ``features`` is evaluated once: its columns ``on``,
     ``ts_col``, ``value_cols`` (and ``turn_idx`` when present) are
     pinned with a lazy DISK_ONLY localCheckpoint that the sizing pass
-    fills. An already-materialized input (Project/Filter over a cache,
-    checkpoint, local relation, file scan or range) is not pinned and is
-    read 3 times with a hot key, 2 without. The pin is one row of the
-    narrowed columns per feature row on executor disk, released when
+    fills. A ``.cache()``d input (``features.is_cached``) is not pinned
+    and is read 3 times with a hot key, 2 without. The pin is one row of
+    the narrowed columns per feature row on executor disk, released when
     the result DataFrame is garbage-collected; it does not survive
-    executor loss (a lost block fails the query). BENCH/BASELINE.md
-    holds the measured crossover (bench_skew_asof.py)."""
+    executor loss (a lost block fails the query; cache ``features``
+    first to keep recomputation on loss). BENCH/BASELINE.md holds the
+    measured crossover (bench_skew_asof.py)."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+    pin = not features.is_cached
     cols = [on, ts_col, *value_cols]
     if "turn_idx" in features.columns:
         cols.append("turn_idx")
     features = features.select(*dict.fromkeys(cols))
-    if not _stored(features):
+    if pin:
         features = features.localCheckpoint(
             eager=False, storageLevel=StorageLevel.DISK_ONLY
         )

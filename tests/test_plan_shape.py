@@ -244,8 +244,8 @@ def test_asof_auto_evaluates_features_once(spark, hot_threshold):
 
 
 def test_asof_auto_reads_cached_features_without_pin(spark):
-    """A cached input is already materialized: asof_join_auto reads the
-    cache in every branch instead of writing a pin of it. (The only
+    """A .cache()d input is read from the cache in every branch instead
+    of being written to a pin, which measured slower. (The only
     Scan ExistingRDD left is the hot keys' driver-local ranges, which
     carry no ts column.)"""
     import re
