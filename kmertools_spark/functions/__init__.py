@@ -1,6 +1,8 @@
 """Vectorized UDF / column builders — the engine's scalar-function layer
-(SURVEY §2.2/§2.10). All pandas UDFs are Arrow-batched; pure column
-builders stay inside whole-stage codegen."""
+(SURVEY §2.2/§2.10). Text kernels run as Arrow UDFs or mapInArrow: each
+batch's text column is read in place (``oracle.codec.utf8_view``) and
+results leave as Arrow arrays. Only the tokenizer keeps a pandas seam.
+Pure column builders stay inside whole-stage codegen."""
 
 from .cgr import cgr_points, cgr_points_with_error
 from .composition import (

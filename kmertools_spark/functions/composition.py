@@ -36,16 +36,18 @@ def _pos_map(k: int):
 _LOOKUP_CACHE: dict[str, "SortedCountLookup"] = {}
 
 
-def vector_array(mat: np.ndarray) -> pa.ListArray:
-    """(rows x width) float64 matrix -> Arrow list<double> array over the
-    matrix's own flat buffer, with no per-row Python object (the CGR
-    column is built the same way, cgr._points_array). Offsets are int32,
-    as Spark's ArrayType expects; a batch past 2^31 values raises instead
-    of wrapping."""
+def vector_array(mat: np.ndarray, null: np.ndarray | None = None) -> pa.ListArray:
+    """(rows x width) matrix -> Arrow list array over the matrix's own
+    flat buffer (list<double> for a float64 matrix), with no per-row
+    Python object (the CGR column is built the same way,
+    cgr._points_array). ``null`` marks rows that are NULL lists. Offsets
+    are int32, as Spark's ArrayType expects; a batch past 2^31 values
+    raises instead of wrapping."""
     n, w = mat.shape
     offsets = pa.array(np.arange(n + 1, dtype=np.int64) * w, type=pa.int32())
-    flat = np.ascontiguousarray(mat, dtype=np.float64).reshape(-1)
-    return pa.ListArray.from_arrays(offsets, pa.array(flat))
+    flat = np.ascontiguousarray(mat).reshape(-1)
+    mask = None if null is None else pa.array(null)
+    return pa.ListArray.from_arrays(offsets, pa.array(flat), mask=mask)
 
 
 def vector_header(k: int, canonical: bool = True) -> list[str]:
@@ -81,7 +83,7 @@ def composition_vector(
     def _udf(texts: pa.Array) -> pa.Array:
         pos_map, _, kcount = _pos_map(k) if canonical else (None, None, None)
         mat = composition_matrix(
-            texts.to_pylist(),
+            texts,
             k,
             canonical=canonical,
             norm=norm,
@@ -139,9 +141,7 @@ def coverage_vector(
             while len(_LOOKUP_CACHE) >= 4:  # bound worker memory
                 _LOOKUP_CACHE.pop(next(iter(_LOOKUP_CACHE)))
             _LOOKUP_CACHE[cache_key] = lk
-        mat = coverage_matrix(
-            texts.to_pylist(), k, lk, bin_size, bin_count, norm=norm
-        )
+        mat = coverage_matrix(texts, k, lk, bin_size, bin_count, norm=norm)
         return vector_array(mat)
 
     return _udf

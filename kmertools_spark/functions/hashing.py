@@ -1,23 +1,26 @@
 """Shingle-hash UDF builders: MinHash signatures, SimHash, fingerprints.
 
-Arrow-batched wrappers around the batch-vectorized kernels in
+Arrow UDFs around the batch-vectorized kernels in
 kmertools_spark.oracle.hashing — the integer constants there are
 mirrored verbatim into the DuckDB oracle SQL, so these UDFs are exactly
-reproducible in plain SQL. All hashing runs as one numpy pass over the
-concatenated bytes of each Arrow batch (no per-row Python).
+reproducible in plain SQL. Each batch's text column is read in place
+(``codec.utf8_view``) and hashed in one numpy pass; the result leaves
+as an Arrow array over the kernel's values and validity (no per-row
+Python).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from ..oracle.hashing import N_PERMS, fingerprint_batch, minhash_batch, simhash_batch
+from .composition import vector_array
 
 
 def minhash_sig(width: int = 8):
-    """pandas UDF: text -> array<long> MinHash signature (null if no shingle).
+    """Arrow UDF: text -> array<long> MinHash signature (null if no shingle).
 
     Marked non-deterministic (it is not — the kernel is a pure function;
     this is an optimizer fence): every consumer filters on the UDF
@@ -34,36 +37,38 @@ def minhash_sig(width: int = 8):
     column first (every in-repo consumer does), e.g.
     ``df.withColumn("sig", minhash_sig()(col)).groupBy("sig")``."""
 
-    @pandas_udf(ArrayType(LongType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(minhash_batch(texts.tolist(), width))
+    @arrow_udf(ArrayType(LongType()))
+    def _udf(texts: pa.Array) -> pa.Array:
+        sigs, valid = minhash_batch(texts, width)
+        return vector_array(sigs, ~valid)
+
+    return _udf.asNondeterministic()
+
+
+def _scalar_udf(kernel, width: int):
+    """Arrow UDF: text -> long, NULL where ``kernel`` reports no value."""
+
+    @arrow_udf(LongType())
+    def _udf(texts: pa.Array) -> pa.Array:
+        vals, valid = kernel(texts, width)
+        return pa.array(vals, mask=~valid)
 
     return _udf.asNondeterministic()
 
 
 def simhash_value(width: int = 8):
-    """pandas UDF: text -> long SimHash (null if no shingle).
+    """Arrow UDF: text -> long SimHash (null if no shingle).
     Non-deterministic marking: same single-evaluation fence — and the
     same project-before-grouping caller contract — as minhash_sig."""
-
-    @pandas_udf(LongType())
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(simhash_batch(texts.tolist(), width), dtype="Int64")
-
-    return _udf.asNondeterministic()
+    return _scalar_udf(simhash_batch, width)
 
 
 def doc_fingerprint(width: int = 16):
-    """pandas UDF: text -> long min-window rolling-hash fingerprint.
+    """Arrow UDF: text -> long min-window rolling-hash fingerprint.
     Non-deterministic marking: same single-evaluation fence — and the
     same project-before-grouping caller contract — as minhash_sig
     (q23 filters on the fingerprint column)."""
-
-    @pandas_udf(LongType())
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(fingerprint_batch(texts.tolist(), width), dtype="Int64")
-
-    return _udf.asNondeterministic()
+    return _scalar_udf(fingerprint_batch, width)
 
 
 def band_key_struct(bands: int, r: int, sig_len: int = N_PERMS):

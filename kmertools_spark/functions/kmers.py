@@ -1,4 +1,4 @@
-"""k-mer explosion and map-side-combined count pairs (mapInPandas).
+"""k-mer explosion and map-side-combined count pairs (mapInArrow).
 
 The UDTF analog of the reference's KmerGenerator iterator
 (kmer/src/kmer.rs:77-107 / pybindings/src/kmer.rs:15-42), Arrow-batched.
@@ -7,7 +7,7 @@ The UDTF analog of the reference's KmerGenerator iterator
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -17,6 +17,16 @@ from ..oracle.kernels import concat_codes, kmer_windows
 def _key_fields(df: DataFrame, keys: tuple[str, ...]) -> list[StructField]:
     by_name = {f.name: f for f in df.schema.fields}
     return [by_name[k] for k in keys]
+
+
+def _keyed_batch(
+    rb: pa.RecordBatch, keys: tuple[str, ...], rows: np.ndarray, values: dict
+) -> pa.RecordBatch:
+    """Output batch: the input's key columns taken at ``rows`` (Arrow
+    ``take`` — types, NULLs and 64-bit values pass through unchanged),
+    then the kernel's ``values`` columns."""
+    idx = pa.array(rows)
+    return pa.RecordBatch.from_pydict({**{kk: rb.column(kk).take(idx) for kk in keys}, **values})
 
 
 def exploded_kmers(
@@ -32,7 +42,7 @@ def exploded_kmers(
     the reference tokenizer (F1 gate, kmer/src/kmer.rs:91-99).
 
     ``cols`` selects which value columns are EMITTED: Catalyst cannot
-    prune a mapInPandas output, so a consumer needing only ``canon``
+    prune a mapInArrow output, so a consumer needing only ``canon``
     (the k>12 coverage join) would otherwise ship 24 dead bytes per
     k-mer occurrence across Arrow at the most voluminous stage of the
     scale path (code-review r5).
@@ -45,11 +55,11 @@ def exploded_kmers(
     )
 
     def gen(batches):
-        for pdf in batches:
-            codes, starts, _lens = concat_codes(pdf[text_col].tolist())
+        for rb in batches:
+            codes, starts, _lens = concat_codes(rb.column(text_col))
             pos, f, r = kmer_windows(codes, k)
             rows = np.searchsorted(starts, pos, side="right") - 1
-            out = {kk: pdf[kk].values[rows] for kk in keys}
+            out = {}
             if "pos" in cols:
                 out["pos"] = pos - starts[rows]
             if "fwd" in cols:
@@ -64,12 +74,12 @@ def exploded_kmers(
                 # (kmer_count_pairs) takes the unsigned min, silently
                 # missing the join (code-review r4)
                 out["canon"] = np.minimum(f, r).astype(np.int64)
-            yield pd.DataFrame({c: out[c] for c in (*keys, *cols)})
+            yield _keyed_batch(rb, keys, rows, {c: out[c] for c in cols})
 
-    # mapInPandas is a Catalyst black box: project explicitly so column
+    # mapInArrow is a Catalyst black box: project explicitly so column
     # pruning reaches the scan (and upstream windows over unused
     # columns are dropped entirely)
-    return df.select(*keys, text_col).mapInPandas(gen, schema)
+    return df.select(*keys, text_col).mapInArrow(gen, schema)
 
 
 def kmer_count_pairs(
@@ -97,8 +107,8 @@ def kmer_count_pairs(
     dense = 4**k <= (1 << 20)
 
     def gen(batches):
-        for pdf in batches:
-            codes, _starts, _lens = concat_codes(pdf[text_col].tolist())
+        for rb in batches:
+            codes, _starts, _lens = concat_codes(rb.column(text_col))
             _pos, f, r = kmer_windows(codes, k)
             vals = np.minimum(f, r).astype(np.int64) if canonical else f.astype(np.int64)
             if dense:
@@ -107,7 +117,7 @@ def kmer_count_pairs(
                 counts = cnt[kmers]
             else:
                 kmers, counts = np.unique(vals, return_counts=True)
-            yield pd.DataFrame({"kmer": kmers, "cnt": counts.astype(np.int64)})
+            yield pa.RecordBatch.from_pydict({"kmer": kmers, "cnt": counts.astype(np.int64)})
 
     # explicit projection: only the text column crosses the Arrow boundary
-    return df.select(text_col).mapInPandas(gen, schema)
+    return df.select(text_col).mapInArrow(gen, schema)

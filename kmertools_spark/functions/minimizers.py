@@ -1,4 +1,4 @@
-"""Minimizer explosion (mapInPandas) — W1/W2 of the survey.
+"""Minimizer explosion (mapInArrow) — W1/W2 of the survey.
 
 Emits one row per minimizer *run* (maximal span sharing one window
 minimum), matching kmer/src/minimiser.rs:58-176; w=0 selects the
@@ -8,13 +8,11 @@ fully vectorized batch kernel.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..oracle.kernels import minimiser_runs_batch
-from .kmers import _key_fields
+from .kmers import _key_fields, _keyed_batch
 
 
 def exploded_minimisers(
@@ -39,18 +37,15 @@ def exploded_minimisers(
     )
 
     def gen(batches):
-        for pdf in batches:
-            texts = pdf[text_col].tolist()
+        for rb in batches:
             # minimiser_runs_batch owns the w==0 dispatch (kernels.py
             # delegates to whole_record_minimisers itself) — one code
             # path to keep in sync (code-review r4)
-            rows, vals, ss, ee = minimiser_runs_batch(texts, w, m)
-            out = {kk: pdf[kk].values[rows] for kk in keys}
-            out["mmer"] = vals
-            out["win_start"] = ss
-            out["win_end"] = ee
-            yield pd.DataFrame(out)
+            rows, vals, ss, ee = minimiser_runs_batch(rb.column(text_col), w, m)
+            yield _keyed_batch(
+                rb, keys, rows, {"mmer": vals, "win_start": ss, "win_end": ee}
+            )
 
-    # explicit projection so pruning reaches the scan (mapInPandas is a
+    # explicit projection so pruning reaches the scan (mapInArrow is a
     # Catalyst black box)
-    return df.select(*keys, text_col).mapInPandas(gen, schema)
+    return df.select(*keys, text_col).mapInArrow(gen, schema)

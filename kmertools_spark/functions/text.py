@@ -12,9 +12,13 @@ is value-identical to the kernel by its exactness contract).
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import DoubleType
+
+from ..oracle.kernels import repetition_batch
 
 # per-language stopword marker sets for the n-gram/stopword language-ID
 # heuristic (padded with spaces so they match whole words). Data-driven:
@@ -167,13 +171,9 @@ def repetition_ratio(col: Column, n: int = 4) -> Column:
     (guide §4.4 — same fence, and same project-before-grouping caller
     contract, as functions/hashing: the raw column cannot be a
     groupBy/orderBy/join key)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
 
-    from ..oracle.kernels import repetition_batch
-
-    @pandas_udf(DoubleType())
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series(repetition_batch(texts.tolist(), n), dtype="Float64")
+    @arrow_udf(DoubleType())
+    def _udf(texts: pa.Array) -> pa.Array:
+        return pa.array(repetition_batch(texts, n), pa.float64())
 
     return _udf.asNondeterministic()(col)

@@ -211,7 +211,7 @@ def _rolling_stream(
             col = partial(_column_numpy, rb)
             conv = col("conv_id")
             counts = composition_matrix(
-                rb.column("text").to_pylist(), k, canonical=True, norm=False,
+                rb.column("text"), k, canonical=True, norm=False,
                 pos_map=pos_map, kcount=kcount,
             )
             brk = conv[1:] != conv[:-1]

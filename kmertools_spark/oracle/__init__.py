@@ -3,12 +3,12 @@
 
 from .codec import (
     SEQ_NT4,
-    encode_bytes,
     kmer_pos_maps,
     kmer_to_numeric,
     numeric_to_kmer,
     rev_comp,
     rev_comp_scalar,
+    utf8_view,
 )
 from .kernels import (
     MINIMISER_SENTINEL,
@@ -24,7 +24,7 @@ from .kernels import (
 
 __all__ = [
     "SEQ_NT4",
-    "encode_bytes",
+    "utf8_view",
     "kmer_pos_maps",
     "kmer_to_numeric",
     "numeric_to_kmer",

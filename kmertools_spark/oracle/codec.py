@@ -13,10 +13,11 @@ code 4) and splits token runs.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 __all__ = [
     "SEQ_NT4",
-    "encode_bytes",
+    "utf8_view",
     "rev_comp",
     "rev_comp_scalar",
     "kmer_pos_maps",
@@ -43,9 +44,36 @@ _U2 = np.uint64(2)
 _U3 = np.uint64(3)
 
 
-def encode_bytes(data: bytes) -> np.ndarray:
-    """Map raw bytes to 2-bit codes (uint8; 4 == OOV)."""
-    return SEQ_NT4[np.frombuffer(data, dtype=np.uint8)]
+def utf8_view(texts) -> tuple[np.ndarray, np.ndarray]:
+    """The UTF-8 bytes of a batch of texts: ``(data, offsets)``.
+
+    Row *i* is ``data[offsets[i]:offsets[i + 1]]``; ``data`` is uint8,
+    ``offsets`` int64 with ``offsets[0] == 0``. This is the one way text
+    enters a batch kernel. An Arrow ``string`` / ``large_string`` array is
+    read in place from its offset and data buffers (no per-row Python
+    object); any other sequence is converted once to ``large_string``.
+    A NULL reads as '' — also when its slot spans bytes, which Arrow
+    allows, so those bytes are dropped.
+    """
+    if not isinstance(texts, pa.Array):
+        texts = pa.array(texts, pa.large_string())
+    n = len(texts)
+    if n == 0:  # an empty array may carry empty or no buffers
+        return np.empty(0, np.uint8), np.zeros(1, np.int64)
+    _, obuf, dbuf = texts.buffers()
+    odt = np.int64 if pa.types.is_large_string(texts.type) else np.int32
+    offsets = np.frombuffer(obuf, odt)[texts.offset : texts.offset + n + 1].astype(np.int64)
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    data = np.frombuffer(dbuf, dtype=np.uint8)[lo:hi] if hi > lo else np.empty(0, np.uint8)
+    offsets -= lo
+    if texts.null_count:
+        lens = np.diff(offsets)
+        null = texts.is_null().to_numpy(zero_copy_only=False)
+        if lens[null].any():
+            data = data[np.repeat(~null, lens)]
+            lens[null] = 0
+            np.cumsum(lens, out=offsets[1:])
+    return data, offsets
 
 
 def rev_comp(kmers: np.ndarray, k: int) -> np.ndarray:

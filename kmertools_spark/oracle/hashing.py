@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .codec import utf8_view
+
 MOD = 1_000_000_007
 BASE = 131
 
@@ -130,37 +132,30 @@ _POOL = _Pool()
 
 
 def batch_windows(
-    bs: list[bytes], width: int, mod: int | None, key: str
+    data: np.ndarray, offsets: np.ndarray, width: int, mod: int | None, key: str
 ) -> tuple[np.ndarray, np.ndarray]:
     """(row_idx, value) for every width-byte window lying inside one row
-    of ``bs``. ``mod`` set: value is the polynomial hash (BASE, reduced
-    mod ``mod``); ``mod`` None: the window's bytes packed exactly in
-    base 256 (injective; needs width <= 7). ``key`` prefixes this
-    caller's scratch buffers in the pool.
+    of a ``utf8_view`` batch ``(data, offsets)``. ``mod`` set: value is
+    the polynomial hash (BASE, reduced mod ``mod``); ``mod`` None: the
+    window's bytes packed exactly in base 256 (injective; needs width
+    <= 7). ``key`` prefixes this caller's scratch buffers in the pool.
 
-    One numpy pass over the separator-joined bytes of the batch; windows
-    spanning two rows are masked out via the row-end offset math. All
-    scratch comes from the process-level pool (out=/take — zero
-    steady-state allocations beyond the returned copies).
+    One numpy pass over the batch's bytes; a window is kept iff it ends
+    inside its own row (the row end is the next offset). All scratch
+    comes from the process-level pool (out=/take — zero steady-state
+    allocations beyond the returned copies).
     """
-    lens = np.fromiter((len(b) for b in bs), dtype=np.int64, count=len(bs))
-    joined = b"\x00".join(bs)
-    if len(joined) < width:
+    n_win = data.size - width + 1
+    if n_win <= 0:
         e = np.empty(0, dtype=np.int64)
         return e, e.copy()
-    starts = np.zeros(len(bs), dtype=np.int64)
-    if len(bs) > 1:
-        np.cumsum(lens[:-1] + 1, out=starts[1:])
-    data = np.frombuffer(joined, dtype=np.uint8)
     # chunked matmul: a single .astype of the full window view costs
     # width*8 bytes of RAM per input byte (a 10 MB batch at width=16 is
     # a 1.3 GB dense matrix in every python worker — code-review r5);
     # chunking bounds the dense copy to ~16 MB (pooled, so it is paid
     # once per worker, not once per batch) while keeping the BLAS-shaped
-    # inner loop. A separator byte inside a window is harmless: such
-    # windows are masked below.
+    # inner loop. Windows spanning two rows are masked below.
     wview = np.lib.stride_tricks.sliding_window_view(data, width)
-    n_win = wview.shape[0]
     if mod is None:
         pv = (256 ** np.arange(width - 1, -1, -1)).astype(np.int64)
     else:
@@ -176,47 +171,51 @@ def batch_windows(
         if mod is not None:
             np.mod(h[s : s + m], mod, out=h[s : s + m])
     p = _POOL.positions(n_win)
-    rows = np.searchsorted(starts, p, side="right")
-    rows -= 1
+    # searchsorted 'right' lands on the row's END offset (empty rows
+    # share an offset with the next row and are skipped)
+    rows = np.searchsorted(offsets, p, side="right")
     # valid window <=> it ends inside its own row: p + width <= row end
     end = _POOL.get(f"{key}_end", n_win, np.int64)
-    np.take(starts, rows, out=end)
-    t2 = _POOL.get(f"{key}_t2", n_win, np.int64)
-    np.take(lens, rows, out=t2)
-    np.add(end, t2, out=end)
+    np.take(offsets, rows, out=end)
     end -= width
+    rows -= 1
     ok = _POOL.get(f"{key}_ok", n_win, np.bool_)
     np.less_equal(p, end, out=ok)
     return rows[ok], h[ok]
 
 
-def batch_shingle_hashes(
-    texts: list[str | None], width: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """(row_idx, hash) for every width-char window of every text
+def batch_shingle_hashes(texts, width: int) -> tuple[np.ndarray, np.ndarray]:
+    """(row_idx, hash) for every width-byte window of every text
     (``shingle_hashes`` over a whole batch at once)."""
-    bs = [t.encode("utf-8") if t else b"" for t in texts]
-    return batch_windows(bs, width, MOD, "sh")
+    return batch_windows(*utf8_view(texts), width, MOD, "sh")
 
 
 def _row_groups(rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """rows is sorted; returns (unique_rows, group_start_indices).
-    Diff-based (the old np.unique re-SORTED the already-sorted array
-    every batch)."""
+    """rows is sorted; returns (unique_rows, group_start_indices), both
+    empty for no rows. Diff-based (the old np.unique re-SORTED the
+    already-sorted array every batch)."""
     n = rows.size
     mask = _POOL.get("rg_mask", n, np.bool_)
-    mask[0] = True
+    mask[:1] = True
     np.not_equal(rows[1:], rows[:-1], out=mask[1:])
     gstart = np.flatnonzero(mask)
     return rows[gstart], gstart
 
 
-def minhash_batch(texts: list[str | None], width: int = 8) -> list[list[int] | None]:
-    """MinHash signatures for a batch; None for rows with no shingle."""
+def _per_row(n: int, uniq: np.ndarray, vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Scatter per-group values to ``n`` rows: (values, validity). Rows
+    with no shingle are invalid and hold 0."""
+    out = np.zeros((n,) + vals.shape[1:], dtype=np.int64)
+    out[uniq] = vals
+    valid = np.zeros(n, dtype=bool)
+    valid[uniq] = True
+    return out, valid
+
+
+def minhash_batch(texts, width: int = 8) -> tuple[np.ndarray, np.ndarray]:
+    """MinHash signatures for a batch: an (n, N_PERMS) int64 matrix and
+    the validity of each row (False where the row has no shingle)."""
     rows, h = batch_shingle_hashes(texts, width)
-    out: list[list[int] | None] = [None] * len(texts)
-    if h.size == 0:
-        return out
     uniq, gstart = _row_groups(rows)
     sigs = np.empty((N_PERMS, uniq.size), dtype=np.int64)
     tmp = _POOL.get("mh_tmp", h.size, np.int64)
@@ -226,20 +225,14 @@ def minhash_batch(texts: list[str | None], width: int = 8) -> list[list[int] | N
         tmp += int(PERM_B[i])
         tmp %= MOD
         np.minimum.reduceat(tmp, gstart, out=sigs[i])
-    cols = sigs.T.tolist()  # C-speed conversion (no per-element int())
-    for j, r in enumerate(uniq.tolist()):
-        out[r] = cols[j]
-    return out
+    return _per_row(len(texts), uniq, sigs.T)
 
 
 def simhash_batch(
-    texts: list[str | None], width: int = 8, bits: int = SIMHASH_BITS
-) -> list[int | None]:
-    """SimHash values for a batch; None for rows with no shingle."""
+    texts, width: int = 8, bits: int = SIMHASH_BITS
+) -> tuple[np.ndarray, np.ndarray]:
+    """SimHash values for a batch, with validity (False: no shingle)."""
     rows, h = batch_shingle_hashes(texts, width)
-    out: list[int | None] = [None] * len(texts)
-    if h.size == 0:
-        return out
     uniq, gstart = _row_groups(rows)
     vals = np.zeros(uniq.size, dtype=np.int64)
     tmp = _POOL.get("sim_tmp", h.size, np.int64)
@@ -251,24 +244,15 @@ def simhash_batch(
         tmp -= 1
         w = np.add.reduceat(tmp, gstart)
         vals |= (w > 0).astype(np.int64) << b
-    vlist = vals.tolist()
-    for j, r in enumerate(uniq.tolist()):
-        out[r] = vlist[j]
-    return out
+    return _per_row(len(texts), uniq, vals)
 
 
-def fingerprint_batch(texts: list[str | None], width: int = 16) -> list[int | None]:
-    """Min-window rolling-hash fingerprints; None for short rows."""
+def fingerprint_batch(texts, width: int = 16) -> tuple[np.ndarray, np.ndarray]:
+    """Min-window rolling-hash fingerprints, with validity (False: the
+    row is shorter than ``width`` bytes)."""
     rows, h = batch_shingle_hashes(texts, width)
-    out: list[int | None] = [None] * len(texts)
-    if h.size == 0:
-        return out
     uniq, gstart = _row_groups(rows)
-    mins = np.minimum.reduceat(h, gstart)
-    mlist = mins.tolist()
-    for j, r in enumerate(uniq.tolist()):
-        out[r] = mlist[j]
-    return out
+    return _per_row(len(texts), uniq, np.minimum.reduceat(h, gstart))
 
 
 def sql_literals() -> dict[str, str]:

@@ -1,9 +1,12 @@
 """Vectorized numpy kernels over batches of texts.
 
 These are the compute kernels shared by the numpy oracle (ground truth
-for pytest) and the Spark pandas/Arrow UDFs (kmertools_spark.functions).
-All kernels are batch-vectorized: one numpy pass over the concatenated
-bytes of the whole Arrow batch — no per-row Python in the hot path.
+for pytest) and the Spark Arrow UDFs / mapInArrow generators
+(kmertools_spark.functions). All kernels are batch-vectorized: a batch
+of texts enters through ``codec.utf8_view``, which reads an Arrow string
+column's data and offset buffers in place (a Python list is converted
+once), and one numpy pass runs over those bytes — no per-row Python
+object in the hot path.
 
 Semantics re-derived from the reference (see per-function citations):
   - rolling k-mer tokenizer with OOV run-splitting: kmer/src/kmer.rs:77-107
@@ -16,11 +19,9 @@ Semantics re-derived from the reference (see per-function citations):
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
-
 import numpy as np
 
-from .codec import SEQ_NT4, kmer_pos_maps
+from .codec import SEQ_NT4, kmer_pos_maps, utf8_view
 from .hashing import _Pool, batch_windows
 
 # process-level scratch pool (see hashing._Pool: fresh numpy allocations
@@ -51,24 +52,18 @@ __all__ = [
 MINIMISER_SENTINEL = -1
 
 
-def concat_codes(
-    texts: Sequence[str | None],
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Encode a batch of texts into one code array.
+def concat_codes(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Encode a batch of texts (``utf8_view``) into one code array.
 
-    Returns ``(codes, starts, lens)``: texts are joined with a 0xFF
-    separator byte (OOV, code 4) so that no k-mer window can span two
-    rows; ``starts[i]``/``lens[i]`` locate row *i* inside ``codes``.
-    None is treated as the empty string.
+    Returns ``(codes, starts, lens)``: rows are separated by one OOV
+    code (4) so that no k-mer window can span two rows;
+    ``starts[i]``/``lens[i]`` locate row *i* inside ``codes``. None is
+    treated as the empty string.
     """
-    bs = [t.encode("utf-8") if t else b"" for t in texts]
-    lens = np.fromiter((len(b) for b in bs), dtype=np.int64, count=len(bs))
-    joined = b"\xff".join(bs)
-    codes = SEQ_NT4[np.frombuffer(joined, dtype=np.uint8)] if joined else np.empty(0, np.uint8)
-    starts = np.zeros(len(bs), dtype=np.int64)
-    if len(bs) > 1:
-        np.cumsum(lens[:-1] + 1, out=starts[1:])
-    return codes, starts, lens
+    data, offsets = utf8_view(texts)
+    codes = np.insert(SEQ_NT4[data], offsets[1:-1], 4)
+    starts = offsets[:-1] + np.arange(offsets.size - 1)
+    return codes, starts, np.diff(offsets)
 
 
 def kmer_windows(
@@ -121,7 +116,7 @@ def kmer_windows(
 
 
 def composition_matrix(
-    texts: Sequence[str | None],
+    texts,
     k: int,
     canonical: bool = True,
     norm: bool = True,
@@ -194,7 +189,7 @@ class SortedCountLookup:
 
 
 def coverage_matrix(
-    texts: Sequence[str | None],
+    texts,
     k: int,
     lookup: SortedCountLookup,
     bin_size: int,
@@ -322,7 +317,7 @@ def minimiser_runs(text: str | bytes, w: int, m: int) -> list[tuple[int, int, in
 
 
 def whole_record_minimisers(
-    texts: Sequence[str | None], m: int
+    texts, m: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Batch w=0 (whole-record window) minimizers, fully vectorized.
 
@@ -339,10 +334,15 @@ def whole_record_minimisers(
     """
     nrows = len(texts)
     codes, starts, lens = concat_codes(texts)
-    bad = codes >= 4
-    badc = np.zeros(codes.size + 1, dtype=np.int64)
-    np.cumsum(bad, out=badc[1:])
-    row_oov = badc[starts + lens] - badc[starts]
+    # last OOV char per row, -1 if none (the separators between rows sit
+    # at local offset == lens[row] and are excluded)
+    bad_pos = np.flatnonzero(codes >= 4)
+    brow = np.searchsorted(starts, bad_pos, side="right") - 1
+    local = bad_pos - starts[brow]
+    inside = local < lens[brow]
+    last_bad = np.full(nrows, -1, dtype=np.int64)
+    np.maximum.at(last_bad, brow[inside], local[inside])
+    row_oov = last_bad >= 0
 
     out_rows: list[np.ndarray] = []
     out_vals: list[np.ndarray] = []
@@ -354,7 +354,7 @@ def whole_record_minimisers(
     if pos.size:
         rows = np.searchsorted(starts, pos, side="right") - 1
         canon = np.minimum(f, r).astype(np.int64)
-        clean_mask = (row_oov[rows] == 0) & (lens[rows] >= m)
+        clean_mask = ~row_oov[rows] & (lens[rows] >= m)
         crows = rows[clean_mask]
         cvals = canon[clean_mask]
         if crows.size:
@@ -366,18 +366,9 @@ def whole_record_minimisers(
             out_e.append(lens[uniq])
 
     # OOV rows: sentinel for a trailing valid run of >= m chars
-    oov_rows = np.flatnonzero((row_oov > 0) & (lens >= m))
+    oov_rows = np.flatnonzero(row_oov & (lens >= m))
     if oov_rows.size:
-        last_bad_local = np.full(nrows, -1, dtype=np.int64)
-        bad_pos = np.flatnonzero(bad)
-        if bad_pos.size:
-            brow = np.searchsorted(starts, bad_pos, side="right") - 1
-            # keep only OOV inside real rows (separators sit between rows
-            # at offset == lens[brow], exclude them)
-            local = bad_pos - starts[brow]
-            inside = local < lens[brow]
-            np.maximum.at(last_bad_local, brow[inside], local[inside])
-        tail_start = last_bad_local[oov_rows] + 1
+        tail_start = last_bad[oov_rows] + 1
         tail_len = lens[oov_rows] - tail_start
         emit = tail_len >= m
         er = oov_rows[emit]
@@ -432,7 +423,7 @@ def kmer_minimiser_runs(
 
 
 def minimiser_runs_batch(
-    texts: Iterable[str | None], w: int, m: int
+    texts, w: int, m: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Batch minimizer runs: (row_idx, mmer, start, end) int64 arrays.
 
@@ -443,10 +434,9 @@ def minimiser_runs_batch(
     ``minimiser_runs(t, w, m)`` per row (property-tested), emitted in
     (row, win_start) order — the per-text emission order.
     """
-    texts = list(texts)
     e = np.empty(0, np.int64)
     empty = (e, e.copy(), e.copy(), e.copy())
-    if not texts:
+    if len(texts) == 0:
         return empty
     if w == 0:
         # whole-record window (per-row w_eff = len): dedicated kernel
@@ -564,7 +554,15 @@ def _round6_half_up(x: float) -> float:
     return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
 
 
-def repetition_batch(texts: Sequence[str | None], n: int) -> list[float | None]:
+def _rows_hit(offsets: np.ndarray, hit: np.ndarray) -> np.ndarray:
+    """Per-row flag of a ``utf8_view`` batch: True where any byte of the
+    row is set in ``hit`` (a byte-aligned bool mask)."""
+    rows = np.zeros(offsets.size - 1, dtype=bool)
+    rows[np.searchsorted(offsets, np.flatnonzero(hit), side="right") - 1] = True
+    return rows
+
+
+def repetition_batch(texts, n: int) -> list[float | None]:
     """distinct n-grams / total n-grams per row, rounded HALF_UP to 6 dp;
     None where the row has no full n-gram (total <= 0).
 
@@ -575,49 +573,43 @@ def repetition_batch(texts: Sequence[str | None], n: int) -> list[float | None]:
     kernel. ASCII rows (the oracle contract corpus) take the vectorized
     path: n bytes pack EXACTLY into an int64 gram value (no hash, no
     collisions), one global sort yields per-row distinct counts.
-    Non-ASCII rows (and n outside [1, 6]) fall back to a python
-    set-of-slices twin, which is char-exact for any input.
+    Non-ASCII rows (and n outside [1, 6]) are decoded and fall back to
+    a python set-of-slices twin, which is char-exact for any input.
     """
-    out: list[float | None] = [None] * len(texts)
-    ascii_idx: list[int] = []
-    bs: list[bytes] = []
-    for i, t in enumerate(texts):
-        t = t or ""
-        if 1 <= n <= 6 and t.isascii():
-            ascii_idx.append(i)
-            bs.append(t.encode())
-        else:
-            total = len(t) - n + 1
-            if total > 0:
-                distinct = len({t[j : j + n] for j in range(total)})
-                out[i] = _round6_half_up(distinct / total)
-    if not ascii_idx:
+    data, offsets = utf8_view(texts)
+    nrows = offsets.size - 1
+    out: list[float | None] = [None] * nrows
+    fast = 1 <= n <= 6
+    slow = _rows_hit(offsets, data >= 0x80) if fast else np.ones(nrows, dtype=bool)
+    for i in np.flatnonzero(slow).tolist():
+        t = data[offsets[i] : offsets[i + 1]].tobytes().decode("utf-8")
+        total = len(t) - n + 1
+        if total > 0:
+            out[i] = _round6_half_up(len({t[j : j + n] for j in range(total)}) / total)
+    if not fast:
         return out
-    lens_all = np.fromiter((len(b) for b in bs), dtype=np.int64, count=len(bs))
-    totals = lens_all - (n - 1)
-    distinct_all = np.zeros(len(bs), dtype=np.int64)
+    totals = np.diff(offsets) - (n - 1)
+    distinct = np.zeros(nrows, dtype=np.int64)
     # (row, gram) packs into ONE int64 key: gram < 256^n, so the local
     # row index must stay below (2^63-1) // 256^n — 32767 rows at n=6.
     # Rows beyond that (oversized Arrow batches via get_spark's
     # arrow_batch knob) are processed in independent row-chunks; the
     # default 4096 batch is a single chunk. Without the chunking,
     # row*K wraps negative at >= 32768 rows and bincount raises
-    # (code-review r7).
+    # (code-review r7). Non-ASCII rows are counted too, then ignored.
     K = np.int64(256) ** n
     max_rows = int((2**63 - 1) // int(K))
-    for r0 in range(0, len(bs), max_rows):
-        cb = bs[r0 : r0 + max_rows]
+    for r0 in range(0, nrows, max_rows):
+        o = offsets[r0 : r0 + max_rows + 1]
         # exact base-256 gram values (max 2^48 at n=6)
-        keys, h = batch_windows(cb, n, None, "rp")
+        keys, h = batch_windows(data[o[0] : o[-1]], o - o[0], n, None, "rp")
         keys *= K
         keys += h
         uk = np.unique(keys)
-        distinct_all[r0 : r0 + len(cb)] = np.bincount(uk // K, minlength=len(cb))
-    d_list = distinct_all.tolist()
-    t_list = totals.tolist()
-    for j, i in enumerate(ascii_idx):
-        if t_list[j] > 0:
-            out[i] = _round6_half_up(d_list[j] / t_list[j])
+        distinct[r0 : r0 + o.size - 1] = np.bincount(uk // K, minlength=o.size - 1)
+    d_list, t_list = distinct.tolist(), totals.tolist()
+    for i in np.flatnonzero(~slow & (totals > 0)).tolist():
+        out[i] = _round6_half_up(d_list[i] / t_list[i])
     return out
 
 
@@ -651,7 +643,7 @@ def cgr_trajectory(text: str, vecsize: float = 1.0) -> np.ndarray | None:
     return out
 
 
-def _cgr_dense_group(codes, lens, grp, bmax, vecsize, outs) -> None:
+def _cgr_dense_group(codes, starts, lens, grp, bmax, vecsize, outs) -> None:
     """Padded across-row recurrence for one length bucket: every row in
     ``grp`` has bmax/2 < len <= bmax, so padding waste is bounded 2x.
 
@@ -666,7 +658,7 @@ def _cgr_dense_group(codes, lens, grp, bmax, vecsize, outs) -> None:
     mat = _POOL.get("cgr_mat", g * bmax, np.uint8).reshape(g, bmax)
     mat.fill(0)
     for j, i in enumerate(grp):
-        mat[j, : lens[i]] = codes[i]
+        mat[j, : lens[i]] = codes[starts[i] : starts[i] + lens[i]]
     cxT = _POOL.get("cgr_cx", bmax * g, np.float64).reshape(bmax, g)
     cyT = _POOL.get("cgr_cy", bmax * g, np.float64).reshape(bmax, g)
     np.take(_CGR_X, mat.T, out=cxT)
@@ -695,7 +687,7 @@ def _cgr_dense_group(codes, lens, grp, bmax, vecsize, outs) -> None:
         outs[i][:, 1] = trailT_y[:L, j]
 
 
-def cgr_batch(texts: Sequence[str | None], vecsize: float = 1.0) -> list[np.ndarray | None]:
+def cgr_batch(texts, vecsize: float = 1.0) -> list[np.ndarray | None]:
     """Batch CGR: the sequential recurrence vectorized ACROSS rows.
 
     One numpy step per character *position* over a geometric length
@@ -706,15 +698,14 @@ def cgr_batch(texts: Sequence[str | None], vecsize: float = 1.0) -> list[np.ndar
     FP op order per row to the reference loop (bit-parity goldens +
     the q29 hash gate hold); rows with OOV characters yield None.
     """
-    n = len(texts)
-    enc = [(t or "").encode("utf-8") for t in texts]
-    codes = [SEQ_NT4[np.frombuffer(b, dtype=np.uint8)] if b else np.empty(0, np.uint8) for b in enc]
-    ok = np.array([not (c >= 4).any() for c in codes])
-    lens = np.array([c.size if o else 0 for c, o in zip(codes, ok)])
+    data, offsets = utf8_view(texts)
+    codes = SEQ_NT4[data]
+    ok = ~_rows_hit(offsets, codes >= 4)
+    lens = np.where(ok, np.diff(offsets), 0)
     outs: list[np.ndarray | None] = [
-        np.empty((int(L), 2)) if o else None for L, o in zip(lens, ok)
+        np.empty((L, 2)) if o else None for L, o in zip(lens.tolist(), ok.tolist())
     ]
-    if n == 0 or int(lens.max()) == 0:
+    if lens.size == 0 or int(lens.max()) == 0:
         return outs
     live = np.nonzero(lens > 0)[0]
     order = live[np.argsort(-lens[live], kind="stable")]  # longest first
@@ -725,6 +716,6 @@ def cgr_batch(texts: Sequence[str | None], vecsize: float = 1.0) -> list[np.ndar
         end = start
         while end < order.size and lens[order[end]] > lo:
             end += 1
-        _cgr_dense_group(codes, lens, order[start:end], bmax, vecsize, outs)
+        _cgr_dense_group(codes, offsets, lens, order[start:end], bmax, vecsize, outs)
         start = end
     return outs

@@ -416,15 +416,18 @@ def test_lsh_bucket_pairs_one_window_one_exchange(spark, path):
         ("neardup_capped", "buckets", 1),
         ("ann_lsh", "buckets", 2),
         ("ann_ivf", "assign_list", 1),
+        ("minhash_lsh", "_udf", 1),
+        ("prep_filter", "_udf", 1),
     ],
 )
 def test_vector_udfs_evaluated_once_per_read(spark, path, udf, reads):
-    """The bucket / list-id Arrow UDFs run once per read of the vectors.
-    A consumer's inferred filter (posexplode's size(buckets) > 0, a join's
-    isnotnull on the key) must not be pushed below the projection with the
-    UDF re-inlined, which stacks a second ArrowEvalPython over the same
-    rows. Counted in the final AQE plan (the uncapped self-join reuses
-    its banded exchange: one read)."""
+    """The bucket / list-id / MinHash / repetition Arrow UDFs run once
+    per read of their input. A consumer's inferred filter (posexplode's
+    size(buckets) > 0, a join's isnotnull on the key, the signature's
+    isNotNull, a threshold on the ratio) must not be pushed below the
+    projection with the UDF re-inlined, which stacks a second
+    ArrowEvalPython over the same rows. Counted in the final AQE plan
+    (the uncapped self-join reuses its banded exchange: one read)."""
     import re
 
     import numpy as np
@@ -433,6 +436,9 @@ def test_vector_udfs_evaluated_once_per_read(spark, path, udf, reads):
         ann_topk_ivf,
         ann_topk_lsh,
         cosine_neardup_lsh,
+        lsh_candidate_pairs,
+        minhash_signatures,
+        prep_filter,
     )
 
     emb = spark.createDataFrame(
@@ -440,6 +446,10 @@ def test_vector_udfs_evaluated_once_per_read(spark, path, udf, reads):
         "vec_id long, embedding array<double>",
     )
     q = emb.where("vec_id < 3")
+    docs = spark.createDataFrame(
+        [(i, f"document {i % 5} text body of the and words") for i in range(20)],
+        "doc_id long, text string",
+    )
     df = {
         "neardup": lambda: cosine_neardup_lsh(emb, 4, threshold=-1.0, planes="hash"),
         "neardup_capped": lambda: cosine_neardup_lsh(
@@ -447,6 +457,8 @@ def test_vector_udfs_evaluated_once_per_read(spark, path, udf, reads):
         ),
         "ann_lsh": lambda: ann_topk_lsh(emb, q, dim=4, planes="hash"),
         "ann_ivf": lambda: ann_topk_ivf(emb, q, n_lists=3, init="hash"),
+        "minhash_lsh": lambda: lsh_candidate_pairs(minhash_signatures(docs)),
+        "prep_filter": lambda: prep_filter(docs, min_quality=0.0, min_tokens=1),
     }[path]()
     assert df.collect()
     final = _plan(df).split("== Initial Plan ==")[0]
